@@ -113,10 +113,18 @@ def main() -> None:
     timings, minima, all_runs, load = samples[choose_sample(
         [s[3] for s in samples]
     )]
-    total = round(sum(v for v in timings.values() if v >= 0), 4)
-    total_min = round(sum(v for v in minima.values() if v >= 0), 4)
+    total, total_min = total_of(timings), total_of(minima)
     extra = {"samples": len(samples)} if len(samples) > 1 else None
     emit_result(timings, total, total_min, sf, all_runs, load, extra)
+
+
+def total_of(values: dict) -> float | None:
+    """Sum of the per-query seconds, or None when any query failed: a
+    failure is stored as -1.0, and a sum that skipped it would read as a
+    saving."""
+    if any(v < 0 for v in values.values()):
+        return None
+    return round(sum(values.values()), 4)
 
 
 #: 1-min load average above which a finished bench pass is considered
@@ -195,7 +203,7 @@ def timed_pass(spark, qs, sf_dir, run):
 
 
 def render_json_line(
-    timings: dict, total: float, total_min: float, sf,
+    timings: dict, total: float | None, total_min: float | None, sf,
     load: list | None = None, budget: int = 1900,
     extra_fields: dict | None = None,
 ) -> str:
@@ -207,6 +215,7 @@ def render_json_line(
     driver's ~2000-char stdout tail no matter how the registry grows."""
     short = {n.split("_", 1)[0]: v for n, v in timings.items()}
     assert len(short) == len(timings), "registry prefixes must stay unique"
+    failed = sum(v < 0 for v in timings.values())  # stored as -1.0
 
     def emit(
         q: dict, extra: dict | None = None, with_excluded: bool = True
@@ -219,6 +228,7 @@ def render_json_line(
             "value_min": total_min,
             "queries": q,
             "sf": float(sf),
+            "failed": failed,
         }
         if with_excluded and BENCH_EXCLUDE:
             # correctness-only baselines the bench deliberately skips

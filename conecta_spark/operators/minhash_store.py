@@ -551,8 +551,8 @@ def stream_mine_and_append(
     pass ``trigger={"processingTime": "..."}`` for a continuous run over
     a growing directory (the 100 TB shape) -- the sink body is
     trigger-agnostic and the call then RETURNS the live StreamingQuery
-    for the caller to stop (proven by stream_store_rung.py's triggered
-    block).
+    for the caller to stop (measured in SF10_RUNG.json's
+    ``stream_store_triggered_500k`` block).
 
     Idempotency rides on the streaming epoch scoped to the checkpoint
     lineage (:func:`stream_batch_id`): a micro-batch replayed after a

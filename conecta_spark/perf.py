@@ -2,9 +2,9 @@
 conecta-python __init__.py:12-43).
 
 The reference exposes wall-clock checkpoints and a peak-memory gauge around
-the native load; the Spark analog is (a) a checkpoint timer for driver-side
-phases and (b) executor metrics scraped from the Spark status API after an
-action.  ``set_debug_log`` mirrors the reference's env-var switch.
+the native load; the Spark analog here is the checkpoint timer for
+driver-side phases (no peak-memory gauge).  ``set_debug_log`` mirrors the
+reference's env-var switch.
 """
 
 from __future__ import annotations
@@ -52,17 +52,3 @@ def timed(label: str = "load"):
         yield log
     finally:
         log.checkpoint(label)
-
-
-def executor_peak_memory(spark) -> int:
-    """Peak executor memory (bytes) from the status tracker -- the Spark
-    analog of the reference's global-allocator peak gauge.  Best-effort:
-    returns 0 when metrics are unavailable (e.g. before any job ran)."""
-    try:
-        status = spark.sparkContext.statusTracker()
-        peaks = []
-        for eid in status.getExecutorInfos():
-            peaks.append(getattr(eid, "memoryUsed", lambda: 0)())
-        return max(peaks) if peaks else 0
-    except Exception:
-        return 0

@@ -26,6 +26,7 @@ from typing import Callable, Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .io import _SOURCE_POOL, get_source
 from .plans.partition import wrap_query_with_bounds
 from .session import tune_session
 from .sources.parquet import ParquetDirSource
@@ -50,17 +51,12 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return deco
 
 
-_SOURCES: dict[tuple[int, str], ParquetDirSource] = {}
-
-
 def catalog(spark: SparkSession, sf_dir: str) -> ParquetDirSource:
-    """Cached parquet catalog for (session, dir); registers temp views."""
-    key = (id(spark), sf_dir)
-    src = _SOURCES.get(key)
-    if src is None:
+    """The pooled parquet catalog for (session, dir) (``io.get_source``);
+    tunes the session the first time the pair is seen."""
+    if (id(spark), sf_dir) not in _SOURCE_POOL:
         tune_session(spark)
-        src = ParquetDirSource(spark, sf_dir)
-        _SOURCES[key] = src
+    src = get_source(sf_dir, spark)
     # Every call, not just creation: view names are session-global, so a
     # query against another directory in between re-points them; this is a
     # no-op unless the owning directory actually changed.

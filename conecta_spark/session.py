@@ -84,20 +84,24 @@ def get_session(app_name: str = "conecta-spark", master: str | None = None,
     return builder.getOrCreate()
 
 
+#: The :data:`DEFAULT_CONFIGS` keys that can be set on a running session.
+_RUNTIME_CONF_KEYS = (
+    "spark.sql.session.timeZone",
+    "spark.sql.execution.arrow.pyspark.enabled",
+    "spark.sql.adaptive.enabled",
+    "spark.sql.ansi.enabled",
+    "spark.sql.parquet.aggregatePushdown",
+    "spark.sql.parquet.columnarReaderBatchSize",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine defaults to an externally-created
     session (e.g. the driver's).  Only touches runtime-mutable confs."""
-    for k, v in {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.ansi.enabled": "false",
-        "spark.sql.parquet.aggregatePushdown": "true",
-        "spark.sql.parquet.columnarReaderBatchSize": "16384",
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
-    }.items():
+    for k in _RUNTIME_CONF_KEYS:
         try:
-            spark.conf.set(k, v)
+            spark.conf.set(k, DEFAULT_CONFIGS[k])
         except Exception:  # immutable in this deployment -- fine, best effort
             pass
     return spark

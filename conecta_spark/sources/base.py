@@ -31,12 +31,6 @@ class Source(ABC):
         """Pushdown ``SELECT COUNT(*)`` (postgres.rs:353-366 analog)."""
         return self.query(sql).count()
 
-    def schema_of(self, sql: str):
-        """Schema without executing: Spark resolves the plan lazily, the
-        analog of the reference's ``limit 0`` prepared-statement probe
-        (postgres.rs:567-583)."""
-        return self.query(sql).schema
-
     @abstractmethod
     def read_partitioned(self, plan) -> DataFrame:
         """Execute a :class:`~conecta_spark.plans.metadata.PartitionPlan`

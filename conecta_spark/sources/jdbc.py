@@ -75,15 +75,6 @@ def min_max_sql(query: str, column: str) -> str:
     )
 
 
-def merge_count_sql(queries: list[str]) -> str:
-    """Single-statement summed COUNT over N user queries
-    (postgres.rs:512-526)."""
-    parts = " + ".join(
-        f"(select count(*) from ({q}) as t{i})" for i, q in enumerate(queries)
-    )
-    return f"select {parts} as total_count"
-
-
 class JDBCSource(Source):
     def __init__(
         self,

@@ -120,10 +120,6 @@ def write_bucketed_table(
     writer.saveAsTable(table)
 
 
-def read_back(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def upsert_parquet(
     spark: SparkSession,
     path: str,

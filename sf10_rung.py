@@ -195,7 +195,7 @@ def _ann_row(spark, sf_dir: str) -> dict:
     # embeddings recall tracks the candidate FRACTION almost exactly
     # (no cluster structure to exploit), and a finer quantizer reaches
     # the same recall at fewer candidates -- measured frontier in the
-    # ann block's `frontier` rows (ann_rung.py): 256/96 = 0.915 recall
+    # ann block's `frontier` rows of SF10_RUNG.json: 256/96 = 0.915 recall
     # at 37.6% of the corpus vs 128/64's 0.82-0.92 at 50%.
     t0 = time.perf_counter()
     index = build_ivf_index(emb, n_clusters=256)
@@ -427,8 +427,8 @@ def main() -> None:
     }
     # Merge into SF10_RUNG.json instead of overwriting: a --skip-heavy /
     # --skip-cc / --skip-ann refresh keeps the prior run's blocks (and
-    # sf20_mine.py's mine_1m block) rather than silently dropping them;
-    # per-query timings merge key-wise for the same reason.
+    # blocks written by other rungs, e.g. mine_1m) rather than silently
+    # dropping them; per-query timings merge key-wise for the same reason.
     rung_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "SF10_RUNG.json"
     )

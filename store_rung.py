@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """500k-doc rung for x77 (persisted signature store): the daily-ingest
-claim measured.  incremental_rung.py showed the honest ceiling of the
+claim measured.  The incremental rung (SF10_RUNG.json's
+``incremental_500k_cap*`` blocks) showed the honest ceiling of the
 recompute form (x73): at cap 100 the union signature recompute dominates
 and the warm speedup over a full mine is only 1.14x.  The store is the
 fix -- corpus signatures are built ONCE (`store_build_sec`) and every
@@ -13,8 +14,8 @@ Records, per cap (STORE_RUNG_CAP, default 100):
 * ``stored_batch_runs_sec`` -- two timed batch mines against the store
   (cold: includes stored-relation read; warm: OS page cache);
 * ``full_mine_runs_sec`` / ``incremental_runs_sec`` are NOT re-measured
-  here -- compare against the incremental_500k_cap{N} block written by
-  incremental_rung.py on the same corpus;
+  here -- compare against the incremental_500k_cap{N} block of
+  SF10_RUNG.json, measured on the same corpus;
 * ``pairs_vs_filtered_full`` -- the x73 invariant under frozen-DF
   semantics: pairs are compared against the union-DF filtered full mine
   and any delta is counted (a shingle whose corpus frequency sits

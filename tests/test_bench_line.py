@@ -69,6 +69,23 @@ def test_current_registry_fits_at_full_precision_or_2dp():
     assert parsed["load"] == [12.3, 4.5]
 
 
+def test_failed_query_is_counted_not_summed():
+    """A failed query is stored as -1.0; it must show up as a failure in
+    the line, not as 1 s shaved off the total."""
+    timings = _synthetic(135)
+    timings["x00_some_operator_name_0"] = -1.0
+    total = bench.total_of(timings)
+    assert total is None
+    line = bench.render_json_line(
+        timings, total, total, "0.1", load=[12.3, 4.5]
+    )
+    assert len(line) <= 1900
+    parsed = json.loads(line)
+    assert parsed["failed"] == 1
+    assert parsed["value"] is None
+    assert bench.total_of({"a": 1.5, "b": 2.25}) == 3.75
+
+
 def test_line_without_load_stays_backward_compatible():
     line = bench.render_json_line(_synthetic(10), 1.0, 1.0, "0.1")
     assert "load" not in json.loads(line)

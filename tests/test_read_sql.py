@@ -135,3 +135,13 @@ def test_interleaved_directories_keep_their_views(spark):
     assert read_sql(b, q, spark=spark).count() == 60000
     assert read_sql(a, q, spark=spark).count() == 6000
     assert read_sql(b, q, spark=spark).count() == 60000
+
+
+def test_query_catalog_is_the_pooled_source(spark, sf_dir):
+    """The query registry's catalog and read_sql share one source per
+    (session, dir): a second cache would hold a second copy of the same
+    views and footers."""
+    from conecta_spark.io import get_source
+    from conecta_spark.queries import catalog
+
+    assert catalog(spark, sf_dir) is get_source(sf_dir, spark)

@@ -8,11 +8,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
-from conecta_spark.sources.sinks import (
-    read_back,
-    write_bucketed_table,
-    write_parquet,
-)
+from conecta_spark.sources.sinks import write_bucketed_table, write_parquet
 
 
 @pytest.fixture(scope="module")
@@ -25,7 +21,7 @@ def orders(spark, sf_dir):
 def test_roundtrip_preserves_rows(spark, orders, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("sink") / "orders_plain")
     write_parquet(orders, path, target_files=4)
-    back = read_back(spark, path)
+    back = spark.read.parquet(path)
     assert back.count() == orders.count()
     assert sorted(back.columns) == sorted(orders.columns)
     # target_files controls the physical layout
@@ -39,7 +35,7 @@ def test_partitioned_write_prunes_directories(spark, orders, tmp_path_factory):
     # hive layout on disk
     subdirs = [d for d in os.listdir(path) if d.startswith("o_orderpriority=")]
     assert len(subdirs) == 5
-    back = read_back(spark, path)
+    back = spark.read.parquet(path)
     q = back.where(F.col("o_orderpriority") == "1-URGENT")
     # partition filter must prune at the source, not post-scan
     plan = q._sc._jvm.PythonSQLUtils.explainString(
@@ -178,9 +174,7 @@ def _mk_table(spark, path, rows):
 
 
 def _read_kv(spark, path):
-    from conecta_spark.sources.sinks import read_back
-
-    return {(r.k, r.v) for r in read_back(spark, path).collect()}
+    return {(r.k, r.v) for r in spark.read.parquet(path).collect()}
 
 
 def test_upsert_crash_between_renames_rolls_forward(
