@@ -67,10 +67,14 @@ def normalize_pg_typeof(t: str) -> str:
 
 
 def min_max_sql(query: str, column: str) -> str:
-    """The exact aggregate shape the reference pushes down
-    (postgres.rs:585-592)."""
+    """The aggregate the reference pushes down (postgres.rs:585-592), with
+    the standard ``CAST`` in place of Postgres' ``::bigint`` so every JDBC
+    database accepts it.  The aliases give Spark column names it can
+    select back: Derby names an unaliased column ``1``, which its own
+    parser then rejects."""
     return (
-        f"select min({column})::bigint, max({column})::bigint "
+        f"select CAST(MIN({column}) AS BIGINT) AS mn, "
+        f"CAST(MAX({column}) AS BIGINT) AS mx "
         f"from ({query}) as query_inner"
     )
 
@@ -132,12 +136,13 @@ class JDBCSource(Source):
         return {c: normalize_pg_typeof(row[0][c]) for c in cols}
 
     def _bridge(self, df: DataFrame, sql: str) -> DataFrame:
-        """Unconditional post-read normalization, matching the reference's
-        always-on type bridge (postgres.rs:595-646): geo text -> flattened
-        array<double>, TIME -> us-since-midnight bigint.  Best-effort -- a
-        backend without ``pg_typeof`` (or a failed probe) returns the raw
-        JDBC frame unchanged."""
-        if not self.type_bridge:
+        """Post-read normalization on every Postgres read, matching the
+        reference's always-on type bridge (postgres.rs:595-646): geo text ->
+        flattened array<double>, TIME -> us-since-midnight bigint.  Other
+        databases have no ``pg_typeof``: their raw JDBC frame is returned
+        without a probe.  Best-effort on Postgres -- a failed probe returns
+        the raw frame unchanged."""
+        if not self.type_bridge or not self.url.startswith("jdbc:postgresql:"):
             return df
         try:
             types = self.pg_column_types(sql)

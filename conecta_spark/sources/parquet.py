@@ -77,6 +77,86 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
     ]
 
 
+def data_files(path: str) -> list[str] | None:
+    """The files ``spark.read.parquet(path)`` reads: ``path`` itself, or
+    every entry of the directory not starting with ``_``/``.``.  ``None``
+    when the directory has a subdirectory (hive partitions: part of the
+    data lives in directory names, not in footers)."""
+    if not os.path.isdir(path):
+        return [path]
+    files = []
+    for e in sorted(os.scandir(path), key=lambda e: e.name):
+        if e.name.startswith(("_", ".")):
+            continue
+        if e.is_dir():
+            return None
+        files.append(e.path)
+    return files
+
+
+def footer_min_max(path: str, column: str) -> tuple[int | None, int | None] | None:
+    """MIN/MAX of ``column`` over the parquet table at ``path``, from the
+    row-group statistics in its footers, read on the driver: no Spark job,
+    no data page.  All-null or empty data gives ``(None, None)``, as the
+    Spark aggregate does.
+
+    ``None`` whenever the footers cannot answer exactly, and the caller
+    then runs the aggregate: a subdirectory, a file pyarrow cannot read,
+    a column that is missing, ambiguous or not a signed integer (dates,
+    decimals and nanos timestamps are stored as integers too, but Spark
+    reads them as other types), or a row group holding non-null values
+    without min/max statistics.  The leaf column is matched by its full
+    path, not by position: nested columns shift leaf indexes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = data_files(path)
+    if files is None:
+        return None
+    mn = mx = None
+    for f in files:
+        try:
+            md = pq.read_metadata(f)
+        except (OSError, pa.ArrowInvalid):
+            return None
+        leaves = [
+            j for j in range(md.num_columns) if md.schema.column(j).path == column
+        ]
+        schema = md.schema.to_arrow_schema()
+        i = schema.get_field_index(column)
+        if (
+            len(leaves) != 1
+            or i < 0
+            or not pa.types.is_signed_integer(schema.field(i).type)
+        ):
+            return None
+        for r in range(md.num_row_groups):
+            rg = md.row_group(r)
+            if rg.num_rows == 0:
+                continue
+            st = rg.column(leaves[0]).statistics
+            if st is not None and st.has_null_count and st.null_count == rg.num_rows:
+                continue
+            if st is None or not st.has_min_max:
+                return None
+            mn = st.min if mn is None else min(mn, st.min)
+            mx = st.max if mx is None else max(mx, st.max)
+    return mn, mx
+
+
+def _listing(path: str) -> tuple:
+    """A table's files as they are now: ``(name, mtime_ns, size)`` per
+    directory entry, or ``(mtime_ns, size)`` for a single file."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_mtime_ns, st.st_size)
+    entries = []
+    for e in os.scandir(path):
+        st = e.stat()
+        entries.append((e.name, st.st_mtime_ns, st.st_size))
+    return tuple(sorted(entries))
+
+
 class ParquetDirSource(Source):
     """Register every ``*.parquet`` under ``root`` as a temp view named after
     the file stem, then answer SQL over those views.
@@ -99,6 +179,9 @@ class ParquetDirSource(Source):
                     self.tables[stem] = os.path.join(self.root, name)
         if not self.tables:
             raise ValueError(f"no *{self.EXT} tables found under {root!r}")
+        #: Per table, its :func:`_listing` when this source last registered
+        #: or refreshed its view.
+        self._listings: dict[str, tuple] = {}
 
     def _load(self, path: str) -> DataFrame:
         return load_parquet(self.spark, path)
@@ -112,12 +195,26 @@ class ParquetDirSource(Source):
     _VIEW_OWNER: dict[int, tuple[str, str]] = {}
 
     def register_views(self) -> None:
+        """Register this catalog's views, or refresh those whose files
+        changed since (an ``upsert_parquet`` swaps a table's whole
+        directory): a read returns what the files hold at call time, and
+        sees the same files as the footer MIN/MAX probe."""
         key = id(self.spark)
         mine = (self.root, self.EXT)
-        if ParquetDirSource._VIEW_OWNER.get(key) == mine:
-            return
+        if ParquetDirSource._VIEW_OWNER.get(key) != mine:
+            self._listings.clear()
         for stem, path in self.tables.items():
-            self._load(path).createOrReplaceTempView(stem)
+            now = _listing(path)
+            seen = self._listings.get(stem)
+            if seen == now:
+                continue
+            if seen is None:
+                self._load(path).createOrReplaceTempView(stem)
+            else:
+                # Re-lists the view's files (no job); _load would re-infer
+                # the schema with one.
+                self.spark.catalog.refreshTable(stem)
+            self._listings[stem] = now
         ParquetDirSource._VIEW_OWNER[key] = mine
 
     def query(self, sql: str) -> DataFrame:
@@ -141,38 +238,49 @@ class ParquetDirSource(Source):
             conf.set("spark.sql.sources.useV1SourceList", prev)
 
     def min_max_df(self, table: str, column: str) -> DataFrame:
-        """MIN/MAX metadata probe as a footer-only scan (reference O8:
-        ``postgres.rs:556-592`` reads the DB's index metadata; the parquet
-        twin is ``PushedAggregation`` over row-group statistics -- the plan
-        never touches data pages)."""
+        """The MIN/MAX probe as a Spark plan: ``PushedAggregation`` over
+        row-group statistics on a V2 scan, never touching data pages
+        (reference O8, ``postgres.rs:556-592``).  Still a Spark job per
+        call; :meth:`min_max` answers the planner from the footers on the
+        driver instead, and this plan serves ``queries.q05``."""
         df = self._load_v2(self.tables[table])
         return df.agg(
             F.min(column).cast("long").alias("mn"),
             F.max(column).cast("long").alias("mx"),
         )
 
-    _FULL_SCAN = re.compile(
-        r"select\s+\*\s+from\s+([A-Za-z_][A-Za-z0-9_]*)\s*$", re.I
+    #: ``select * | a, b, ... from <table>``: the query reads every row of
+    #: one catalog table, so the table's footers bound its columns.
+    _TABLE_SCAN = re.compile(
+        r"select\s+(\*|[A-Za-z_][A-Za-z0-9_]*(?:\s*,\s*[A-Za-z_][A-Za-z0-9_]*)*)"
+        r"\s+from\s+([A-Za-z_][A-Za-z0-9_]*)\s*$",
+        re.I,
     )
 
     def min_max(self, sql: str, column: str) -> tuple[int | None, int | None]:
-        m = self._FULL_SCAN.match(sql.strip())
+        """MIN/MAX of ``column`` over ``sql``'s result.  A whole-table scan
+        that selects ``column`` is answered by :func:`footer_min_max`
+        without a Spark job (the analog of the reference's indexed-metadata
+        probe, ``postgres.rs:556-592``); any other query, or footers that
+        cannot answer exactly, runs the aggregate over the query."""
+        m = self._TABLE_SCAN.match(sql.strip())
         if (
             self.EXT == ".parquet"  # csv/json/orc subclasses have no footers
             and m
-            and m.group(1).lower() in self.tables
-            and column not in _nanos_timestamp_columns(self.tables[m.group(1).lower()])
+            and m.group(2).lower() in self.tables
+            and (m.group(1) == "*" or column in re.split(r"\s*,\s*", m.group(1)))
         ):
-            row = self.min_max_df(m.group(1).lower(), column).collect()[0]
-        else:
-            row = (
-                self.query(sql)
-                .agg(
-                    F.min(column).cast("long").alias("mn"),
-                    F.max(column).cast("long").alias("mx"),
-                )
-                .collect()[0]
+            found = footer_min_max(self.tables[m.group(2).lower()], column)
+            if found is not None:
+                return found
+        row = (
+            self.query(sql)
+            .agg(
+                F.min(column).cast("long").alias("mn"),
+                F.max(column).cast("long").alias("mx"),
             )
+            .collect()[0]
+        )
         return row["mn"], row["mx"]
 
     def read_partitioned(self, plan) -> DataFrame:

@@ -32,3 +32,30 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def oracle_dir():
     return SF_ORACLE
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs:`` -- on exit, ``jobs`` holds the ids of
+    the Spark jobs this thread launched inside the block."""
+    import contextlib
+    import uuid
+
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def count():
+        group = f"count-{uuid.uuid4().hex}"
+        jobs: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield jobs
+        finally:
+            for k in ("spark.jobGroup.id", "spark.job.description",
+                      "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(k, None)
+            # The status tracker is fed asynchronously by the listener bus.
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

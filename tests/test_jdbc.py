@@ -171,3 +171,39 @@ def test_reference_unsupported_types_bridge_cleanly(spark, geo_frame):
         types_map={"pt": "numeric", "t": "timestamptz", "name": "jsonb"},
     )
     assert src.query("select * from tbl").count() == 1
+
+
+def test_non_postgres_url_skips_the_type_bridge(spark, geo_frame):
+    """Only Postgres has pg_typeof: any other database's read returns the
+    raw frame without issuing the probe."""
+    src = StubJDBC(spark, {"*": geo_frame}, types_map=None)
+    src.url = "jdbc:derby:memory:db"
+    issued = []
+    raw = src._raw_query
+    src._raw_query = lambda sql: issued.append(sql) or raw(sql)
+    assert src.query("select * from geo").collect()[0]["pt"] == "(1,2)"
+    assert not any("pg_typeof" in sql for sql in issued), issued
+
+
+def test_min_max_on_embedded_derby(spark, tmp_path):
+    """The MIN/MAX probe SQL is portable: embedded Derby (bundled with
+    Spark) answers it, NULL keys ignored."""
+    jvm = spark._jvm
+    jvm.java.lang.System.setProperty(
+        "derby.stream.error.file", str(tmp_path / "derby.log")
+    )
+    url = f"jdbc:derby:{tmp_path / 'db'}"
+    conn = jvm.java.sql.DriverManager.getConnection(url + ";create=true")
+    try:
+        stmt = conn.createStatement()
+        stmt.executeUpdate("create table t (k integer, v varchar(8))")
+        stmt.executeUpdate(
+            "insert into t values (7, 'a'), (-3, 'b'), (null, 'c'), (42, 'd')"
+        )
+    finally:
+        conn.close()
+    src = JDBCSource(
+        spark, url, driver="org.apache.derby.jdbc.EmbeddedDriver",
+        type_bridge=False,
+    )
+    assert src.min_max("select * from t", "k") == (-3, 42)

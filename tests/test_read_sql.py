@@ -145,3 +145,165 @@ def test_query_catalog_is_the_pooled_source(spark, sf_dir):
     from conecta_spark.queries import catalog
 
     assert catalog(spark, sf_dir) is get_source(sf_dir, spark)
+
+
+# -- MIN/MAX from parquet footers -------------------------------------------
+
+
+def _spark_min_max(spark, path, column, df=None):
+    from pyspark.sql import functions as F
+
+    df = spark.read.parquet(path) if df is None else df
+    row = df.agg(
+        F.min(column).cast("long"), F.max(column).cast("long")
+    ).collect()[0]
+    return row[0], row[1]
+
+
+def _write_multi_file(spark, path):
+    spark.range(-50, 250, 1, 3).selectExpr("id as k", "id * 2 as v") \
+        .write.parquet(path)
+
+
+def _write_all_null_row_group(spark, path):
+    import pyarrow.parquet as pq
+
+    t = pa.table({"k": pa.array([None] * 4 + [5, -3, 9, 2], pa.int64())})
+    pq.write_table(t, path, row_group_size=4)
+
+
+def _write_with_empty_part(spark, path):
+    import os
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(path)
+    pq.write_table(pa.table({"k": pa.array([7, 3], pa.int32())}),
+                   os.path.join(path, "part-0.parquet"))
+    pq.write_table(pa.table({"k": pa.array([], pa.int32())}),
+                   os.path.join(path, "part-1.parquet"))
+
+
+def _write_all_null(spark, path):
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"k": pa.array([None, None], pa.int64())}), path)
+
+
+def _write_shifted_leaves(spark, path):
+    """A struct before ``k`` with a leaf also called ``k``: ``k`` is leaf 2
+    but Arrow field 1, and ``s.k`` holds other values."""
+    import pyarrow.parquet as pq
+
+    s = pa.array([{"k": 1000, "x": -1000}, {"k": 2000, "x": -2000}])
+    pq.write_table(pa.table({"s": s, "k": pa.array([4, 8], pa.int16())}), path)
+
+
+@pytest.mark.parametrize("write", [
+    _write_multi_file, _write_all_null_row_group, _write_with_empty_part,
+    _write_all_null, _write_shifted_leaves,
+])
+def test_footer_min_max_equals_spark_aggregate(spark, tmp_path, write):
+    from conecta_spark.sources.parquet import footer_min_max
+
+    path = str(tmp_path / "t.parquet")
+    write(spark, path)
+    assert footer_min_max(path, "k") == _spark_min_max(spark, path, "k")
+
+
+def test_footer_probe_answers_projection_without_a_job(
+    spark, tmp_path, spark_jobs
+):
+    from conecta_spark.sources.parquet import ParquetDirSource
+
+    _write_multi_file(spark, str(tmp_path / "t.parquet"))
+    src = ParquetDirSource(spark, str(tmp_path))
+    want = _spark_min_max(spark, str(tmp_path / "t.parquet"), "k")
+    for sql in ("select * from t", "select v, k from t", "SELECT k FROM t"):
+        with spark_jobs() as jobs:
+            assert src.min_max(sql, "k") == want == (-50, 249)
+        assert jobs == [], sql
+    # A filtered query is not a whole-table scan: the aggregate runs.
+    with spark_jobs() as jobs:
+        assert src.min_max("select * from t where k > 0", "k") == (1, 249)
+    assert jobs
+
+
+def _write_no_statistics(path):
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}), path,
+                   write_statistics=False)
+
+
+def _write_typed(typ, values):
+    def write(path):
+        import pyarrow.parquet as pq
+
+        pq.write_table(pa.table({"k": pa.array(values, typ)}), path)
+
+    return write
+
+
+def _write_hive(path):
+    import os
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(os.path.join(path, "p=1"))
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}),
+                   os.path.join(path, "p=1", "part-0.parquet"))
+
+
+def _write_nested_only(path):
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({"s": pa.array([{"k": 1}, {"k": 2}])}), path)
+
+
+@pytest.mark.parametrize("write", [
+    _write_no_statistics,
+    _write_typed(pa.date32(), [1, 20000]),
+    _write_typed(pa.float64(), [1.5, 2.5]),
+    _write_typed(pa.timestamp("ns"), [1, 2_000_000_000]),
+    _write_hive,
+    _write_nested_only,
+], ids=["no_statistics", "date", "double", "timestamp_ns", "hive", "nested"])
+def test_footer_min_max_falls_back(spark, tmp_path, write):
+    from conecta_spark.sources.parquet import ParquetDirSource, footer_min_max
+
+    path = str(tmp_path / "t.parquet")
+    write(path)
+    assert footer_min_max(path, "k") is None
+    if write is not _write_nested_only:
+        # ... and min_max then answers with the Spark aggregate.
+        src = ParquetDirSource(spark, str(tmp_path))
+        assert src.min_max("select * from t", "k") == _spark_min_max(
+            spark, path, "k", src.query("select * from t")
+        )
+
+
+def test_read_sql_after_upsert_sees_merged_rows(spark, tmp_path):
+    """A source's views follow an upsert_parquet rewrite of their table:
+    no manual refresh, no read of the deleted files."""
+    from conecta_spark.sources.parquet import ParquetDirSource
+    from conecta_spark.sources.sinks import upsert_parquet
+
+    path = str(tmp_path / "accounts.parquet")
+    upsert_parquet(
+        spark, path, spark.createDataFrame([(1, 10), (2, 20)], "k long, v long"),
+        ["k"],
+    )
+    src = ParquetDirSource(spark, str(tmp_path))
+    assert read_sql(src, "select * from accounts", spark=spark).count() == 2
+    upsert_parquet(
+        spark, path, spark.createDataFrame([(2, 21), (3, 30)], "k long, v long"),
+        ["k"],
+    )
+    got = read_sql(
+        src, "select k, v from accounts", partition_on="k", partition_num=2,
+        return_backend="pyarrow", spark=spark,
+    )
+    assert sorted(zip(got["k"].to_pylist(), got["v"].to_pylist())) == [
+        (1, 10), (2, 21), (3, 30),
+    ]

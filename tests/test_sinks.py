@@ -342,3 +342,52 @@ def test_upsert_reader_never_sees_torn_data(spark, tmp_path_factory):
             sinks.os.rename = real_rename
         sinks.recover_upsert(path)
         assert _read_kv(spark, path) in (old, new), crash_at
+
+
+# -- the upsert's schema from the footer --------------------------------------
+
+
+def test_footer_schema_equals_inferred_schema(spark, tmp_path):
+    from conecta_spark.sources.sinks import footer_schema
+
+    path = str(tmp_path / "nested")
+    spark.sql(
+        "select id as k, named_struct('a', id, 'b', array(id, null)) as s, "
+        "array(named_struct('x', id)) as arr, map('m', array(id)) as m, "
+        "cast(id as decimal(12, 2)) as d, current_date() as day "
+        "from range(10)"
+    ).repartition(2).write.parquet(path)
+    got = footer_schema(spark, path)
+    assert got is not None
+    assert got == spark.read.parquet(path).schema
+
+
+def test_footer_schema_falls_back_without_spark_metadata(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from conecta_spark.sources.sinks import footer_schema
+
+    path = tmp_path / "arrow"
+    path.mkdir()
+    pq.write_table(pa.table({"k": [1, 2]}), str(path / "part-0.parquet"))
+    assert footer_schema(spark, str(path)) is None
+
+
+def test_upsert_skips_the_schema_inference_job(
+    spark, tmp_path, spark_jobs, monkeypatch
+):
+    """With the schema from the footer, an upsert into a Spark-written
+    dataset runs one job fewer than with Spark's inference."""
+    from conecta_spark.sources import sinks
+
+    path = str(tmp_path / "tbl")
+    _mk_table(spark, path, [(1, "a"), (2, "b")])
+    updates = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
+    with spark_jobs() as footer:
+        sinks.upsert_parquet(spark, path, updates, ("k",))
+    monkeypatch.setattr(sinks, "footer_schema", lambda spark, path: None)
+    with spark_jobs() as inferred:
+        sinks.upsert_parquet(spark, path, updates, ("k",))
+    assert len(footer) == len(inferred) - 1
+    assert _read_kv(spark, path) == {(1, "a"), (2, "B"), (3, "c")}
