@@ -53,20 +53,15 @@ def register(name: str, oracle: str | None, doc: str = ""):
 
 def catalog(spark: SparkSession, sf_dir: str) -> ParquetDirSource:
     """The pooled parquet catalog for (session, dir) (``io.get_source``);
-    tunes the session the first time the pair is seen."""
+    tunes the session the first time the pair is seen.  Resolve its tables
+    through ``.query(sql)`` only: temp view names are session-global."""
     if (id(spark), sf_dir) not in _SOURCE_POOL:
         tune_session(spark)
-    src = get_source(sf_dir, spark)
-    # Every call, not just creation: view names are session-global, so a
-    # query against another directory in between re-points them; this is a
-    # no-op unless the owning directory actually changed.
-    src.register_views()
-    return src
+    return get_source(sf_dir, spark)
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.table(name)
+    return catalog(spark, sf_dir).query(f"select * from {name}")
 
 
 def epoch_micros(df: DataFrame, col: str = "ts") -> Column:
@@ -164,10 +159,16 @@ def q04(spark, sf_dir):
     "O8 MIN/MAX metadata pushdown (postgres.rs:556-592)",
 )
 def q05(spark, sf_dir):
-    # Footer-only probe (PushedAggregation): the metadata step of partition
-    # planning must not cost a data scan (reference: metadata is 5-40% of
-    # total load time when probed naively).
-    return catalog(spark, sf_dir).min_max_df("lineitem", "l_orderkey")
+    # The planner's own probe: answered from the parquet footers on the
+    # driver, no Spark job (reference: metadata is 5-40% of total load time
+    # when probed naively).  An Arrow table becomes a LocalTableScan.
+    import pyarrow as pa
+
+    src = catalog(spark, sf_dir)
+    mn, mx = src.min_max("select * from lineitem", "l_orderkey")
+    return spark.createDataFrame(pa.table({
+        "mn": pa.array([mn], pa.int64()), "mx": pa.array([mx], pa.int64()),
+    }))
 
 
 @register(

@@ -34,12 +34,6 @@ DEFAULT_CONFIGS: dict[str, str] = {
     # full-width scans ~30% (measured 0.45s -> 0.31s on a 600k x 16-col
     # scan); 16384 rows x 8B x ~100 cols stays ~13MB per in-flight batch.
     "spark.sql.parquet.columnarReaderBatchSize": "16384",
-    # MIN/MAX/COUNT aggregates read parquet footers instead of data pages
-    # (mirrors the reference's indexed-metadata optimization,
-    # postgres.rs:556-592).  Only takes effect on DSv2 scans, and only
-    # ParquetDirSource.min_max_df (queries.q05) opts into V2; the planner's
-    # probe reads the footers on the driver instead (sources/parquet.py).
-    "spark.sql.parquet.aggregatePushdown": "true",
     # Deterministic timestamp semantics vs the DuckDB oracle.
     "spark.sql.session.timeZone": "UTC",
     # Naive parquet timestamps (isAdjustedToUTC=false, e.g. events.ts) read
@@ -91,7 +85,6 @@ _RUNTIME_CONF_KEYS = (
     "spark.sql.execution.arrow.pyspark.enabled",
     "spark.sql.adaptive.enabled",
     "spark.sql.ansi.enabled",
-    "spark.sql.parquet.aggregatePushdown",
     "spark.sql.parquet.columnarReaderBatchSize",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
 )

@@ -27,10 +27,6 @@ class Source(ABC):
         """Pushdown ``SELECT MIN(col), MAX(col)`` over the query result,
         cast to int (postgres.rs:556-592 analog)."""
 
-    def count(self, sql: str) -> int:
-        """Pushdown ``SELECT COUNT(*)`` (postgres.rs:353-366 analog)."""
-        return self.query(sql).count()
-
     @abstractmethod
     def read_partitioned(self, plan) -> DataFrame:
         """Execute a :class:`~conecta_spark.plans.metadata.PartitionPlan`

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 import re
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,12 +41,10 @@ def load_parquet(spark: SparkSession, path: str) -> DataFrame:
     TimestampType -- the same precision the reference uses everywhere
     (postgres.rs:401-412 truncates to micros).
     """
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    df = spark.read.parquet(path)
     ns_cols = _nanos_timestamp_columns(path)
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
     for name in ns_cols:
         if name in df.columns:
             df = df.withColumn(
@@ -157,9 +156,16 @@ def _listing(path: str) -> tuple:
     return tuple(sorted(entries))
 
 
+#: Guards temp-view re-pointing plus analysis in :meth:`ParquetDirSource.query`.
+_VIEW_LOCK = threading.Lock()
+
+
 class ParquetDirSource(Source):
     """Register every ``*.parquet`` under ``root`` as a temp view named after
-    the file stem, then answer SQL over those views.
+    the file stem, then answer SQL over those views.  Temp view names are
+    session-global, so two catalogs that both hold ``lineitem`` share one
+    view: :meth:`query` re-points the views a statement names and analyses
+    it under one lock.
 
     ``EXT``/``_load`` are the format hooks; :class:`conecta_spark.sources
     .files.FilesDirSource` reuses everything else for csv/json/orc."""
@@ -179,75 +185,50 @@ class ParquetDirSource(Source):
                     self.tables[stem] = os.path.join(self.root, name)
         if not self.tables:
             raise ValueError(f"no *{self.EXT} tables found under {root!r}")
-        #: Per table, its :func:`_listing` when this source last registered
-        #: or refreshed its view.
+        #: Per table, its loaded DataFrame, and its :func:`_listing` when
+        #: that was loaded or last refreshed.
+        self._frames: dict[str, DataFrame] = {}
         self._listings: dict[str, tuple] = {}
 
     def _load(self, path: str) -> DataFrame:
         return load_parquet(self.spark, path)
 
-    #: Temp views are SESSION-GLOBAL by name: two sources over different
-    #: directories both register a view called ``lineitem``, and whichever
-    #: registered last wins for every source.  Track the owning (root,
-    #: format) per session so a pooled/cached source re-registers its own
-    #: views when another catalog has clobbered them (cheap:
-    #: re-registration only happens on an actual catalog switch).
-    _VIEW_OWNER: dict[int, tuple[str, str]] = {}
+    def _point(self, stems) -> None:
+        """Point the views ``stems`` at this source's tables, loading each
+        table once; re-list a table's files (``refreshTable``, no job) when
+        they changed since (an ``upsert_parquet`` swaps a table's whole
+        directory), so a read returns what the files hold at call time and
+        sees the same files as the footer MIN/MAX probe.  Caller holds
+        :data:`_VIEW_LOCK`."""
+        for stem in stems:
+            path = self.tables[stem]
+            now = _listing(path)
+            df = self._frames.get(stem)
+            if df is None:
+                df = self._frames[stem] = self._load(path)
+                self._listings[stem] = now
+            df.createOrReplaceTempView(stem)
+            if self._listings[stem] != now:
+                self.spark.catalog.refreshTable(stem)
+                self._listings[stem] = now
 
     def register_views(self) -> None:
-        """Register this catalog's views, or refresh those whose files
-        changed since (an ``upsert_parquet`` swaps a table's whole
-        directory): a read returns what the files hold at call time, and
-        sees the same files as the footer MIN/MAX probe."""
-        key = id(self.spark)
-        mine = (self.root, self.EXT)
-        if ParquetDirSource._VIEW_OWNER.get(key) != mine:
-            self._listings.clear()
-        for stem, path in self.tables.items():
-            now = _listing(path)
-            seen = self._listings.get(stem)
-            if seen == now:
-                continue
-            if seen is None:
-                self._load(path).createOrReplaceTempView(stem)
-            else:
-                # Re-lists the view's files (no job); _load would re-infer
-                # the schema with one.
-                self.spark.catalog.refreshTable(stem)
-            self._listings[stem] = now
-        ParquetDirSource._VIEW_OWNER[key] = mine
+        """Point every view of this catalog at this source's tables."""
+        with _VIEW_LOCK:
+            self._point(self.tables)
 
     def query(self, sql: str) -> DataFrame:
-        self.register_views()
-        return self.spark.sql(sql)
-
-    def _load_v2(self, path: str) -> DataFrame:
-        """Read ``path`` through the DSv2 parquet source.
-
-        V1 (the default) ignores ``spark.sql.parquet.aggregatePushdown``;
-        only a V2 ``BatchScan`` can answer MIN/MAX/COUNT from row-group
-        footers.  The source list is flipped just for relation resolution
-        (the DataFrame keeps its V2 relation afterwards), so every other
-        read in the session stays on the default path."""
-        conf = self.spark.conf
-        prev = conf.get("spark.sql.sources.useV1SourceList")
-        conf.set("spark.sql.sources.useV1SourceList", "")
-        try:
-            return self.spark.read.parquet(path)
-        finally:
-            conf.set("spark.sql.sources.useV1SourceList", prev)
-
-    def min_max_df(self, table: str, column: str) -> DataFrame:
-        """The MIN/MAX probe as a Spark plan: ``PushedAggregation`` over
-        row-group statistics on a V2 scan, never touching data pages
-        (reference O8, ``postgres.rs:556-592``).  Still a Spark job per
-        call; :meth:`min_max` answers the planner from the footers on the
-        driver instead, and this plan serves ``queries.q05``."""
-        df = self._load_v2(self.tables[table])
-        return df.agg(
-            F.min(column).cast("long").alias("mn"),
-            F.max(column).cast("long").alias("mx"),
-        )
+        """Run ``sql`` over this catalog: the views it names are re-pointed
+        at this source's tables and the statement is analysed under one
+        lock, so its plan is pinned to these files before another catalog
+        can claim the view names."""
+        named = [
+            stem for stem in self.tables
+            if re.search(rf"\b{stem}\b", sql, re.I)
+        ]
+        with _VIEW_LOCK:
+            self._point(named)
+            return self.spark.sql(sql)
 
     #: ``select * | a, b, ... from <table>``: the query reads every row of
     #: one catalog table, so the table's footers bound its columns.

@@ -548,8 +548,7 @@ def q37(spark, sf_dir) -> DataFrame:
     "(no per-row subquery execution)",
 )
 def q38(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "SELECT c_custkey, c_name FROM customer c WHERE EXISTS ("
         " SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey"
         " AND o.o_totalprice > 300000)"
@@ -600,8 +599,7 @@ def q39(spark, sf_dir) -> DataFrame:
     "the sets map-side",
 )
 def q40(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "SELECT l_returnflag AS rf, l_linestatus AS ls, "
         " GROUPING(l_returnflag) AS g_rf, GROUPING(l_linestatus) AS g_ls, "
         " COUNT(*) AS n, " + DSUM("l_quantity") + " AS sum_qty "
@@ -794,8 +792,7 @@ _Q47_SQL = (
     "distinct + join",
 )
 def q47(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(_Q47_SQL)
+    return catalog(spark, sf_dir).query(_Q47_SQL)
 
 
 @register(
@@ -892,8 +889,7 @@ _Q49_DUCK = _Q49_SPINE.format(
     "sf0.1); the spine is tiny either way and orders joins it once.",
 )
 def q49(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(_Q49_SPARK)
+    return catalog(spark, sf_dir).query(_Q49_SPARK)
 
 
 _Q50_SQL = (
@@ -918,8 +914,7 @@ _Q50_SQL = (
     "guarantee for the window-function spelling).",
 )
 def q50(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(_Q50_SQL)
+    return catalog(spark, sf_dir).query(_Q50_SQL)
 
 
 @register(
@@ -960,8 +955,7 @@ def q51(spark, sf_dir) -> DataFrame:
     "key (both engines infer the same key set)",
 )
 def q52(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "SELECT r_name, n_name, COUNT(*) AS c, "
         "CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS bal "
         "FROM customer "
@@ -982,8 +976,7 @@ def q52(spark, sf_dir) -> DataFrame:
     "shape; broadcasts as a literal LocalRelation)",
 )
 def q53(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "WITH tiers AS (SELECT * FROM VALUES"
         " ('AUTOMOBILE', 'retail'), ('MACHINERY', 'industrial'),"
         " ('BUILDING', 'industrial') AS t(mkt, tier)) "
@@ -1003,8 +996,7 @@ def q53(spark, sf_dir) -> DataFrame:
     "(arrays stringified at the boundary for the driver)",
 )
 def q54(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "WITH a AS (SELECT o_custkey,"
         "  sort_array(collect_set(o_orderpriority)) AS ps"
         "  FROM orders GROUP BY o_custkey) "
@@ -1026,8 +1018,7 @@ def q54(spark, sf_dir) -> DataFrame:
     "the decimal cast so partial-order summation is engine-independent)",
 )
 def q55(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "SELECT o_custkey, o_orderkey, "
         " row_number() OVER w AS rn, "
         " CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER w AS DOUBLE)"
@@ -1050,8 +1041,7 @@ def q55(spark, sf_dir) -> DataFrame:
     "key-reconciliation needs",
 )
 def q56(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "WITH l AS (SELECT CASE WHEN o_orderkey % 3 = 0 THEN NULL"
         "  ELSE o_orderpriority END AS k, o_orderkey FROM orders),"
         " r AS (SELECT DISTINCT CASE WHEN o_orderkey % 5 = 0 THEN NULL"
@@ -1077,8 +1067,7 @@ def q56(spark, sf_dir) -> DataFrame:
     "NULLS FIRST, DuckDB is NULLS LAST -- so portable SQL must say it)",
 )
 def q57(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "WITH s AS (SELECT o_orderkey,"
         " CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_totalprice END AS p"
         " FROM orders WHERE o_orderkey <= 200) "
@@ -1127,8 +1116,7 @@ def q58(spark, sf_dir) -> DataFrame:
     "self-null idiom)",
 )
 def q59(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "SELECT o_orderkey, "
         " coalesce(nullif(o_orderstatus, 'O'), '<open>') AS status_tag, "
         " CASE WHEN o_totalprice > 200000 THEN 'jumbo'"
@@ -1155,8 +1143,7 @@ def q59(spark, sf_dir) -> DataFrame:
     "class where empty documents vanish from per-token accounting)",
 )
 def q60(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "WITH d AS (SELECT doc_id, CASE WHEN doc_id % 5 = 0 THEN array()"
         "  ELSE split(substr(text, 1, 40), ' ') END AS toks"
         " FROM documents WHERE doc_id < 100) "
@@ -1177,8 +1164,7 @@ def q60(spark, sf_dir) -> DataFrame:
     "variant x24's continuous percentiles cannot express",
 )
 def q61(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "SELECT event_type, "
         " percentile_disc(0.5) WITHIN GROUP (ORDER BY value) AS p50_disc, "
         " percentile_disc(0.9) WITHIN GROUP (ORDER BY value) AS p90_disc "
@@ -1199,8 +1185,7 @@ def q61(spark, sf_dir) -> DataFrame:
     "depends on it",
 )
 def q62(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "WITH n AS (SELECT o_orderkey, o_orderkey - 750 AS d FROM orders"
         "  WHERE o_orderkey <= 1500) "
         "SELECT o_orderkey, d % 7 AS m, pmod(d, 7) AS pm FROM n"
@@ -1223,8 +1208,7 @@ def q62(spark, sf_dir) -> DataFrame:
     "a divergence that silently shifts bucket boundaries if unstated",
 )
 def q63(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "SELECT o_orderkey, "
         " TRY_CAST(o_orderpriority AS INT) AS junk_to_int, "
         " TRY_CAST(substr(o_orderpriority, 1, 1) AS INT) AS digit_to_int, "
@@ -1258,8 +1242,7 @@ def q63(spark, sf_dir) -> DataFrame:
     "reading)",
 )
 def q64(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "WITH o AS (SELECT o_custkey, o_orderkey,"
         " CASE WHEN o_orderkey % 3 = 0 THEN NULL ELSE o_totalprice END AS p"
         " FROM orders) "
@@ -1286,8 +1269,7 @@ def q64(spark, sf_dir) -> DataFrame:
     "(first argument = most significant) as identical across engines",
 )
 def q65(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "SELECT o_orderpriority, o_orderstatus, "
         " CAST(grouping(o_orderpriority) AS INT) AS g_pri, "
         " CAST(grouping(o_orderstatus) AS INT) AS g_st, "
@@ -1320,8 +1302,7 @@ def q65(spark, sf_dir) -> DataFrame:
     "retention/cohort query depends on, pinned identical cross-engine",
 )
 def q66(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "SELECT o_orderkey, o_orderdate, "
         " last_day(o_orderdate) AS month_end, "
         " date_trunc('week', o_orderdate) AS week_start, "
@@ -1350,8 +1331,7 @@ def q66(spark, sf_dir) -> DataFrame:
     "anchored match as boolean, and match counting",
 )
 def q67(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "SELECT p_partkey, "
         " regexp_extract(p_name, '([a-z]+)', 1) AS first_word, "
         " regexp_replace(p_name, '[aeiou]', '_') AS devoweled, "
@@ -1380,8 +1360,7 @@ def q67(spark, sf_dir) -> DataFrame:
     "the property-bag shape metadata columns use",
 )
 def q68(spark, sf_dir) -> DataFrame:
-    catalog(spark, sf_dir)
-    return spark.sql(
+    return catalog(spark, sf_dir).query(
         "SELECT c_custkey, "
         " element_at(map('seg', c_mktsegment,"
         "  'nat', CAST(c_nationkey AS STRING)), 'seg') AS seg, "

@@ -25,9 +25,10 @@ SHOWCASE: list[tuple[str, str]] = [
     ),
     (
         "q05_min_max_metadata",
-        "The planner's MIN/MAX metadata probe compiles to PushedAggregation "
-        "on the scan: answered from parquet footers, no data pass.  The "
-        "reference needs a Postgres index for the same effect.",
+        "The planner's MIN/MAX metadata probe is answered from the parquet "
+        "footers' row-group statistics on the driver: no Spark job, no data "
+        "page, so the plan is a one-row LocalTableScan.  The reference needs "
+        "a Postgres index for the same effect.",
     ),
     (
         "q14_three_way_join",

@@ -137,6 +137,56 @@ def test_interleaved_directories_keep_their_views(spark):
     assert read_sql(b, q, spark=spark).count() == 60000
 
 
+def test_concurrent_catalogs_read_their_own_table(spark, tmp_path):
+    """Two threads read two catalogs that both hold a table ``t`` (disjoint
+    values), through ``read_sql`` and the query registry's ``t()``: every
+    result comes from the caller's own catalog, although the view name
+    ``t`` is shared by the whole session."""
+    import sys
+    import threading
+
+    import pyarrow.parquet as pq
+
+    from conecta_spark import queries
+
+    dirs = {}
+    for name, lo in (("a", 0), ("b", 1000)):
+        d = tmp_path / name
+        d.mkdir()
+        pq.write_table(pa.table({"k": pa.array(range(lo, lo + 5), pa.int64())}),
+                       str(d / "t.parquet"))
+        dirs[str(d)] = set(range(lo, lo + 5))
+    calls_per_thread = 500
+    wrong, errors = [], []
+
+    def reader(d):
+        try:
+            for i in range(calls_per_thread):
+                if i % 2:
+                    got = read_sql(d, "select k from t", spark=spark,
+                                   return_backend="pyarrow")["k"].to_pylist()
+                else:
+                    got = [r.k for r in queries.t(spark, d, "t").collect()]
+                if set(got) != dirs[d]:
+                    wrong.append((d, got))
+        except Exception as e:  # surfaces in the main thread below
+            errors.append(e)
+
+    threads = [threading.Thread(target=reader, args=(d,)) for d in dirs]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors, errors
+    assert len(wrong) == 0, f"{len(wrong)} of {2 * calls_per_thread} wrong"
+
+
 def test_query_catalog_is_the_pooled_source(spark, sf_dir):
     """The query registry's catalog and read_sql share one source per
     (session, dir): a second cache would hold a second copy of the same
@@ -307,3 +357,30 @@ def test_read_sql_after_upsert_sees_merged_rows(spark, tmp_path):
     assert sorted(zip(got["k"].to_pylist(), got["v"].to_pylist())) == [
         (1, 10), (2, 21), (3, 30),
     ]
+
+
+def test_nanos_conf_is_set_only_for_nanos_columns(spark, tmp_path):
+    """``load_parquet`` sets ``nanosAsLong`` on the session only when a table
+    stores TIMESTAMP(NANOS); such a column still reads as microseconds."""
+    import pyarrow.parquet as pq
+
+    from conecta_spark.sources.parquet import ParquetDirSource
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    plain = tmp_path / "plain"
+    plain.mkdir()
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}),
+                   str(plain / "t.parquet"))
+    s = spark.newSession()
+    ParquetDirSource(s, str(plain)).register_views()
+    assert s.conf.get(key, None) is None
+
+    nanos = tmp_path / "nanos"
+    nanos.mkdir()
+    ts = pa.array([1_000_001_999], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), str(nanos / "e.parquet"))
+    got = ParquetDirSource(s, str(nanos)).query(
+        "select unix_micros(ts) as us from e"
+    ).collect()
+    assert s.conf.get(key, None) == "true"
+    assert got[0].us == 1_000_001
