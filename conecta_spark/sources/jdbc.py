@@ -27,6 +27,8 @@ promises against a testcontainers Postgres).
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.partition import QueryPartitioningMode, bound_predicate, bounds
@@ -141,12 +143,16 @@ class JDBCSource(Source):
         flattened array<double>, TIME -> us-since-midnight bigint.  Other
         databases have no ``pg_typeof``: their raw JDBC frame is returned
         without a probe.  Best-effort on Postgres -- a failed probe returns
-        the raw frame unchanged."""
+        the raw frame unchanged and says so with a ``RuntimeWarning``."""
         if not self.type_bridge or not self.url.startswith("jdbc:postgresql:"):
             return df
         try:
             types = self.pg_column_types(sql)
-        except Exception:
+        except Exception as e:
+            warnings.warn(
+                f"pg_typeof probe failed, type bridge skipped: {e!r}",
+                RuntimeWarning, stacklevel=2,
+            )
             return df
         return apply_pg_casts(df, types)
 

@@ -15,7 +15,8 @@ needs durable outputs, so the engine adds the two layouts that matter at
   requires ``saveAsTable`` for bucket metadata to survive.
 
 ``repartition`` before write controls output file count -- the single most
-common cause of small-file pathology in long-lived datasets.
+common cause of small-file pathology in long-lived datasets.  ``target_mb``
+and ``upsert_parquet`` derive that count from Catalyst's byte estimate.
 """
 
 from __future__ import annotations
@@ -43,6 +44,45 @@ def estimated_bytes(df: DataFrame) -> int:
     )
 
 
+def read_split_bytes(spark: SparkSession, total_bytes: int) -> int:
+    """The split size Spark's file reader picks for a ``total_bytes`` scan
+    (``FilePartition.maxSplitBytes``): ``spark.sql.files.maxPartitionBytes``,
+    lowered to one split per core (``spark.sql.files.minPartitionNum``, by
+    default the default parallelism) for a scan smaller than that, but not
+    below ``spark.sql.files.openCostInBytes``.  The per-core share rounds
+    up, so a mid-size scan comes to exactly one split per core."""
+    jss = spark._jsparkSession
+    conf = jss.sessionState().conf()
+    cores = conf.filesMinPartitionNum()
+    cores = cores.get() if cores.isDefined() else jss.leafNodeDefaultParallelism()
+    return min(
+        conf.filesMaxPartitionBytes(),
+        max(1, conf.filesOpenCostInBytes(), -(-total_bytes // cores)),
+    )
+
+
+def output_files(df: DataFrame, target_bytes: int | None = None) -> int | None:
+    """How many files of ``target_bytes`` hold ``df``:
+    ``ceil(estimated_bytes(df) / target_bytes)``, at least 1; without a
+    target, files of the split Spark's reader would use for ``df``
+    (:func:`read_split_bytes`).  ``None`` (keep the plan's partitioning)
+    when Catalyst cannot size an input of ``df``: an RDD-backed or JDBC
+    relation reports ``spark.sql.defaultSizeInBytes`` (Long.MaxValue),
+    which projections and unions then scale into a number that sizes
+    nothing.  Free: plan statistics only, no job runs."""
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    if any(
+        leaves.apply(i).stats().sizeInBytes() >= conf.defaultSizeInBytes()
+        for i in range(leaves.size())
+    ):
+        return None
+    est = estimated_bytes(df)
+    target_bytes = target_bytes or read_split_bytes(df.sparkSession, est)
+    # coalesce/repartition take a Java int.
+    return min(max(1, -(-est // target_bytes)), 2**31 - 1)
+
+
 def write_parquet(
     df: DataFrame,
     path: str,
@@ -59,9 +99,12 @@ def write_parquet(
 
     ``target_mb`` sizes the output from Catalyst's byte estimate instead
     of a hand-picked file count: ``ceil(estimated_bytes / target_mb)``
-    output files.  At 100 TB this is the difference between a dataset of
-    healthy ~512 MB files and either thousands-of-tiny-files (fixed count
-    too high for a filtered write) or single-file hotspots (too low).
+    output files (:func:`output_files`).  At 100 TB this is the difference
+    between a dataset of healthy ~512 MB files and either
+    thousands-of-tiny-files (fixed count too high for a filtered write) or
+    single-file hotspots (too low).  When Catalyst cannot size an input of
+    ``df`` (RDD-backed, JDBC) there is no estimate to divide, and the write
+    keeps ``df``'s own partitioning.
 
     ``cluster_by`` sorts WITHIN each output partition before writing (no
     extra shuffle -- a local sort only).  Parquet stores per-row-group
@@ -85,7 +128,7 @@ def write_parquet(
         raise ValueError("cluster_by and zorder_by are mutually exclusive")
     out = df
     if target_mb and not target_files:
-        target_files = max(1, -(-estimated_bytes(df) // (target_mb << 20)))
+        target_files = output_files(df, target_mb << 20)
     if zorder_by:
         from ..functions.zorder import with_zorder_key
 
@@ -141,12 +184,26 @@ def upsert_parquet(
 
     Dataflow: current LEFT ANTI updates on the key (drops the rows being
     replaced), union the updates, write to a staging directory, then swap
-    directories.  The anti join is the only shuffle and carries the
-    current dataset once; with both sides bucketed on the key it is
-    shuffle-free.  The current dataset's schema comes from the Spark row
-    schema in its first footer, read on the driver (:func:`footer_schema`),
-    so the write is the only job; a dataset without one is read with
+    directories.  The anti join broadcasts the update side when Catalyst
+    sizes it under ``spark.sql.autoBroadcastJoinThreshold`` -- a job of its
+    own -- and streams the current dataset through the rewrite with no
+    shuffle; a larger update side is sort-merge joined, which shuffles
+    unless both sides are bucketed on the key.  The current dataset's
+    schema comes from the Spark row schema in its first footer, read on
+    the driver (:func:`footer_schema`); a dataset without one is read with
     Spark's own inference, which costs a job of its own.
+
+    The rewrite is sized by bytes, not by its input splits: it writes one
+    file per split Spark's reader would cut from it (:func:`output_files`,
+    :func:`read_split_bytes`) -- ``spark.sql.files.maxPartitionBytes``
+    for a large dataset; one file per core for a mid-size one, but none
+    smaller than ``spark.sql.files.openCostInBytes`` -- or one per
+    ``target_mb`` when given.  It gets there with ``coalesce``, which
+    merges partitions without a shuffle and never makes more than the plan
+    has.  Without it every upsert would add the update side as one more
+    small file.  The first write of a new dataset follows the same rule.
+    When Catalyst cannot size an input (RDD-backed or JDBC ``updates``)
+    the plan's partitioning is kept.
 
     Crash-safety contract: each parquet write is job-atomic (Spark's
     commit protocol, ``_SUCCESS`` marks completion), and the swap is two
@@ -167,7 +224,9 @@ def upsert_parquet(
     """
     keys = list(key_cols)
     recover_upsert(path)
-    if not os.path.exists(path):
+    staged, retired = _upsert_side_dirs(path)
+    first = not os.path.exists(path)
+    if first:
         # The FIRST write stages too: writing straight to ``path`` would
         # leave a torn final directory (no ``_SUCCESS``) if the job dies
         # mid-write, which recover_upsert's existence check then passes
@@ -176,18 +235,19 @@ def upsert_parquet(
         # dir without ``_SUCCESS`` (swept as "missing") and a crash after
         # the write rolls forward -- the same guarantees as every
         # subsequent upsert.
-        staged, _ = _upsert_side_dirs(path)
-        write_parquet(updates, staged, target_mb=target_mb)
-        os.rename(staged, path)
-        return
-    schema = footer_schema(spark, path)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    current = reader.parquet(path)
-    merged = current.join(updates, keys, "left_anti").unionByName(updates)
-    staged, retired = _upsert_side_dirs(path)
-    write_parquet(merged, staged, target_mb=target_mb)
-    shutil.rmtree(retired, ignore_errors=True)
-    os.rename(path, retired)
+        merged = updates
+    else:
+        schema = footer_schema(spark, path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        current = reader.parquet(path)
+        merged = current.join(updates, keys, "left_anti").unionByName(updates)
+    n = output_files(merged, target_mb << 20 if target_mb else None)
+    if n is not None:
+        merged = merged.coalesce(n)
+    write_parquet(merged, staged)
+    if not first:
+        shutil.rmtree(retired, ignore_errors=True)
+        os.rename(path, retired)
     os.rename(staged, path)
     shutil.rmtree(retired, ignore_errors=True)
 

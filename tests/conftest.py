@@ -34,10 +34,17 @@ def oracle_dir():
     return SF_ORACLE
 
 
+class _Jobs(list):
+    """Job ids, plus ``tasks``: the tasks their stages completed."""
+
+    tasks = 0
+
+
 @pytest.fixture()
 def spark_jobs(spark):
     """``with spark_jobs() as jobs:`` -- on exit, ``jobs`` holds the ids of
-    the Spark jobs this thread launched inside the block."""
+    the Spark jobs this thread launched inside the block, and ``jobs.tasks``
+    the number of tasks those jobs' stages completed."""
     import contextlib
     import uuid
 
@@ -46,7 +53,7 @@ def spark_jobs(spark):
     @contextlib.contextmanager
     def count():
         group = f"count-{uuid.uuid4().hex}"
-        jobs: list[int] = []
+        jobs = _Jobs()
         sc.setJobGroup(group, group)
         try:
             yield jobs
@@ -56,6 +63,11 @@ def spark_jobs(spark):
                 sc.setLocalProperty(k, None)
             # The status tracker is fed asynchronously by the listener bus.
             sc._jsc.sc().listenerBus().waitUntilEmpty()
-            jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+            st = sc.statusTracker()
+            jobs.extend(st.getJobIdsForGroup(group))
+            stages = [s for j in jobs for s in st.getJobInfo(j).stageIds]
+            jobs.tasks = sum(
+                i.numCompletedTasks for i in map(st.getStageInfo, stages) if i
+            )
 
     return count

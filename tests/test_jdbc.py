@@ -79,14 +79,18 @@ def test_type_bridge_can_be_disabled(spark, geo_frame):
 
 
 def test_type_bridge_survives_probe_failure(spark, geo_frame):
-    """A backend without pg_typeof returns the raw frame, not an error."""
+    """A backend without pg_typeof returns the raw frame, not an error, and
+    warns with the probe's error."""
 
     class Failing(StubJDBC):
         def pg_column_types(self, sql):
             raise RuntimeError("no pg_typeof on this backend")
 
     src = Failing(spark, {"*": geo_frame})
-    assert src.query("select * from geo").collect()[0]["pt"] == "(1,2)"
+    with pytest.warns(RuntimeWarning, match="no pg_typeof on this backend"):
+        df = src.query("select * from geo")
+    assert df.schema == geo_frame.schema
+    assert df.collect()[0]["pt"] == "(1,2)"
 
 
 def test_pg_typeof_probe_normalizes_aliases(spark):

@@ -391,3 +391,164 @@ def test_upsert_skips_the_schema_inference_job(
         sinks.upsert_parquet(spark, path, updates, ("k",))
     assert len(footer) == len(inferred) - 1
     assert _read_kv(spark, path) == {(1, "a"), (2, "B"), (3, "c")}
+
+
+# -- the upsert's output sized by bytes ---------------------------------------
+
+
+def _n_files(path):
+    from conecta_spark.sources.parquet import data_files
+
+    return len(data_files(path))
+
+
+def test_repeated_upserts_keep_one_file(spark, tmp_path):
+    """Each upsert writes ceil(estimate / maxPartitionBytes) files, so a
+    small dataset stays one file instead of gaining the update side as a
+    new file per upsert."""
+    from conecta_spark.sources.sinks import upsert_parquet
+
+    path = str(tmp_path / "tbl")
+    base = spark.range(0, 2000, 1, 4).selectExpr("id as k", "id * 3 as v")
+    upsert_parquet(spark, path, base, ("k",))
+    assert _n_files(path) == 1
+    want = {k: k * 3 for k in range(2000)}
+    for i in range(10):
+        lo = 150 * i  # 100 of the 2000 keys: a 5% batch
+        batch = spark.range(lo, lo + 100, 1, 1).selectExpr("id as k", f"{i} as v")
+        upsert_parquet(spark, path, batch, ("k",))
+        want.update((k, i) for k in range(lo, lo + 100))
+        assert _n_files(path) == 1, i
+    got = {r.k: r.v for r in spark.read.parquet(path).collect()}
+    assert got == want
+
+
+def test_upsert_writes_one_file_per_max_partition_bytes(
+    spark, tmp_path, spark_jobs
+):
+    """With maxPartitionBytes below openCostInBytes the file count is
+    ceil(estimated_bytes / maxPartitionBytes), capped by the plan's
+    partitions (coalesce never adds any); the rewrite runs one
+    task per file, and the estimate runs no job."""
+    import math
+
+    from conecta_spark.sources.sinks import estimated_bytes, upsert_parquet
+
+    s2 = spark.newSession()
+    split_conf = "spark.sql.files.maxPartitionBytes"
+    first = s2.range(0, 20000, 1, 8).selectExpr("id as k", "id as v")
+    est = estimated_bytes(first)
+    for split, want in ((-(-est // 3), 3), (1024, 8)):  # 8: first's partitions
+        assert min(math.ceil(est / split), 8) == want
+        s2.conf.set(split_conf, str(split))
+        path = str(tmp_path / f"first{split}")
+        upsert_parquet(s2, path, first, ("k",))
+        assert _n_files(path) == want
+        assert s2.read.parquet(path).count() == 20000
+
+    path = str(tmp_path / "merge")
+    s2.conf.unset(split_conf)
+    s2.range(0, 20000, 1, 6).selectExpr("id as k", "id as v").write.parquet(path)
+    s2.range(19990, 20010, 1, 1).selectExpr("id as k", "-id as v").write.parquet(
+        str(tmp_path / "batch")
+    )
+    updates = s2.read.parquet(str(tmp_path / "batch"))
+
+    def merged():  # the upsert's plan
+        current = s2.read.parquet(path)
+        return current.join(updates, ["k"], "left_anti").unionByName(updates)
+
+    split = -(-estimated_bytes(merged()) // 3)
+    s2.conf.set(split_conf, str(split))
+    plan = merged()  # re-planned: the split size also sets the scan's partitions
+    want = min(math.ceil(estimated_bytes(plan) / split), plan.rdd.getNumPartitions())
+    assert want == 3
+    with spark_jobs() as jobs:
+        upsert_parquet(s2, path, updates, ("k",))
+    assert _n_files(path) == want
+    # The update side's broadcast (one task for its one file), then the
+    # rewrite: one task per output file.
+    assert len(jobs) == 2
+    assert jobs.tasks == 1 + want
+    back = s2.read.parquet(path)
+    assert back.count() == 20010
+    assert back.where("k >= 19990").agg({"v": "sum"}).first()[0] == -sum(
+        range(19990, 20010)
+    )
+
+
+def test_upsert_spreads_a_mid_size_rewrite_over_the_cores(spark, tmp_path):
+    """Below cores x maxPartitionBytes Spark's reader cuts one split per
+    core, and so does the rewrite: a dataset above openCostInBytes is not
+    squeezed into ceil(size / maxPartitionBytes) = 1 task."""
+    from conecta_spark.sources.sinks import estimated_bytes, upsert_parquet
+
+    s2 = spark.newSession()
+    s2.conf.set("spark.sql.files.openCostInBytes", "1")
+    s2.conf.set("spark.sql.files.minPartitionNum", "3")
+    path = str(tmp_path / "tbl")
+    first = s2.range(0, 20000, 1, 8).selectExpr("id as k", "id as v")
+    assert estimated_bytes(first) < s2._jsparkSession.sessionState().conf(
+    ).filesMaxPartitionBytes()
+    upsert_parquet(s2, path, first, ("k",))
+    assert _n_files(path) == 3
+    batch = s2.range(19000, 21000, 1, 1).selectExpr("id as k", "-id as v")
+    upsert_parquet(s2, path, batch, ("k",))
+    assert _n_files(path) == 3
+    back = s2.read.parquet(path)
+    assert back.count() == 21000
+    assert back.where("k >= 19000").agg({"v": "sum"}).first()[0] == -sum(
+        range(19000, 21000)
+    )
+
+
+def test_upsert_target_mb_coalesces_too(spark, tmp_path):
+    """An explicit ``target_mb`` takes the split's place in the same
+    coalesce: ceil(estimate / target_mb) files."""
+    from conecta_spark.sources.sinks import upsert_parquet
+
+    path = str(tmp_path / "tbl")
+    df = spark.range(0, 1000, 1, 4).selectExpr("id as k", "id as v")
+    upsert_parquet(spark, path, df, ("k",), target_mb=1)
+    assert _n_files(path) == 1
+    big = spark.range(0, 300000, 1, 4).selectExpr("id as k", "id as v")
+    upsert_parquet(spark, path, big, ("k",), target_mb=1)
+    # ceil(3.6 MB / 1 MiB) files from a plan of 1 + 4 partitions.
+    assert _n_files(path) == 4
+    assert spark.read.parquet(path).count() == 300000
+
+
+def test_upsert_merges_rdd_backed_updates(spark, tmp_path):
+    """Catalyst cannot size an RDD-backed input -- its estimate is
+    Long.MaxValue, scaled down by projections -- so the merge keeps the
+    plan's partitioning instead of coalescing to a bogus count."""
+    from conecta_spark.sources.sinks import output_files, upsert_parquet
+
+    path = str(tmp_path / "tbl")
+    upsert_parquet(
+        spark, path, spark.range(0, 100, 1, 1).selectExpr("id as k", "0 as v"),
+        ("k",),
+    )
+    rows = [(k, k + 1, "x" * 50) for k in range(90, 110)]
+    updates = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 3), "k long, v long, pad string"
+    ).select("k", "v")
+    assert output_files(updates, 1 << 20) is None
+    upsert_parquet(spark, path, updates, ("k",))
+    got = {r.k: r.v for r in spark.read.parquet(path).collect()}
+    assert got == {k: (k + 1 if k >= 90 else 0) for k in range(110)}
+
+
+def test_write_parquet_target_mb_keeps_partitioning_of_unsized_input(
+    spark, tmp_path
+):
+    """``target_mb`` over an input Catalyst cannot size writes with the
+    input's partitioning (it used to pass a Long to ``repartition``)."""
+    rdd_df = spark.createDataFrame(
+        spark.sparkContext.parallelize([(k, str(k)) for k in range(30)], 3),
+        "k long, v string",
+    )
+    path = str(tmp_path / "out")
+    write_parquet(rdd_df, path, target_mb=128)
+    assert _n_files(path) == 3
+    assert sorted(r.k for r in spark.read.parquet(path).collect()) == list(range(30))
