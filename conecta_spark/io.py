@@ -24,11 +24,10 @@ from .uri import parse_uri
 _BACKENDS = ("spark", "pyarrow", "pandas", "arro3", "nanoarrow", "polars")
 
 
-#: Source pool keyed by (session, connection string) -- the analog of the
-#: reference's connection pool reuse (O2, lib.rs:78-86).  For file-backed
-#: sources this also caches the (expensive) per-table view registration:
-#: rebuilding a 10-table catalog costs ~1s of schema/footer reads per call.
-_SOURCE_POOL: dict[tuple[int, str], Source] = {}
+#: Source pool keyed by (session object, connection string) -- the analog
+#: of the reference's connection pool reuse (O2, lib.rs:78-86).  A catalog
+#: also keeps its registered tables: reloading 10 costs ~1s of footer reads.
+_SOURCE_POOL: dict[tuple[SparkSession, str], Source] = {}
 
 
 def get_source(conn: str | Source, spark: SparkSession | None = None) -> Source:
@@ -39,7 +38,7 @@ def get_source(conn: str | Source, spark: SparkSession | None = None) -> Source:
     if isinstance(conn, Source):
         return conn
     spark = spark or get_session()
-    key = (id(spark), conn)
+    key = (spark, conn)
     src = _SOURCE_POOL.get(key)
     if src is not None:
         return src

@@ -20,13 +20,14 @@ Determinism rules used throughout:
 
 from __future__ import annotations
 
+import weakref
 from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .io import _SOURCE_POOL, get_source
+from .io import get_source
 from .plans.partition import wrap_query_with_bounds
 from .session import tune_session
 from .sources.parquet import ParquetDirSource
@@ -51,12 +52,17 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return deco
 
 
+#: Sessions :func:`catalog` has tuned.
+_TUNED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+
+
 def catalog(spark: SparkSession, sf_dir: str) -> ParquetDirSource:
     """The pooled parquet catalog for (session, dir) (``io.get_source``);
-    tunes the session the first time the pair is seen.  Resolve its tables
-    through ``.query(sql)`` only: temp view names are session-global."""
-    if (id(spark), sf_dir) not in _SOURCE_POOL:
+    tunes the session the first time the registry sees it.  Resolve its
+    tables through ``.query(sql)``."""
+    if spark not in _TUNED:
         tune_session(spark)
+        _TUNED.add(spark)
     return get_source(sf_dir, spark)
 
 

@@ -32,6 +32,7 @@ Nothing of this applies when a JVM already exists.
 from __future__ import annotations
 
 import contextlib
+import functools
 import glob
 import hashlib
 import json
@@ -286,3 +287,34 @@ def tune_session(spark: SparkSession) -> SparkSession:
                                         "CANNOT_MODIFY_STATIC_CONFIG"):
                 raise
     return spark
+
+
+@functools.cache
+def jvm_entry(jvm, path: str):
+    """The JVM class or static method at dotted ``path``, looked up once:
+    each step of a ``jvm.a.b.C`` lookup is a gateway round trip that the
+    JVM answers with a failed class load."""
+    return functools.reduce(getattr, path.split("."), jvm)
+
+
+def copy_sql_conf(child: SparkSession, parent: SparkSession,
+                  pinned: dict[str, str]) -> None:
+    """Give ``child``, a ``parent.newSession()`` that never sees a later
+    ``parent.conf.set``, the SQL conf ``parent`` has now plus ``pinned``.
+    The copy runs in the JVM (Python's ``conf.getAll`` costs ~70 ms) and
+    overwrites keys without a clear, which would briefly show Spark's
+    defaults to a query analysed on ``child``; keys ``parent`` no longer
+    has are unset after."""
+    jvm = parent._jvm
+    as_java = jvm_entry(jvm, "scala.jdk.javaapi.CollectionConverters.asJava")
+    props = jvm_entry(jvm, "java.util.Properties")()
+    props.putAll(as_java(
+        parent._jsparkSession.sessionState().conf().getAllConfs()))
+    for k, v in pinned.items():
+        props.setProperty(k, v)
+    conf = child._jsparkSession.sessionState().conf()
+    conf.setConf(props)
+    if conf.getAllConfs().size() > props.size():  # parent unset a key
+        for k in list(as_java(conf.getAllConfs()).keySet()):
+            if not props.containsKey(k):
+                conf.unsetConf(k)

@@ -45,7 +45,7 @@ class FilesDirSource(ParquetDirSource):
         super().__init__(spark, root)
 
     def _load(self, path: str) -> DataFrame:
-        return self.spark.read.format(self.fmt).options(**self.options).load(path)
+        return self._session.read.format(self.fmt).options(**self.options).load(path)
 
 
 def read_with_quarantine(

@@ -21,29 +21,31 @@ from __future__ import annotations
 
 import os
 import re
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.partition import QueryPartitioningMode
+from ..session import copy_sql_conf, jvm_entry
 from .base import Source
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*$")
 
 
+#: Reads parquet TIMESTAMP(NANOS) as raw longs (see :func:`load_parquet`).
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
 def load_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet`` with nanosecond-timestamp handling.
 
-    Spark rejects parquet TIMESTAMP(NANOS) outright ([PARQUET_TYPE_ILLEGAL]);
-    the driver's ``events`` table uses it.  We read nanos as raw longs
-    (``spark.sql.legacy.parquet.nanosAsLong``) and truncate to microsecond
-    TimestampType -- the same precision the reference uses everywhere
-    (postgres.rs:401-412 truncates to micros).
+    Spark rejects parquet TIMESTAMP(NANOS) outright ([PARQUET_TYPE_ILLEGAL])
+    unless ``spark`` reads them as raw longs (:data:`NANOS_AS_LONG`, which a
+    :class:`ParquetDirSource`'s private session always has); such columns
+    are truncated to microsecond TimestampType -- the same precision the
+    reference uses everywhere (postgres.rs:401-412 truncates to micros).
     """
     ns_cols = _nanos_timestamp_columns(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     for name in ns_cols:
         if name in df.columns:
@@ -67,7 +69,7 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
         target = os.path.join(path, inner[0])
     try:
         schema = pq.read_schema(target)
-    except Exception:
+    except (OSError, pa.ArrowInvalid):
         return []
     return [
         f.name
@@ -156,16 +158,13 @@ def _listing(path: str) -> tuple:
     return tuple(sorted(entries))
 
 
-#: Guards temp-view re-pointing plus analysis in :meth:`ParquetDirSource.query`.
-_VIEW_LOCK = threading.Lock()
-
-
 class ParquetDirSource(Source):
-    """Register every ``*.parquet`` under ``root`` as a temp view named after
-    the file stem, then answer SQL over those views.  Temp view names are
-    session-global, so two catalogs that both hold ``lineitem`` share one
-    view: :meth:`query` re-points the views a statement names and analyses
-    it under one lock.
+    """Every ``*.parquet`` under ``root`` as a table named after the file
+    stem, each a temp view of this catalog's private ``spark.newSession()``
+    registered on first use.  :meth:`query` analyses SQL there, under the
+    caller's SQL conf as it is at call time, and returns a DataFrame of the
+    caller's session.  The SQL sees this catalog's tables and Spark's
+    built-in functions, not the caller's temp views or functions.
 
     ``EXT``/``_load`` are the format hooks; :class:`conecta_spark.sources
     .files.FilesDirSource` reuses everything else for csv/json/orc."""
@@ -185,50 +184,44 @@ class ParquetDirSource(Source):
                     self.tables[stem] = os.path.join(self.root, name)
         if not self.tables:
             raise ValueError(f"no *{self.EXT} tables found under {root!r}")
-        #: Per table, its loaded DataFrame, and its :func:`_listing` when
-        #: that was loaded or last refreshed.
-        self._frames: dict[str, DataFrame] = {}
+        self._session = spark.newSession()
+        #: Per registered table, its :func:`_listing` when it was loaded or
+        #: last refreshed.
         self._listings: dict[str, tuple] = {}
 
     def _load(self, path: str) -> DataFrame:
-        return load_parquet(self.spark, path)
+        return load_parquet(self._session, path)
 
-    def _point(self, stems) -> None:
-        """Point the views ``stems`` at this source's tables, loading each
-        table once; re-list a table's files (``refreshTable``, no job) when
-        they changed since (an ``upsert_parquet`` swaps a table's whole
-        directory), so a read returns what the files hold at call time and
-        sees the same files as the footer MIN/MAX probe.  Caller holds
-        :data:`_VIEW_LOCK`."""
-        for stem in stems:
-            path = self.tables[stem]
-            now = _listing(path)
-            df = self._frames.get(stem)
-            if df is None:
-                df = self._frames[stem] = self._load(path)
-                self._listings[stem] = now
-            df.createOrReplaceTempView(stem)
-            if self._listings[stem] != now:
-                self.spark.catalog.refreshTable(stem)
-                self._listings[stem] = now
+    def _register(self, stem: str) -> None:
+        """Register table ``stem``'s view on first use; re-list its files
+        (``refreshTable``, no job) when they changed since (an
+        ``upsert_parquet`` swaps a table's whole directory), so a read
+        returns what the files hold at call time and sees the same files
+        as the footer MIN/MAX probe."""
+        now = _listing(self.tables[stem])
+        seen = self._listings.get(stem)
+        if seen is None:
+            self._load(self.tables[stem]).createOrReplaceTempView(stem)
+        elif seen != now:
+            self._session.catalog.refreshTable(stem)
+        self._listings[stem] = now
 
     def register_views(self) -> None:
-        """Point every view of this catalog at this source's tables."""
-        with _VIEW_LOCK:
-            self._point(self.tables)
+        """Publish every table of this catalog as a temp view of the
+        caller's session.  The engine never reads these views."""
+        for stem in self.tables:
+            self.query(f"select * from {stem}").createOrReplaceTempView(stem)
 
     def query(self, sql: str) -> DataFrame:
-        """Run ``sql`` over this catalog: the views it names are re-pointed
-        at this source's tables and the statement is analysed under one
-        lock, so its plan is pinned to these files before another catalog
-        can claim the view names."""
-        named = [
-            stem for stem in self.tables
-            if re.search(rf"\b{stem}\b", sql, re.I)
-        ]
-        with _VIEW_LOCK:
-            self._point(named)
-            return self.spark.sql(sql)
+        """Run ``sql`` over this catalog (see the class docstring)."""
+        copy_sql_conf(self._session, self.spark, {NANOS_AS_LONG: "true"})
+        for stem in self.tables:
+            if re.search(rf"\b{stem}\b", sql, re.I):
+                self._register(stem)
+        of_rows = jvm_entry(
+            self.spark._jvm, "org.apache.spark.sql.classic.Dataset.ofRows")
+        plan = self._session.sql(sql)._jdf.logicalPlan()
+        return DataFrame(of_rows(self.spark._jsparkSession, plan), self.spark)
 
     #: ``select * | a, b, ... from <table>``: the query reads every row of
     #: one catalog table, so the table's footers bound its columns.

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..queries import dsum, epoch_micros, register, t, DSUM
+from ..session import copy_sql_conf
+from ..sources.parquet import NANOS_AS_LONG, _nanos_timestamp_columns
 
 SESSION_GAP_US = 1_800_000_000  # 30 min in microseconds
 
@@ -174,20 +176,17 @@ def _stage_stream_dir(src: str, prefix: str) -> str:
 
 
 def read_event_stream(spark, sf_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    """readStream over the events parquet (nanos ts handled like the batch
-    reader: nanosAsLong + truncate to micros).
+    """readStream over the events parquet.  A TIMESTAMP(NANOS) ``ts`` (older
+    testdata) needs :data:`NANOS_AS_LONG` on ``spark``, which is set only
+    when the file stores one, and is truncated to micros.
 
     Spark's file-stream source requires a *directory*; the testdata is a
     single read-only file, so we stage a symlink directory under /tmp.  On a
     real deployment the source is already a directory of files landing over
     time and this staging disappears."""
-    import os
-
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
     src_file = os.path.join(sf_dir, "events.parquet")
+    if _nanos_timestamp_columns(src_file):
+        spark.conf.set(NANOS_AS_LONG, "true")
     stage = _stage_stream_dir(src_file, "events")
     # The streaming source must see the on-disk schema.  Historically the
     # testdata stored ts as TIMESTAMP(NANOS) (surfaced as raw long ns via
@@ -617,25 +616,13 @@ def _stream_session(spark, shuffle_partitions: int):
     """A child SparkSession (shared SparkContext, isolated SQLConf) for
     running one streaming query with its own state-partition count --
     session-global conf mutation would leak the override into any query
-    planned concurrently (bench alongside driver).  The two
-    semantics-bearing confs are copied from the parent explicitly
-    because newSession() falls back to SparkConf, which does not see
-    runtime conf applied to a pre-existing parent."""
+    planned concurrently (bench alongside driver).  It gets the parent's
+    SQL conf as it is at call time (:func:`copy_sql_conf`), plus the
+    override."""
     key = (spark.sparkContext.applicationId, shuffle_partitions)
     sess = _STREAM_SESSIONS.get(key)
     if sess is None:
         sess = spark.newSession()
-        for conf_key in (
-            "spark.sql.session.timeZone",
-            "spark.sql.parquet.inferTimestampNTZ.enabled",
-        ):
-            try:
-                sess.conf.set(conf_key, spark.conf.get(conf_key))
-            except Exception:
-                pass
-        sess.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
         # evict only DEAD-app entries: same-app sessions with other
         # partition counts are exactly what this cache exists to reuse
         # (alternating derived counts in one process must not thrash a
@@ -648,17 +635,14 @@ def _stream_session(spark, shuffle_partitions: int):
             old_sess = _STREAM_SESSIONS.pop(stale_key)
             old_view = _STREAM_LAST_VIEW.pop(stale_key, None)
             if old_view is not None:
-                try:
-                    old_sess.catalog.dropTempView(old_view)
-                except Exception:
-                    pass
+                old_sess.catalog.dropTempView(old_view)
         _STREAM_SESSIONS[key] = sess
+    copy_sql_conf(
+        sess, spark, {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
+    )
     prev_view = _STREAM_LAST_VIEW.pop(key, None)
     if prev_view is not None:
-        try:
-            sess.catalog.dropTempView(prev_view)
-        except Exception:
-            pass
+        sess.catalog.dropTempView(prev_view)
     return sess
 
 

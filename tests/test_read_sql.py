@@ -360,8 +360,8 @@ def test_read_sql_after_upsert_sees_merged_rows(spark, tmp_path):
 
 
 def test_nanos_conf_is_set_only_for_nanos_columns(spark, tmp_path):
-    """``load_parquet`` sets ``nanosAsLong`` on the session only when a table
-    stores TIMESTAMP(NANOS); such a column still reads as microseconds."""
+    """A catalog never sets ``nanosAsLong`` on the caller's session, and a
+    TIMESTAMP(NANOS) column still reads as microseconds."""
     import pyarrow.parquet as pq
 
     from conecta_spark.sources.parquet import ParquetDirSource
@@ -382,5 +382,95 @@ def test_nanos_conf_is_set_only_for_nanos_columns(spark, tmp_path):
     got = ParquetDirSource(s, str(nanos)).query(
         "select unix_micros(ts) as us from e"
     ).collect()
-    assert s.conf.get(key, None) == "true"
+    assert s.conf.get(key, None) is None
     assert got[0].us == 1_000_001
+
+
+def _catalog(tmp_path, **tables):
+    import pyarrow.parquet as pq
+
+    for name, ks in tables.items():
+        pq.write_table(pa.table({"k": pa.array(ks, pa.int64())}),
+                       str(tmp_path / f"{name}.parquet"))
+    return str(tmp_path)
+
+
+def test_catalog_tables_stay_out_of_the_callers_session(spark, tmp_path):
+    """``read_sql`` over a catalog leaves no temp view in the caller's
+    session: the tables live in the catalog's private session."""
+    d = _catalog(tmp_path, own_t1=[1, 2], own_t2=[3])
+    s = spark.newSession()
+    assert read_sql(d, "select * from own_t1 union all select * from own_t2",
+                    spark=s).count() == 3
+    assert [t.name for t in s.catalog.listTables()] == []
+
+
+def test_catalog_plans_under_the_callers_conf_at_call_time(spark, tmp_path):
+    """A conf change on the caller after its catalog was pooled, a set or
+    an unset, applies to the catalog's SQL text: ANSI makes a bad cast
+    fail instead of returning NULL."""
+    key = "spark.sql.ansi.enabled"
+    d = _catalog(tmp_path, t=[1])
+    s = spark.newSession()
+    q = "select cast('a' as int) as v from t"
+    s.conf.set(key, "true")
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        read_sql(d, q, spark=s).collect()
+    s.conf.set(key, "false")
+    assert read_sql(d, q, spark=s).collect()[0].v is None
+    s.conf.unset(key)  # back to Spark's default, on
+    assert s.conf.get(key) == "true"
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        read_sql(d, q, spark=s).collect()
+
+
+def test_catalog_result_belongs_to_the_caller(spark, tmp_path):
+    """A result is a DataFrame of the caller's session: a function the
+    caller registered resolves in ``selectExpr`` on it."""
+    d = _catalog(tmp_path, t=[1, 2])
+    s = spark.newSession()
+    s.udf.register("plus_one", lambda k: k + 1, "long")
+    got = read_sql(d, "select k from t", spark=s).selectExpr("plus_one(k) as v")
+    assert sorted(r.v for r in got.collect()) == [2, 3]
+
+
+def test_published_views_follow_an_upsert(spark, tmp_path):
+    """``register_views`` publishes the catalog's tables in the caller's
+    session; after an upsert and the caller's ``refreshTable`` both the
+    published view and the catalog read the merged rows."""
+    from conecta_spark.sources.parquet import ParquetDirSource
+    from conecta_spark.sources.sinks import upsert_parquet
+
+    s = spark.newSession()
+    path = str(tmp_path / "accounts.parquet")
+    upsert_parquet(
+        s, path, s.createDataFrame([(1, 10), (2, 20)], "k long, v long"), ["k"],
+    )
+    src = ParquetDirSource(s, str(tmp_path))
+    src.register_views()
+    upsert_parquet(
+        s, path, s.createDataFrame([(2, 21), (3, 30)], "k long, v long"), ["k"],
+    )
+    s.catalog.refreshTable("accounts")
+    want = [(1, 10), (2, 21), (3, 30)]
+    got = s.sql("select k, v from accounts").collect()
+    assert sorted((r.k, r.v) for r in got) == want
+    got = read_sql(src, "select k, v from accounts", spark=s).collect()
+    assert sorted((r.k, r.v) for r in got) == want
+
+
+def test_source_pool_serves_the_session_asked_for(spark, tmp_path):
+    """Sessions made, dropped and garbage-collected in turn each get a
+    pooled source of their own session, never one of an earlier session."""
+    import gc
+
+    from conecta_spark.io import get_source
+
+    d = _catalog(tmp_path, t=[1])
+    for _ in range(4):
+        s = spark.newSession()
+        src = get_source(d, s)
+        assert src.spark is s
+        assert src.query("select k from t").sparkSession is s
+        del s, src
+        gc.collect()

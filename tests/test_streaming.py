@@ -773,6 +773,14 @@ def test_stream_session_cache_keeps_same_app_entries(spark):
     assert not any(v.name == "dead_app_view" for v in s4.catalog.listTables())
 
 
+def test_event_stream_sets_nanos_conf_only_for_nanos_files(spark, sf_dir):
+    """The testdata's ``events.ts`` is ``timestamp[us]``: opening the
+    stream leaves ``nanosAsLong`` unset on the caller's session."""
+    s = spark.newSession()
+    read_event_stream(s, sf_dir)
+    assert s.conf.get("spark.sql.legacy.parquet.nanosAsLong", None) is None
+
+
 def test_source_fingerprint_sees_part_rewrite(spark, tmp_path):
     """An in-place part rewrite with identical filenames must change the
     source fingerprint: the x76 state probe sized state partitions from
