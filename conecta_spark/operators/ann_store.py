@@ -6,8 +6,8 @@ trains the coarse quantizer and re-assigns the WHOLE corpus on every
 run -- one full embedding scan per session just to rebuild state that
 never changed.  At a steady 100 TB corpus with a small daily crawl that
 rebuild dwarfs both the append and the search.  This module persists
-the index once, mirroring the MinHash signature store
-(operators/minhash_store.py) artifact discipline exactly:
+the index once, on the same manifest-committed batch store as the
+MinHash signature store (:mod:`.store`):
 
 * :func:`write_ann_store` -- one :func:`build_ivf_index` pass (sample-
   trained quantizer + one distributed assignment), written as a
@@ -22,14 +22,14 @@ the index once, mirroring the MinHash signature store
   :func:`..operators.simsearch.ivf_search_batch` over it, so a stored
   search is result-identical to a fresh in-memory rebuild BY
   CONSTRUCTION (pinned in tests/test_ann_store.py);
-* :func:`compact_ann_store` -- folds applied batch dirs into a
-  generation-suffixed base relation (manifest-last swap), keeping
-  read-side file-listing cost flat as daily appends accumulate;
+* :func:`compact_ann_store` -- folds applied batch dirs into the next
+  base generation, keeping read-side file-listing cost flat as daily
+  appends accumulate;
 * :func:`recluster_ann_store` -- the drift half: retrains the quantizer
   and re-assigns FROM THE STORED VECTORS (the source corpus is never
   re-read), bit-identical to a fresh build by construction, resetting
-  ``n_appended`` at a generation bump -- the ANN analog of the
-  signature store's ``refreeze_common``.
+  ``n_appended`` -- the ANN analog of the signature store's
+  ``refreeze_common``.
 
 Frozen-centroid semantics -- the deliberate analog of the signature
 store's frozen-DF table: centroids train once at build time and every
@@ -37,18 +37,21 @@ appended batch is assigned against them verbatim.  That is what makes
 the append O(batch); retraining would re-scan the corpus.  The trade is
 the same bounded drift: as appends shift the data distribution, cell
 balance (and so recall-at-fixed-probe) degrades -- the manifest tracks
-``n_appended`` vs ``n_vecs`` at build, and the guidance mirrors the
-signature store's: rebuild (or re-run :func:`write_ann_store`) when
-cumulative appends exceed ~10-20% of the corpus.
+``n_appended`` vs ``n_vecs`` at build; recluster when cumulative
+appends exceed ~10-20% of the corpus.
 
-Crash discipline (shared with the signature store): every mutator holds
-an exclusive flock; relations are written first and the atomic manifest
-replace is the commit; batch dirs rename-then-commit so a crash is
-healed by retrying the same ``batch_id``; a batch id stays committed
-forever (``applied_batches`` OR ``compacted_batches``), so replays
-never double-append; superseded generation/batch dirs survive a grace
-window (readers take no lock) and age out of the next compaction's
-sweep.
+Store layout (all paths under ``path/``; generations, batch dirs and the
+crash discipline are :mod:`.store`'s)::
+
+    manifest.json    params (n_clusters, dim, vec_col, id_col, seed),
+                     n_vecs at build or last recluster, n_appended since
+    assigned/        (id, v array<double>, cell) parquet, repartitioned
+                     by cell so a probe is a row-group-skipping scan
+    centroids.json   the frozen centroid matrix (the side artifact);
+                     centroids-g<N>.json after N reclusters, so a reader
+                     holding the old manifest keeps routing with the old
+                     matrix against the old cell numbering
+    batches/<id>/    per-append assigned dirs
 
 Reference parity note: the reference engine has no vector index; this
 extends its surface with the ANN operation a training-data pipeline
@@ -63,7 +66,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .minhash_store import _store_lock, _write_manifest
+from . import store
 from .simsearch import (
     IVFIndex,
     assign_cells,
@@ -71,76 +74,59 @@ from .simsearch import (
     ivf_search_batch,
     valid_vectors,
 )
+from .store import MANIFEST as ANN_MANIFEST  # noqa: F401
 
-ANN_MANIFEST = "manifest.json"
 ANN_STORE_VERSION = 1
 CENTROIDS = "centroids.json"
 
-#: Superseded dirs survive this long before the next compaction's sweep
-#: removes them -- same reader-grace rationale (and bound) as
-#: minhash_store._SWEEP_GRACE_NS.
-_ANN_SWEEP_GRACE_NS = 3600 * 1_000_000_000
-
-
-def _manifest_path(path: str) -> str:
-    return os.path.join(path, ANN_MANIFEST)
+_LAYOUT = store.Layout(
+    label="ANN store",
+    version=ANN_STORE_VERSION,
+    relations=("assigned",),
+    side=CENTROIDS,
+    side_key="centroid_generation",
+    cache_root="/tmp/conecta_spark_annstore",
+)
 
 
 def read_ann_manifest(path: str) -> dict:
-    with open(_manifest_path(path)) as f:
-        m = json.load(f)
-    if m.get("version") != ANN_STORE_VERSION:
-        raise ValueError(
-            f"ANN store at {path}: version {m.get('version')} "
-            f"!= supported {ANN_STORE_VERSION}"
-        )
-    return m
-
-
-def _assigned_dir(path: str, m: dict) -> str:
-    gen = m.get("generation", 0)
-    return os.path.join(
-        path, "assigned" if gen == 0 else f"assigned-g{gen}"
-    )
-
-
-def _committed(m: dict) -> set:
-    return set(m.get("applied_batches", [])) | set(
-        m.get("compacted_batches", [])
-    )
+    return store.read_manifest(_LAYOUT, path)
 
 
 def _assigned_relation(spark: SparkSession, path: str, m: dict) -> DataFrame:
-    """Current generation's base relation plus every APPLIED batch dir
-    (manifest-listed; an unlisted dir is an uncommitted append and must
-    be invisible)."""
-    paths = [_assigned_dir(path, m)] + [
-        os.path.join(path, "batches", b, "assigned")
-        for b in m.get("applied_batches", [])
-    ]
-    return spark.read.parquet(*paths)
-
-
-def _centroids_file(path: str, m: dict) -> str:
-    """Centroid matrix file for the manifest's centroid generation:
-    ``centroids.json`` at generation 0 (every pre-recluster store),
-    ``centroids-g<N>.json`` after N reclusters.  Generation-suffixed like
-    the signature store's ``common-g<N>``, and for the same reason:
-    readers take no lock, and a reader that routed a query with the OLD
-    centroid matrix must keep resolving against the OLD assignment --
-    cells are renumbered by a recluster, so an unversioned overwrite
-    would let stale routing meet fresh cell ids mid-search."""
-    cg = m.get("centroid_generation", 0)
-    return os.path.join(
-        path, CENTROIDS if cg == 0 else f"centroids-g{cg}.json"
-    )
+    return store.relation(spark, path, m, "assigned")
 
 
 def read_centroids(path: str, m: dict | None = None):
     if m is None:
         m = read_ann_manifest(path)
-    with open(_centroids_file(path, m)) as f:
+    with open(store.side_path(_LAYOUT, path, m)) as f:
         return [list(map(float, c)) for c in json.load(f)]
+
+
+def _write_assigned(assigned: DataFrame, dst: str) -> None:
+    assigned.repartition(
+        assigned.sparkSession.sparkContext.defaultParallelism, "cell"
+    ).write.mode("overwrite").parquet(dst)
+
+
+def _write_index(index: IVFIndex, out: dict) -> None:
+    """Write an index's cell-partitioned assignment and its centroid
+    matrix to ``out``'s paths."""
+    _write_assigned(index.assigned, out["assigned"])
+    store.write_json(
+        out[CENTROIDS], [[float(x) for x in c] for c in index.centers]
+    )
+
+
+def _double_vecs(df: DataFrame, m: dict, id_as: str, vec_as: str) -> DataFrame:
+    """The valid (id, vector as array<double>) rows of ``df``."""
+    return valid_vectors(df, m["vec_col"], m["id_col"]).select(
+        F.col(m["id_col"]).alias(id_as),
+        F.expr(f"transform({m['vec_col']}, x -> CAST(x AS DOUBLE))").alias(
+            vec_as
+        ),
+    )
 
 
 def write_ann_store(
@@ -158,25 +144,11 @@ def write_ann_store(
     with the assigned relation written repartitioned by ``cell`` --
     searches prefilter on cell, so cell-clustered files turn the probe
     into a row-group-skipping scan of ~n_probe/n_clusters of the data.
-
-    Manifest written LAST (a crashed build reads as absent); rebuilding
-    over an existing store removes its manifest and batch dirs first,
-    exactly like the signature store's rebuild."""
-    import re
-    import shutil
-
+    Rebuilding over an existing store drops its batches and
+    generations, like the signature store's rebuild."""
     spark = df.sparkSession
-    parallelism = spark.sparkContext.defaultParallelism
-    with _store_lock(path):
-        if os.path.exists(_manifest_path(path)):
-            os.remove(_manifest_path(path))
-        shutil.rmtree(os.path.join(path, "batches"), ignore_errors=True)
-        for entry in os.listdir(path) if os.path.isdir(path) else []:
-            if re.match(r"^assigned-g\d+$", entry):
-                shutil.rmtree(os.path.join(path, entry), ignore_errors=True)
-            elif re.match(r"^centroids-g\d+\.json$", entry):
-                os.remove(os.path.join(path, entry))
 
+    def write(out: dict) -> dict:
         if valid_vectors(df, vec_col, id_col).isEmpty():
             raise ValueError(
                 "write_ann_store: corpus has no valid vectors"
@@ -189,24 +161,12 @@ def write_ann_store(
             seed=seed,
         )
         try:
-            index.assigned.repartition(parallelism, "cell").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(path, "assigned"))
-            n_vecs = spark.read.parquet(
-                os.path.join(path, "assigned")
-            ).count()
+            _write_index(index, out)
+            n_vecs = spark.read.parquet(out["assigned"]).count()
             dim = len(index.centers[0])
-            tmp = os.path.join(path, f".{CENTROIDS}.tmp")
-            with open(tmp, "w") as f:
-                json.dump(
-                    [[float(x) for x in c] for c in index.centers], f
-                )
-            os.replace(tmp, os.path.join(path, CENTROIDS))
         finally:
             index.unpersist()
-
-        manifest = {
-            "version": ANN_STORE_VERSION,
+        return {
             "n_clusters": int(n_clusters),
             "dim": int(dim),
             "vec_col": vec_col,
@@ -214,11 +174,9 @@ def write_ann_store(
             "seed": int(seed),
             "n_vecs": int(n_vecs),
             "n_appended": 0,
-            "applied_batches": [],
-            **(manifest_extra or {}),
         }
-        _write_manifest(path, manifest)
-    return manifest
+
+    return store.build(_LAYOUT, path, write, manifest_extra)
 
 
 def append_ann_batch(
@@ -230,69 +188,41 @@ def append_ann_batch(
 ) -> dict:
     """Assign a new batch against the STORED centroids (frozen-centroid
     semantics -- no retrain, no corpus rescan) and fold it in as one
-    batch directory, committed by the manifest.
+    batch directory, committed by the manifest with ``n_appended``
+    booked from the committed files.  Idempotent by ``batch_id``
+    (:func:`.store.append`): pass a stable id (e.g. the ingest date) for
+    retry safety.  ``validate_ids`` rejects a batch sharing ids with the
+    store before anything is written; a heal-retry adopts its
+    already-validated dir."""
 
-    Same idempotency contract as the signature store's append: build in
-    a temp dir, atomic rename to ``batches/<batch_id>/``, manifest
-    commit (re-read + merge) under the store flock; a retry of a
-    committed id -- applied OR already folded by a compaction -- is a
-    no-op, so pass a stable ``batch_id`` (e.g. the ingest date) for
-    retry safety."""
-    import shutil
-    import uuid
-
-    m = read_ann_manifest(store_path)
-    if batch_id is None:
-        batch_id = uuid.uuid4().hex[:12]
-    if batch_id in _committed(m):
-        return m  # already committed: idempotent no-op
-    id_col, vec_col = m["id_col"], m["vec_col"]
-    new_vecs = valid_vectors(new_df, vec_col, id_col).select(
-        F.col(id_col),
-        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("v"),
-    )
-    if validate_ids:
-        overlap = (
-            _assigned_relation(spark, store_path, m)
-            .select(id_col)
-            .join(
-                F.broadcast(new_vecs.select(id_col).distinct()),
-                id_col,
-                "left_semi",
+    def write(m: dict, batch_dir: str) -> None:
+        id_col = m["id_col"]
+        new_vecs = _double_vecs(new_df, m, id_col, "v")
+        if validate_ids:
+            overlap = (
+                _assigned_relation(spark, store_path, m)
+                .select(id_col)
+                .join(
+                    F.broadcast(new_vecs.select(id_col).distinct()),
+                    id_col,
+                    "left_semi",
+                )
             )
-        )
-        if not overlap.isEmpty():
-            sample = [r[0] for r in overlap.limit(5).collect()]
-            raise ValueError(
-                f"append_ann_batch: store at {store_path} and new_df "
-                f"share vector ids (e.g. {sample}); ids must be disjoint"
-            )
-
-    batches_root = os.path.join(store_path, "batches")
-    final_dir = os.path.join(batches_root, batch_id)
-    if not os.path.isdir(final_dir):
-        tmp = os.path.join(batches_root, f".tmp-{uuid.uuid4().hex[:12]}")
+            if not overlap.isEmpty():
+                sample = [r[0] for r in overlap.limit(5).collect()]
+                raise ValueError(
+                    f"append_ann_batch: store at {store_path} and new_df "
+                    f"share vector ids (e.g. {sample}); ids must be disjoint"
+                )
         assign_cells(
             new_vecs, read_centroids(store_path, m), id_col
-        ).write.mode("overwrite").parquet(os.path.join(tmp, "assigned"))
-        try:
-            os.rename(tmp, final_dir)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(final_dir):
-                raise
-    # stats from the COMMITTED files (heal-retry books what's on disk)
-    n_new = spark.read.parquet(os.path.join(final_dir, "assigned")).count()
-    with _store_lock(store_path):
-        m = read_ann_manifest(store_path)
-        if batch_id in _committed(m):
-            return m  # racing retry/compaction committed first: no-op
-        m["applied_batches"] = list(m.get("applied_batches", [])) + [
-            batch_id
-        ]
-        m["n_appended"] = int(m.get("n_appended", 0)) + int(n_new)
-        _write_manifest(store_path, m)
-    return m
+        ).write.mode("overwrite").parquet(os.path.join(batch_dir, "assigned"))
+
+    def book(batch_dir: str) -> dict:
+        n = spark.read.parquet(os.path.join(batch_dir, "assigned")).count()
+        return {"n_appended": n}
+
+    return store.append(_LAYOUT, store_path, batch_id, write, book)
 
 
 def ann_store_search(
@@ -320,29 +250,17 @@ def ann_store_search(
 
 def compact_ann_store(spark: SparkSession, store_path: str) -> dict:
     """Fold every applied batch into the base relation -- retention for
-    the daily loop, same generation + manifest-last + grace-sweep
-    discipline as the signature store's :func:`compact_store` (see its
-    docstring for the crash/reader analysis; it applies verbatim).
-    Purely physical: the folded relation holds exactly base + batches
-    (repartitioned by cell), centroids are untouched, and ``n_appended``
-    keeps its drift-signal meaning."""
-    parallelism = spark.sparkContext.defaultParallelism
-    with _store_lock(store_path):
-        m = read_ann_manifest(store_path)
-        _sweep_unreferenced_ann(store_path, m)
-        if not m.get("applied_batches"):
-            return m  # nothing to fold: sweep-only pass
-        new_gen = m.get("generation", 0) + 1
-        rel = _assigned_relation(spark, store_path, m)
-        rel.repartition(parallelism, "cell").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(store_path, f"assigned-g{new_gen}"))
-        folded = list(m["applied_batches"])
-        m["generation"] = new_gen
-        m["applied_batches"] = []
-        m["compacted_batches"] = m.get("compacted_batches", []) + folded
-        _write_manifest(store_path, m)
-    return m
+    the daily loop (:func:`.store.fold`; on a store with no applied
+    batches, a sweep-only pass).  Purely physical: the folded relation
+    holds exactly base + batches (repartitioned by cell), centroids are
+    untouched, and ``n_appended`` keeps its drift-signal meaning."""
+
+    def write(m: dict, out: dict) -> None:
+        _write_assigned(
+            _assigned_relation(spark, store_path, m), out["assigned"]
+        )
+
+    return store.fold(_LAYOUT, store_path, write)
 
 
 def _probe_cells(qvecs: DataFrame, centers, n_probe: int) -> DataFrame:
@@ -435,69 +353,45 @@ def stream_assign_and_append(
     trigger: dict | None = None,
 ):
     """Structured-Streaming ingestion for the ANN store -- the
-    similarity twin of minhash_store.stream_mine_and_append, sharing its
-    exactly-once machinery verbatim: each micro-batch of embeddings is
-    SCREENED against the current store (:func:`ivf_search_new`: every
-    arriving vector's top-k stored neighbors -- the SemDeDup/
-    decontamination-on-arrival shape) and then appended against the
-    frozen stored centroids, inside one ``foreachBatch`` sink.
+    similarity twin of minhash_store.stream_mine_and_append, on the same
+    ``foreachBatch`` driver (:func:`.store.stream_batches`): each
+    micro-batch of embeddings is SCREENED against the current store
+    (:func:`ivf_search_new`: every arriving vector's top-k stored
+    neighbors -- the SemDeDup/decontamination-on-arrival shape) and then
+    appended against the frozen stored centroids.
 
     The default trigger is ``availableNow``; pass
     ``trigger={"processingTime": ...}`` for a continuous run over a
     growing source (the call then RETURNS the live StreamingQuery for
-    the caller to stop -- the sink body is trigger-agnostic).
-    Idempotency: the batch id is the streaming epoch scoped to the
-    checkpoint lineage (minhash_store.stream_batch_id), checked against
-    the manifest's committed set (applied OR compacted), so a replayed
-    epoch is a no-op; neighbor sets land one parquet dir per epoch
-    (``neighbors_path/<batch_id>/``, mode=overwrite -- exactly-once BY
-    PATH), and the store append is exactly-once by manifest.  Neighbors
-    are computed against the store BEFORE the batch joins it:
-    intra-batch duplicates are the NEXT epoch's problem by design,
-    exactly like the signature store's new-driven mine."""
-    from .minhash_store import stream_batch_id
+    the caller to stop).  Neighbor sets land one parquet dir per epoch
+    (``neighbors_path/<batch_id>/``).  Neighbors are computed against
+    the store BEFORE the batch joins it: intra-batch duplicates are the
+    NEXT epoch's problem by design, exactly like the signature store's
+    new-driven mine."""
 
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        sess = batch_df.sparkSession
-        batch_id = stream_batch_id(checkpoint, epoch_id)
-        m = read_ann_manifest(store_path)
-        if batch_id in _committed(m):
-            return  # replayed epoch: already screened AND appended
-        id_col, vec_col = m["id_col"], m["vec_col"]
-        qvecs = valid_vectors(batch_df, vec_col, id_col).select(
-            F.col(id_col).alias("query_id"),
-            F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias(
-                "qv"
-            ),
-        )
+    def screen(sess: SparkSession, m: dict, batch_df: DataFrame) -> DataFrame:
         index = IVFIndex(
             _assigned_relation(sess, store_path, m),
             read_centroids(store_path, m),
-            id_col,
+            m["id_col"],
         )
-        ivf_search_new(index, qvecs, k=k, n_probe=n_probe).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(neighbors_path, batch_id))
-        append_ann_batch(sess, store_path, batch_df, batch_id=batch_id)
+        return ivf_search_new(
+            index, _double_vecs(batch_df, m, "query_id", "qv"), k=k,
+            n_probe=n_probe,
+        )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(
-            **(trigger if trigger is not None else {"availableNow": True})
-        )
-        .start()
+    return store.stream_batches(
+        _LAYOUT,
+        stream_df,
+        store_path,
+        neighbors_path,
+        checkpoint,
+        screen,
+        append_ann_batch,
+        await_seconds,
+        trigger,
+        "stream_assign_and_append",
     )
-    if trigger is not None and "availableNow" not in trigger:
-        return q  # continuous run: the caller owns the stop
-    if not q.awaitTermination(await_seconds):
-        q.stop()
-        raise RuntimeError(
-            f"stream_assign_and_append did not terminate in {await_seconds}s"
-        )
-    return None
 
 
 def recluster_ann_store(
@@ -520,110 +414,37 @@ def recluster_ann_store(
     tests/test_ann_store.py::test_recluster_equals_fresh_build).  The
     source corpus is never touched.
 
-    Commit discipline is the shared one: new assignment written as the
-    next generation, new centroid matrix as the next
-    ``centroids-g<N>.json`` (readers holding the old manifest keep
-    routing old centroids against the old generation), manifest-last
-    swap under the store flock; ``n_vecs`` absorbs ``n_appended``,
-    which resets to 0, and superseded dirs age out of the next
-    mutator's grace sweep."""
-    parallelism = spark.sparkContext.defaultParallelism
-    with _store_lock(store_path):
-        m = read_ann_manifest(store_path)
-        _sweep_unreferenced_ann(store_path, m)
-        new_gen = m.get("generation", 0) + 1
-        new_cg = m.get("centroid_generation", 0) + 1
-        id_col = m["id_col"]
-        k_cells = int(n_clusters or m["n_clusters"])
+    The new assignment and centroid matrix are the next generation of
+    both (:func:`.store.fold`); ``n_vecs`` absorbs ``n_appended``, which
+    resets to 0."""
 
+    def write(m: dict, out: dict) -> dict:
+        k_cells = int(n_clusters or m["n_clusters"])
         rel = _assigned_relation(spark, store_path, m)
         index = build_ivf_index(
             rel,
             n_clusters=k_cells,
-            id_col=id_col,
+            id_col=m["id_col"],
             seed=int(m["seed"]),
             feat=rel,
         )
         try:
-            index.assigned.repartition(parallelism, "cell").write.mode(
-                "overwrite"
-            ).parquet(os.path.join(store_path, f"assigned-g{new_gen}"))
-            tmp = os.path.join(store_path, f".centroids-g{new_cg}.tmp")
-            with open(tmp, "w") as f:
-                json.dump(
-                    [[float(x) for x in c] for c in index.centers], f
-                )
-            os.replace(
-                tmp, os.path.join(store_path, f"centroids-g{new_cg}.json")
-            )
+            _write_index(index, out)
         finally:
             index.unpersist()
+        return {
+            "n_clusters": k_cells,
+            "n_vecs": int(m["n_vecs"]) + int(m.get("n_appended", 0)),
+            "n_appended": 0,
+        }
 
-        folded = list(m.get("applied_batches", []))
-        m["generation"] = new_gen
-        m["centroid_generation"] = new_cg
-        m["n_clusters"] = k_cells
-        m["applied_batches"] = []
-        m["compacted_batches"] = m.get("compacted_batches", []) + folded
-        m["n_vecs"] = int(m["n_vecs"]) + int(m.get("n_appended", 0))
-        m["n_appended"] = 0
-        _write_manifest(store_path, m)
-    return m
-
-
-def _sweep_unreferenced_ann(store_path: str, m: dict) -> None:
-    """Grace-window sweep of unreferenced dirs (superseded generations,
-    folded batch dirs) -- minhash_store._sweep_unreferenced's contract
-    for the ANN layout."""
-    import re
-    import shutil
-    import time
-
-    now_ns = time.time_ns()
-
-    def _old(d: str) -> bool:
-        try:
-            return now_ns - os.stat(d).st_mtime_ns > _ANN_SWEEP_GRACE_NS
-        except OSError:
-            return False
-
-    current = os.path.basename(_assigned_dir(store_path, m))
-    current_centroids = os.path.basename(_centroids_file(store_path, m))
-    try:
-        entries = os.listdir(store_path)
-    except OSError:
-        return
-    for entry in entries:
-        d = os.path.join(store_path, entry)
-        if (
-            re.match(r"^assigned(-g\d+)?$", entry)
-            and entry != current
-            and _old(d)
-        ):
-            shutil.rmtree(d, ignore_errors=True)
-        elif (
-            re.match(r"^centroids(-g\d+)?\.json$", entry)
-            and entry != current_centroids
-            and _old(d)
-        ):
-            try:
-                os.remove(d)
-            except OSError:
-                pass
-    for b in m.get("compacted_batches", []):
-        d = os.path.join(store_path, "batches", b)
-        if os.path.isdir(d) and _old(d):
-            shutil.rmtree(d, ignore_errors=True)
+    return store.fold(_LAYOUT, store_path, write, new_side=True)
 
 
 # -- registry -----------------------------------------------------------------
 
 from ..queries import register, t  # noqa: E402
-from .minhash_store import (  # noqa: E402
-    _corpus_fingerprint,
-    _prune_stale_stores,
-    footer_row_count,
-)
+from .store import footer_row_count  # noqa: E402
 from .simsearch import (  # noqa: E402
     ANN_QUERY_IDS,
     DIM,
@@ -648,16 +469,55 @@ _DUCK_PANEL_SQL = (
 )
 
 
-def _ann_store_path(sf_dir: str, label: str, fp: str) -> str:
-    """Content-addressed cache path (the signature-store convention):
-    the corpus fingerprint names the directory, so regenerated testdata
-    builds fresh instead of mutating under a concurrent reader."""
-    import hashlib
+def _panel_search(spark, sf_dir, fifths: tuple, recluster: bool) -> DataFrame:
+    """The x14 acceptance panel searched against a cached store built
+    on the oldest ``fifths[0]`` fifths of vec_ids, each further fifth
+    cut appended as ``day-001``, ``day-002``, ..., then reclustered when
+    ``recluster`` is set (x79, x81)."""
+    emb = t(spark, sf_dir, "embeddings")
+    prep = _panel_prep(spark, sf_dir)
+    ann: dict = {}
+    if not prep.isEmpty():
+        n = footer_row_count(spark, sf_dir, "embeddings")
+        cuts = [(f * n) // 5 for f in fifths]
+        vec_id = F.col("vec_id")
+        last = f"day-{len(cuts):03d}"
+        settled = store.folded_batches if recluster else store.committed_batches
 
-    key = hashlib.md5(
-        f"{sf_dir}|ann|{label}|v{ANN_STORE_VERSION}".encode()
-    ).hexdigest()[:12]
-    return os.path.join("/tmp/conecta_spark_annstore", key, fp)
+        def build(path: str, manifest_extra: dict) -> None:
+            write_ann_store(
+                emb.where(vec_id < cuts[0]),
+                path,
+                manifest_extra=manifest_extra,
+            )
+            for i, lo in enumerate(cuts):
+                day = vec_id >= lo
+                if i + 1 < len(cuts):
+                    day = day & (vec_id < cuts[i + 1])
+                append_ann_batch(
+                    spark, path, emb.where(day), batch_id=f"day-{i + 1:03d}"
+                )
+            if recluster:
+                recluster_ann_store(spark, path)
+
+        path = store.cached_store(
+            _LAYOUT,
+            f"{sf_dir}|ann|{'recluster|' if recluster else ''}"
+            f"{'|'.join(map(str, [n] + cuts))}|v{ANN_STORE_VERSION}",
+            sf_dir,
+            "embeddings",
+            lambda m: last in settled(m),
+            build,
+        )
+        for r in (
+            ann_store_search(spark, path, ANN_QUERY_IDS, k=10, n_probe=8)
+            .select("query_id", "vec_id")
+            .collect()
+        ):
+            ann.setdefault(r.query_id, []).append(r.vec_id)
+    return _with_recall_flag(
+        _exact_topk_panel(emb, "cosine", vecs=prep), ann, 0.5
+    )
 
 
 @register(
@@ -675,56 +535,7 @@ def _ann_store_path(sf_dir: str, label: str, fp: str) -> str:
     "isotropic-corpus coverage bound)",
 )
 def x79_ann_store(spark, sf_dir) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    prep = _panel_prep(spark, sf_dir)
-    if prep.isEmpty():
-        return _with_recall_flag(
-            _exact_topk_panel(emb, "cosine", vecs=prep), {}, 0.5
-        )
-    n = footer_row_count(spark, sf_dir, "embeddings")
-    cut = (4 * n) // 5
-    fp = _corpus_fingerprint(sf_dir, table="embeddings")
-    path = _ann_store_path(sf_dir, f"{n}|{cut}", fp)
-
-    def _ready() -> bool:
-        try:
-            mm = read_ann_manifest(path)
-            return (
-                mm.get("corpus_fingerprint") == fp
-                and "day-001" in _committed(mm)
-            )
-        except (OSError, ValueError):
-            return False
-
-    if not _ready():
-        import fcntl
-
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, ".build.lock"), "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            if not _ready():
-                write_ann_store(
-                    emb.where(F.col("vec_id") < cut),
-                    path,
-                    manifest_extra={"corpus_fingerprint": fp},
-                )
-                append_ann_batch(
-                    spark,
-                    path,
-                    emb.where(F.col("vec_id") >= cut),
-                    batch_id="day-001",
-                )
-        _prune_stale_stores(path)
-    ann: dict = {}
-    for r in (
-        ann_store_search(spark, path, ANN_QUERY_IDS, k=10, n_probe=8)
-        .select("query_id", "vec_id")
-        .collect()
-    ):
-        ann.setdefault(r.query_id, []).append(r.vec_id)
-    return _with_recall_flag(
-        _exact_topk_panel(emb, "cosine", vecs=prep), ann, 0.5
-    )
+    return _panel_search(spark, sf_dir, (4,), recluster=False)
 
 
 @register(
@@ -744,63 +555,4 @@ def x79_ann_store(spark, sf_dir) -> DataFrame:
     "acceptance flag (mean over 5 queries >= 0.5)",
 )
 def x81_reclustered_ann(spark, sf_dir) -> DataFrame:
-    emb = t(spark, sf_dir, "embeddings")
-    prep = _panel_prep(spark, sf_dir)
-    if prep.isEmpty():
-        return _with_recall_flag(
-            _exact_topk_panel(emb, "cosine", vecs=prep), {}, 0.5
-        )
-    n = footer_row_count(spark, sf_dir, "embeddings")
-    c1, c2 = (3 * n) // 5, (4 * n) // 5
-    fp = _corpus_fingerprint(sf_dir, table="embeddings")
-    path = _ann_store_path(sf_dir, f"recluster|{n}|{c1}|{c2}", fp)
-
-    def _ready() -> bool:
-        try:
-            mm = read_ann_manifest(path)
-            return (
-                mm.get("corpus_fingerprint") == fp
-                and mm.get("centroid_generation", 0) >= 1
-                and "day-002" in _committed(mm)
-            )
-        except (OSError, ValueError):
-            return False
-
-    if not _ready():
-        import fcntl
-
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, ".build.lock"), "w") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            if not _ready():
-                write_ann_store(
-                    emb.where(F.col("vec_id") < c1),
-                    path,
-                    manifest_extra={"corpus_fingerprint": fp},
-                )
-                append_ann_batch(
-                    spark,
-                    path,
-                    emb.where(
-                        (F.col("vec_id") >= c1) & (F.col("vec_id") < c2)
-                    ),
-                    batch_id="day-001",
-                )
-                append_ann_batch(
-                    spark,
-                    path,
-                    emb.where(F.col("vec_id") >= c2),
-                    batch_id="day-002",
-                )
-                recluster_ann_store(spark, path)
-        _prune_stale_stores(path)
-    ann: dict = {}
-    for r in (
-        ann_store_search(spark, path, ANN_QUERY_IDS, k=10, n_probe=8)
-        .select("query_id", "vec_id")
-        .collect()
-    ):
-        ann.setdefault(r.query_id, []).append(r.vec_id)
-    return _with_recall_flag(
-        _exact_topk_panel(emb, "cosine", vecs=prep), ann, 0.5
-    )
+    return _panel_search(spark, sf_dir, (3, 4), recluster=True)

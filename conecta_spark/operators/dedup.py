@@ -1537,7 +1537,7 @@ _X73_CUT = "(4 * (SELECT COUNT(*) FROM documents)) // 5"
     "candidate predicate",
 )
 def x73_incremental(spark, sf_dir) -> DataFrame:
-    from .minhash_store import footer_row_count
+    from .store import footer_row_count
 
     docs = t(spark, sf_dir, "documents")
     # O9 footer count: the cut only needs COUNT(*), which parquet footers

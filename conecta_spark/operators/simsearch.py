@@ -887,7 +887,7 @@ def _panel_prep(spark, sf_dir: str) -> DataFrame:
     # 32-wide cache cost x14 ~0.7 s of pure task dispatch.  Past
     # _PREP_ROWS_PER_PART rows per core the derived width saturates at
     # cluster width, so real-scale inputs still spread fully.
-    from .minhash_store import footer_row_count
+    from .store import footer_row_count
 
     rows = footer_row_count(spark, sf_dir, "embeddings")
     width = max(1, min(

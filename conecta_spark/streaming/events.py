@@ -666,7 +666,7 @@ def _source_fingerprint(src: str) -> str:
     misses an in-place part rewrite with identical filenames, so a
     regenerated corpus could reuse a stale cached state-row count and
     mis-size state partitions.  Same discipline as
-    minhash_store._corpus_fingerprint."""
+    operators.store.corpus_fingerprint."""
     import glob
     import hashlib
 
@@ -900,7 +900,7 @@ def x71_streaming_dedup(spark, sf_dir) -> DataFrame:
     probe_key = ("x71", src, _source_fingerprint(src))
     n_state = _STATE_PROBE_CACHE.get(probe_key)
     if n_state is None:
-        from ..operators.minhash_store import footer_row_count
+        from ..operators.store import footer_row_count
 
         n_state = footer_row_count(spark, sf_dir, "documents")
         _STATE_PROBE_CACHE[probe_key] = n_state

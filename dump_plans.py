@@ -10,6 +10,7 @@ Run: python dump_plans.py  (rewrites PLANS.md from the current code).
 from __future__ import annotations
 
 import os
+import re
 
 SHOWCASE: list[tuple[str, str]] = [
     (
@@ -244,6 +245,12 @@ def source_fingerprint() -> str:
     return h.hexdigest()
 
 
+#: The registry's signature and ANN store caches live at
+#: ``<root>/<config key>/<corpus fingerprint>``: a fixed placeholder keeps
+#: a regenerated corpus or a new cache key from churning the artifact.
+_STORE_PATH = re.compile(r"/tmp/conecta_spark_(sig|ann)store/[0-9a-f]+/[0-9a-f]+")
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -273,6 +280,9 @@ def main() -> None:
         df = REGISTRY[name].fn(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
+        )
+        plan = _STORE_PATH.sub(
+            r"/tmp/conecta_spark_\1store/<key>/<fingerprint>", plan
         )
         out.append(f"## {name}\n\n{note}\n\n```\n{plan.rstrip()}\n```\n")
     with open(os.path.join(os.path.dirname(__file__), "PLANS.md"), "w") as f:

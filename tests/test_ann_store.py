@@ -155,7 +155,7 @@ def test_replay_guards_survive_compaction(spark, corpus, batch, tmp_path):
     """append is idempotent by batch_id, including after a compaction
     moved the id to compacted_batches and the dir aged out -- the same
     exactly-once matrix as the signature store."""
-    from conecta_spark.operators import ann_store as mod
+    from conecta_spark.operators import store as mod
     from conecta_spark.operators.ann_store import (
         _assigned_relation,
         append_ann_batch,
@@ -178,12 +178,12 @@ def test_replay_guards_survive_compaction(spark, corpus, batch, tmp_path):
     assert os.path.isdir(os.path.join(path, "assigned"))
     assert os.path.isdir(os.path.join(path, "batches", "day-001"))
     # age them out, sweep-only pass removes them
-    orig = mod._ANN_SWEEP_GRACE_NS
-    mod._ANN_SWEEP_GRACE_NS = 0
+    orig = mod._SWEEP_GRACE_NS
+    mod._SWEEP_GRACE_NS = 0
     try:
         compact_ann_store(spark, path)
     finally:
-        mod._ANN_SWEEP_GRACE_NS = orig
+        mod._SWEEP_GRACE_NS = orig
     assert not os.path.exists(os.path.join(path, "assigned"))
     assert not os.path.exists(os.path.join(path, "batches", "day-001"))
     # replay of the folded id: still a no-op
@@ -264,7 +264,7 @@ def test_recluster_keeps_old_routing_for_grace(spark, corpus, batch, tmp_path):
     and OLD assignment generation must survive the commit (a reader
     holding the pre-recluster manifest keeps routing old centroids
     against the old cells), aging out only past the grace window."""
-    from conecta_spark.operators import ann_store as mod
+    from conecta_spark.operators import store as mod
     from conecta_spark.operators.ann_store import (
         append_ann_batch,
         compact_ann_store,
@@ -280,12 +280,12 @@ def test_recluster_keeps_old_routing_for_grace(spark, corpus, batch, tmp_path):
     assert os.path.isfile(os.path.join(path, "centroids-g1.json"))
     assert os.path.isdir(os.path.join(path, "assigned"))
     assert os.path.isdir(os.path.join(path, "assigned-g1"))
-    orig = mod._ANN_SWEEP_GRACE_NS
-    mod._ANN_SWEEP_GRACE_NS = 0
+    orig = mod._SWEEP_GRACE_NS
+    mod._SWEEP_GRACE_NS = 0
     try:
         compact_ann_store(spark, path)  # sweep-only pass
     finally:
-        mod._ANN_SWEEP_GRACE_NS = orig
+        mod._SWEEP_GRACE_NS = orig
     assert not os.path.exists(os.path.join(path, "centroids.json"))
     assert os.path.isfile(os.path.join(path, "centroids-g1.json"))
     assert not os.path.exists(os.path.join(path, "assigned"))

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import pytest
 
-from conecta_spark.queries import REGISTRY, _load_extensions
+from conecta_spark.queries import REGISTRY, _load_extensions, catalog
 
 _load_extensions()
 
@@ -33,7 +33,11 @@ _MODE_SENSITIVE = [
 
 
 @pytest.fixture(scope="module")
-def ansi(spark):
+def ansi(spark, sf_dir):
+    # the registry tunes a session (ANSI off among its defaults) the
+    # first time it sees it: do that now, so the flip below holds for
+    # every query instead of being undone by the first one
+    catalog(spark, sf_dir)
     prev = spark.conf.get("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     yield spark
@@ -51,3 +55,4 @@ def con(sf_dir):
 def test_oracle_parity_holds_under_ansi(name, ansi, sf_dir, con):
     qd = REGISTRY[name]
     assert_match(name, qd.fn(ansi, sf_dir), con, qd.oracle)
+    assert ansi.conf.get("spark.sql.ansi.enabled") == "true"

@@ -173,8 +173,8 @@ def test_append_batch_is_idempotent_by_batch_id(spark, corpus, batch, tmp_path):
     no duplicated rows for the verify join), and a batch dir that exists
     WITHOUT a manifest entry (crash between rename and commit) must be
     invisible to readers until a retry adopts and commits it."""
+    from conecta_spark.operators.store import relation as _store_relation
     from conecta_spark.operators.minhash_store import (
-        _store_relation,
         append_batch,
         read_manifest,
         write_signature_store,
@@ -256,8 +256,8 @@ def test_prune_stale_stores_respects_grace(tmp_path):
     import os
     import time
 
-    from conecta_spark.operators.minhash_store import (
-        _STALE_STORE_GRACE_NS,
+    from conecta_spark.operators.store import (
+        _SWEEP_GRACE_NS as _STALE_STORE_GRACE_NS,
         _prune_stale_stores,
     )
 
@@ -283,7 +283,7 @@ def test_compaction_preserves_pairs(spark, corpus, batch, tmp_path):
     at commit time (readers take no lock and may be mid-scan on the old
     manifest); they age out of a later sweep once past the grace
     window."""
-    from conecta_spark.operators import minhash_store as ms
+    from conecta_spark.operators import store as ms
     from conecta_spark.operators.minhash_store import (
         append_batch,
         compact_store,
@@ -358,8 +358,8 @@ def test_append_after_compaction(spark, corpus, batch, tmp_path):
     """The lifecycle keeps cycling: an append after a compaction lands
     in the new generation's applied_batches and is served on reads, and
     a SECOND compaction folds it into generation 2."""
+    from conecta_spark.operators.store import relation as _store_relation
     from conecta_spark.operators.minhash_store import (
-        _store_relation,
         append_batch,
         compact_store,
         incremental_pairs_stored,
@@ -489,8 +489,8 @@ def test_append_racing_compaction_commits_safely(spark, corpus, batch, tmp_path)
     batch1 + batch2 exactly once each."""
     import threading
 
+    from conecta_spark.operators.store import relation as _store_relation
     from conecta_spark.operators.minhash_store import (
-        _store_relation,
         append_batch,
         compact_store,
         read_manifest,
@@ -572,9 +572,9 @@ def test_replayed_batch_after_compaction_is_noop(
     heal-retry or replayed streaming epoch with the same id must be a
     no-op -- re-appending would duplicate its docs in the store and
     double-count n_appended."""
-    from conecta_spark.operators import minhash_store as ms
+    from conecta_spark.operators import store as ms
+    from conecta_spark.operators.store import relation as _store_relation
     from conecta_spark.operators.minhash_store import (
-        _store_relation,
         append_batch,
         compact_store,
         write_signature_store,
