@@ -26,7 +26,9 @@ _BACKENDS = ("spark", "pyarrow", "pandas", "arro3", "nanoarrow", "polars")
 
 #: Source pool keyed by (session object, connection string) -- the analog
 #: of the reference's connection pool reuse (O2, lib.rs:78-86).  A catalog
-#: also keeps its registered tables: reloading 10 costs ~1s of footer reads.
+#: also keeps its registered tables: registering one costs Spark's
+#: schema-inference job (10 tables ~1 s), or only a driver-side footer read
+#: for a table Spark wrote (:func:`.sources.parquet.footer_schema`).
 _SOURCE_POOL: dict[tuple[SparkSession, str], Source] = {}
 
 

@@ -19,11 +19,13 @@ Scale notes:
 
 from __future__ import annotations
 
+import json
 import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from ..plans.partition import QueryPartitioningMode
 from ..session import copy_sql_conf, jvm_entry
@@ -35,6 +37,9 @@ _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*$")
 #: Reads parquet TIMESTAMP(NANOS) as raw longs (see :func:`load_parquet`).
 NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
+#: Footer key under which Spark's parquet writer stores the row schema.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
 
 def load_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet`` with nanosecond-timestamp handling.
@@ -44,9 +49,15 @@ def load_parquet(spark: SparkSession, path: str) -> DataFrame:
     :class:`ParquetDirSource`'s private session always has); such columns
     are truncated to microsecond TimestampType -- the same precision the
     reference uses everywhere (postgres.rs:401-412 truncates to micros).
+
+    A Spark-written table is read with the schema in its footer
+    (:func:`footer_schema`), which skips Spark's schema-inference job;
+    any other table is read with Spark's inference.
     """
     ns_cols = _nanos_timestamp_columns(path)
-    df = spark.read.parquet(path)
+    schema = footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     for name in ns_cols:
         if name in df.columns:
             df = df.withColumn(
@@ -143,6 +154,48 @@ def footer_min_max(path: str, column: str) -> tuple[int | None, int | None] | No
             mn = st.min if mn is None else min(mn, st.min)
             mx = st.max if mx is None else max(mx, st.max)
     return mn, mx
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers, without its
+    inference job: Spark's inference prefers the row schema its writer
+    stores in each footer, so read that key from the first data file on
+    the driver and make it nullable the way the read does.
+
+    ``None`` (let Spark infer) when ``spark.sql.parquet.mergeSchema``
+    asks for the union over all files, the directory has a subdirectory
+    (hive partitions) or no data file, the first file is not parquet, or
+    its writer was not Spark (no row-schema key)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
+    files = data_files(path)
+    if not files:
+        return None
+    try:
+        kv = pq.read_metadata(files[0]).metadata or {}
+    except (OSError, pa.ArrowInvalid):
+        return None
+    if _SPARK_ROW_METADATA not in kv:
+        return None
+    return _as_nullable(StructType.fromJson(json.loads(kv[_SPARK_ROW_METADATA])))
+
+
+def _as_nullable(t: DataType) -> DataType:
+    """Spark's ``DataType.asNullable``, which file reads apply to a schema:
+    every field, array element and map value may be null."""
+    if isinstance(t, StructType):
+        return StructType([
+            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+            for f in t.fields
+        ])
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
 
 
 def _listing(path: str) -> tuple:

@@ -21,17 +21,12 @@ and ``upsert_parquet`` derive that count from Catalyst's byte estimate.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
-from .parquet import data_files
-
-#: Footer key under which Spark's parquet writer stores the row schema.
-_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+from .parquet import data_files, footer_schema
 
 
 def estimated_bytes(df: DataFrame) -> int:
@@ -250,48 +245,6 @@ def upsert_parquet(
         os.rename(path, retired)
     os.rename(staged, path)
     shutil.rmtree(retired, ignore_errors=True)
-
-
-def footer_schema(spark: SparkSession, path: str) -> StructType | None:
-    """The schema ``spark.read.parquet(path)`` infers, without its
-    inference job: Spark's inference prefers the row schema its writer
-    stores in each footer, so read that key from the first data file on
-    the driver and make it nullable the way the read does.
-
-    ``None`` (let Spark infer) when ``spark.sql.parquet.mergeSchema``
-    asks for the union over all files, the directory has a subdirectory
-    (hive partitions) or no data file, the first file is not parquet, or
-    its writer was not Spark (no row-schema key)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
-        return None
-    files = data_files(path)
-    if not files:
-        return None
-    try:
-        kv = pq.read_metadata(files[0]).metadata or {}
-    except (OSError, pa.ArrowInvalid):
-        return None
-    if _SPARK_ROW_METADATA not in kv:
-        return None
-    return _as_nullable(StructType.fromJson(json.loads(kv[_SPARK_ROW_METADATA])))
-
-
-def _as_nullable(t: DataType) -> DataType:
-    """Spark's ``DataType.asNullable``, which file reads apply to a schema:
-    every field, array element and map value may be null."""
-    if isinstance(t, StructType):
-        return StructType([
-            StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
-            for f in t.fields
-        ])
-    if isinstance(t, ArrayType):
-        return ArrayType(_as_nullable(t.elementType), True)
-    if isinstance(t, MapType):
-        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
-    return t
 
 
 def _upsert_side_dirs(path: str) -> tuple[str, str]:

@@ -20,10 +20,12 @@ Scale notes (100 TB / real streams):
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.store import corpus_fingerprint, footer_row_count
 from ..queries import dsum, epoch_micros, register, t, DSUM
 from ..session import copy_sql_conf
 from ..sources.parquet import NANOS_AS_LONG, _nanos_timestamp_columns
@@ -192,9 +194,9 @@ def read_event_stream(spark, sf_dir: str, max_files_per_trigger: int | None = No
     # testdata stored ts as TIMESTAMP(NANOS) (surfaced as raw long ns via
     # nanosAsLong); current testdata stores timestamp[us], which the session
     # may read as TIMESTAMP or TIMESTAMP_NTZ.  Normalize all three to a
-    # watermarkable timestamp column.  Cached per content fingerprint --
+    # watermarkable timestamp column.  Cached per corpus_fingerprint --
     # repeated invocations must not re-read the footer every call.
-    disk_schema = _stream_schema(spark, src_file)
+    disk_schema = _stream_schema(spark, sf_dir, "events")
     reader = spark.readStream.schema(disk_schema).format("parquet")
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -410,9 +412,6 @@ def x16_sessions(spark, sf_dir) -> DataFrame:
     return sessionize_batch(t(spark, sf_dir, "events"))
 
 
-_X65_SEQ = iter(range(1, 1 << 30))
-
-
 @register(
     "x65_streaming_hourly_parity",
     "SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour_start, "
@@ -429,38 +428,16 @@ _X65_SEQ = iter(range(1, 1 << 30))
     "mode to a real sink with state bounded to open windows",
 )
 def x65_streaming_hourly(spark, sf_dir) -> DataFrame:
-    # unique query name per invocation: bench and the driver both run a
-    # registry callable several times in one session
-    name = f"x65_hourly_{next(_X65_SEQ)}"
-    # Size the state partitioning to the state volume (the x76 pattern:
-    # each state-store instance pays a fixed open/commit cost per
-    # micro-batch, so partition count must track state bytes, not the
-    # session's scan parallelism).  State here is one row per open
-    # (hour window, event_type) group -- exactly the batch twin's output
-    # cardinality, probed once per corpus version and cached.
-    src = os.path.join(sf_dir, "events.parquet")
-    probe_key = ("x65", src, _source_fingerprint(src))
-    n_state = _STATE_PROBE_CACHE.get(probe_key)
-    if n_state is None:
-        n_state = hourly_rollup(t(spark, sf_dir, "events")).count()
-        _STATE_PROBE_CACHE[probe_key] = n_state
-    parts = derive_state_partitions(
-        n_state, max_partitions=spark.sparkContext.defaultParallelism
+    # State is one row per open (hour window, event_type) group -- exactly
+    # the batch twin's output cardinality.
+    sess = _state_session(
+        spark, sf_dir, "events", "x65",
+        lambda: hourly_rollup(t(spark, sf_dir, "events")).count(),
     )
-    sess = _stream_session(spark, parts)
-    _remember_stream_view(spark, parts, name)
-    q = (
-        streaming_hourly_rollup(read_event_stream(sess, sf_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        streaming_hourly_rollup(read_event_stream(sess, sf_dir)),
+        "complete", "x65",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("x65 streaming query did not terminate in 300s")
-    return sess.table(name)
 
 
 def streaming_session_windows(
@@ -503,9 +480,6 @@ def streaming_session_windows(
     )
 
 
-_X72_SEQ = iter(range(1, 1 << 30))
-
-
 @register(
     "x72_streaming_session_window",
     "WITH e AS (SELECT user_id, event_id, "
@@ -534,33 +508,16 @@ _X72_SEQ = iter(range(1, 1 << 30))
     "is proven equivalent by test",
 )
 def x72_streaming_session_window(spark, sf_dir) -> DataFrame:
-    name = f"x72_sess_{next(_X72_SEQ)}"
-    # State-volume-derived partitioning (the x76 pattern): session-window
-    # state is one row per session; the batch twin's output cardinality
-    # is exactly that, probed once per corpus version and cached.
-    src = os.path.join(sf_dir, "events.parquet")
-    probe_key = ("x72", src, _source_fingerprint(src))
-    n_state = _STATE_PROBE_CACHE.get(probe_key)
-    if n_state is None:
-        n_state = sessionize_batch(t(spark, sf_dir, "events")).count()
-        _STATE_PROBE_CACHE[probe_key] = n_state
-    parts = derive_state_partitions(
-        n_state, max_partitions=spark.sparkContext.defaultParallelism
+    # Session-window state is one row per session -- exactly the batch
+    # twin's output cardinality.
+    sess = _state_session(
+        spark, sf_dir, "events", "x72",
+        lambda: sessionize_batch(t(spark, sf_dir, "events")).count(),
     )
-    sess = _stream_session(spark, parts)
-    _remember_stream_view(spark, parts, name)
-    q = (
-        streaming_session_windows(read_event_stream(sess, sf_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        streaming_session_windows(read_event_stream(sess, sf_dir)),
+        "complete", "x72",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("x72 streaming query did not terminate in 300s")
-    return sess.table(name)
 
 
 #: Estimated in-store bytes per buffered stream-stream join state row
@@ -603,13 +560,10 @@ def derive_state_partitions(
 
 #: One child session per (application, partition count), reused across
 #: invocations: a bench/twin loop calls x76 many times per process, and a
-#: fresh newSession() each time would accumulate JVM session state and
-#: memory-sink buffers for the lifetime of the context.  Keyed by
-#: applicationId (id() values can be reused across GC'd sessions -- the
-#: shared_minhash_pairs convention); the previous call's memory-sink view
-#: is dropped at the NEXT call, after the driver has consumed it.
+#: fresh newSession() each time would accumulate JVM session state for the
+#: lifetime of the context.  Keyed by applicationId (id() values can be
+#: reused across GC'd sessions -- the shared_minhash_pairs convention).
 _STREAM_SESSIONS: dict = {}
-_STREAM_LAST_VIEW: dict = {}
 
 
 def _stream_session(spark, shuffle_partitions: int):
@@ -618,7 +572,8 @@ def _stream_session(spark, shuffle_partitions: int):
     session-global conf mutation would leak the override into any query
     planned concurrently (bench alongside driver).  It gets the parent's
     SQL conf as it is at call time (:func:`copy_sql_conf`), plus the
-    override."""
+    override.  It holds no memory-sink view between calls: :func:`_drain`
+    drops each one as soon as it has taken the sink's table."""
     key = (spark.sparkContext.applicationId, shuffle_partitions)
     sess = _STREAM_SESSIONS.get(key)
     if sess is None:
@@ -626,82 +581,83 @@ def _stream_session(spark, shuffle_partitions: int):
         # evict only DEAD-app entries: same-app sessions with other
         # partition counts are exactly what this cache exists to reuse
         # (alternating derived counts in one process must not thrash a
-        # fresh newSession() per call), and each evicted session's
-        # remembered memory-sink view is dropped before discarding it
-        # so the buffer doesn't outlive the cache entry
-        for stale_key in [
-            k for k in _STREAM_SESSIONS if k[0] != key[0]
-        ]:
-            old_sess = _STREAM_SESSIONS.pop(stale_key)
-            old_view = _STREAM_LAST_VIEW.pop(stale_key, None)
-            if old_view is not None:
-                old_sess.catalog.dropTempView(old_view)
+        # fresh newSession() per call)
+        for stale_key in [k for k in _STREAM_SESSIONS if k[0] != key[0]]:
+            del _STREAM_SESSIONS[stale_key]
         _STREAM_SESSIONS[key] = sess
     copy_sql_conf(
         sess, spark, {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
     )
-    prev_view = _STREAM_LAST_VIEW.pop(key, None)
-    if prev_view is not None:
-        sess.catalog.dropTempView(prev_view)
     return sess
 
 
-def _remember_stream_view(spark, shuffle_partitions: int, name: str) -> None:
-    _STREAM_LAST_VIEW[
-        (spark.sparkContext.applicationId, shuffle_partitions)
-    ] = name
-
-
-#: source content fingerprint -> purchase/error row count: the x76 state
-#: probe is one filtered column scan; caching it per source fingerprint
-#: keeps repeated registry invocations from re-scanning a static corpus.
+#: (entry label, corpus_fingerprint) -> the entry's estimated state rows:
+#: a probe is a Spark job (or a footer walk); caching it per content
+#: fingerprint keeps repeated registry invocations from re-scanning a
+#: static corpus, and a rewritten corpus is probed again.
 _STATE_PROBE_CACHE: dict = {}
 
 
-def _source_fingerprint(src: str) -> str:
-    """Content fingerprint of a parquet source: every part file
-    (recursive) with its size and mtime_ns.  A single os.stat of the
-    top-level path is NOT enough when the source is a Spark-written
-    directory -- the dir's st_size never reflects content and its mtime
-    misses an in-place part rewrite with identical filenames, so a
-    regenerated corpus could reuse a stale cached state-row count and
-    mis-size state partitions.  Same discipline as
-    operators.store.corpus_fingerprint."""
-    import glob
-    import hashlib
-
-    parts = (
-        sorted(
-            glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True)
-        )
-        if os.path.isdir(src)
-        else [src]
+def _state_session(spark, sf_dir: str, table: str, label: str, probe):
+    """The :func:`_stream_session` sized for ``label``'s state: ``probe()``
+    estimates its state rows once per :func:`corpus_fingerprint` of
+    ``table``, and :func:`derive_state_partitions` turns that into the
+    state-partition count, capped at the cluster's parallelism."""
+    key = (label, corpus_fingerprint(sf_dir, table))
+    n_state = _STATE_PROBE_CACHE.get(key)
+    if n_state is None:
+        n_state = _STATE_PROBE_CACHE[key] = probe()
+    parts = derive_state_partitions(
+        n_state, max_partitions=spark.sparkContext.defaultParallelism
     )
-    stats = []
-    for p in parts:
-        st = os.stat(p)
-        stats.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("|".join(stats).encode()).hexdigest()[:16]
+    return _stream_session(spark, parts)
 
 
-#: On-disk schema per (source, content fingerprint): the registry/bench
-#: invoke each streaming entry repeatedly, and every invocation paid a
-#: driver-side footer read (spark.read.parquet(...).schema) just to
-#: restate an immutable schema.  Keyed by content fingerprint so a
-#: regenerated corpus re-reads; the StructType is session-independent.
+def _drain(stream: DataFrame, output_mode: str, label: str) -> DataFrame:
+    """Run ``stream`` to completion (availableNow trigger) into a memory
+    sink and return the sink's table in the stream's session.
+
+    The sink's temp view is dropped before returning: the returned
+    DataFrame's plan holds the sink itself, so it still collects the
+    drained rows, and no call leaves a view (with its rows) behind in
+    any session."""
+    sess = stream.sparkSession
+    name = f"{label}_{uuid.uuid4().hex}"
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError(
+                f"{label} streaming query did not terminate in 300s"
+            )
+        return sess.table(name)
+    finally:
+        sess.catalog.dropTempView(name)
+
+
+#: On-disk schema per corpus_fingerprint: the registry/bench invoke each
+#: streaming entry repeatedly, and every invocation paid a driver-side
+#: footer read (spark.read.parquet(...).schema) just to restate an
+#: immutable schema.  A regenerated corpus has a new fingerprint and is
+#: re-read; the StructType is session-independent.
 _STREAM_SCHEMA_CACHE: dict = {}
 
 
-def _stream_schema(spark, src_file: str):
-    key = (src_file, _source_fingerprint(src_file))
+def _stream_schema(spark, sf_dir: str, table: str):
+    key = corpus_fingerprint(sf_dir, table)
     schema = _STREAM_SCHEMA_CACHE.get(key)
     if schema is None:
-        schema = spark.read.parquet(src_file).schema
+        schema = spark.read.parquet(
+            os.path.join(sf_dir, f"{table}.parquet")
+        ).schema
         _STREAM_SCHEMA_CACHE[key] = schema
     return schema
-
-
-_X76_SEQ = iter(range(1, 1 << 30))
 
 
 @register(
@@ -724,49 +680,18 @@ _X76_SEQ = iter(range(1, 1 << 30))
     "oracle = the x23 theta-join SQL",
 )
 def x76_streaming_interval_join(spark, sf_dir) -> DataFrame:
-    import os
-
-    name = f"x76_ij_{next(_X76_SEQ)}"
-    # Size the state partitioning to the state volume (the deployment
-    # knob: buffered rows x row width / target partition bytes -- see
-    # derive_state_partitions), estimated by a planner-style metadata
-    # probe: one event_type-column count of the join's two input slices,
-    # which under availableNow bounds the buffered state.  The override
-    # lives in a child session so concurrent queries in the parent never
-    # inherit it.
-    src = os.path.join(sf_dir, "events.parquet")
-    probe_key = (src, _source_fingerprint(src))
-    n_state = _STATE_PROBE_CACHE.get(probe_key)
-    if n_state is None:
-        n_state = (
-            spark.read.parquet(src)
-            .where(F.col("event_type").isin("purchase", "error"))
-            .count()
-        )
-        _STATE_PROBE_CACHE[probe_key] = n_state
-    parts = derive_state_partitions(
-        n_state,
-        max_partitions=spark.sparkContext.defaultParallelism,
+    # Under availableNow the buffered join state is bounded by the join's
+    # two input slices: one event_type-column count of them.
+    sess = _state_session(
+        spark, sf_dir, "events", "x76",
+        lambda: t(spark, sf_dir, "events")
+        .where(F.col("event_type").isin("purchase", "error"))
+        .count(),
     )
-    sess = _stream_session(spark, parts)
-    _remember_stream_view(spark, parts, name)
-    q = (
-        streaming_interval_pairs(read_event_stream(sess, sf_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(
-            "x76 streaming query did not terminate in 300s"
-        )
-    return sess.table(name).distinct()
-
-
-_X75_SEQ = iter(range(1, 1 << 30))
+    return _drain(
+        streaming_interval_pairs(read_event_stream(sess, sf_dir)),
+        "append", "x76",
+    ).distinct()
 
 
 @register(
@@ -787,24 +712,14 @@ _X75_SEQ = iter(range(1, 1 << 30))
     "against the dim's current contents",
 )
 def x75_streaming_enrich(spark, sf_dir) -> DataFrame:
-    events = t(spark, sf_dir, "events")
-    dim = user_profile_dim(events)
-    name = f"x75_enrich_{next(_X75_SEQ)}"
-    q = (
+    dim = user_profile_dim(t(spark, sf_dir, "events"))
+    return _drain(
         streaming_enrich(
             read_event_stream(spark, sf_dir).select("event_id", "user_id"),
             dim,
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "append", "x75",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("x75 streaming query did not terminate in 300s")
-    return spark.table(name)
 
 
 def user_profile_dim(events: DataFrame) -> DataFrame:
@@ -842,11 +757,9 @@ def read_document_stream(spark, sf_dir: str) -> DataFrame:
     directory exactly like :func:`read_event_stream` (the file-stream
     source wants a directory; a deployment's landing zone already is
     one)."""
-    import os
-
     src_file = os.path.join(sf_dir, "documents.parquet")
     stage = _stage_stream_dir(src_file, "documents")
-    schema = _stream_schema(spark, src_file)
+    schema = _stream_schema(spark, sf_dir, "documents")
     return spark.readStream.schema(schema).parquet(stage)
 
 
@@ -876,9 +789,6 @@ def streaming_dedup_state(
     )
 
 
-_X71_SEQ = iter(range(1, 1 << 30))
-
-
 @register(
     "x71_streaming_dedup_state",
     "SELECT sha256(text) AS content_hash, MIN(doc_id) AS keep_doc_id, "
@@ -891,33 +801,14 @@ _X71_SEQ = iter(range(1, 1 << 30))
     "state accumulation is pinned in tests/test_streaming.py",
 )
 def x71_streaming_dedup(spark, sf_dir) -> DataFrame:
-    name = f"x71_dedup_{next(_X71_SEQ)}"
-    # State-volume-derived partitioning (the x76 pattern).  Dedup state
-    # is one fixed-width row per DISTINCT content hash, bounded above by
-    # the document count -- which the parquet footer answers driver-side
-    # with no job at all (the footer_row_count discipline).
-    src = os.path.join(sf_dir, "documents.parquet")
-    probe_key = ("x71", src, _source_fingerprint(src))
-    n_state = _STATE_PROBE_CACHE.get(probe_key)
-    if n_state is None:
-        from ..operators.store import footer_row_count
-
-        n_state = footer_row_count(spark, sf_dir, "documents")
-        _STATE_PROBE_CACHE[probe_key] = n_state
-    parts = derive_state_partitions(
-        n_state, max_partitions=spark.sparkContext.defaultParallelism
+    # Dedup state is one row per DISTINCT content hash, bounded above by
+    # the document count -- which the parquet footers answer driver-side
+    # with no job at all.
+    sess = _state_session(
+        spark, sf_dir, "documents", "x71",
+        lambda: footer_row_count(spark, sf_dir, "documents"),
     )
-    sess = _stream_session(spark, parts)
-    _remember_stream_view(spark, parts, name)
-    q = (
-        streaming_dedup_state(read_document_stream(sess, sf_dir))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        streaming_dedup_state(read_document_stream(sess, sf_dir)),
+        "complete", "x71",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("x71 streaming query did not terminate in 300s")
-    return sess.table(name)

@@ -9,12 +9,13 @@ duplicate structure (bijective text permutation), and vector geometry
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pyspark.sql.functions as F
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import sf1_rung
 

@@ -393,6 +393,23 @@ def test_upsert_skips_the_schema_inference_job(
     assert _read_kv(spark, path) == {(1, "a"), (2, "B"), (3, "c")}
 
 
+def test_catalog_registers_upserted_table_without_a_job(
+    spark, tmp_path, spark_jobs
+):
+    """A catalog table written by ``upsert_parquet`` is registered with the
+    schema from its footer: no schema-inference job."""
+    from conecta_spark.sources.parquet import ParquetDirSource
+
+    path = str(tmp_path / "tbl.parquet")
+    _mk_table(spark, path, [(1, "a"), (2, "b")])
+    src = ParquetDirSource(spark, str(tmp_path))
+    with spark_jobs() as jobs:
+        df = src.query("select * from tbl")
+    assert len(jobs) == 0
+    assert df.schema == spark.read.parquet(path).schema
+    assert {(r.k, r.v) for r in df.collect()} == {(1, "a"), (2, "b")}
+
+
 # -- the upsert's output sized by bytes ---------------------------------------
 
 

@@ -675,6 +675,45 @@ def test_state_partition_conversion_does_not_leak(spark, sf_dir):
         assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "x65_streaming_hourly_parity",
+        "x71_streaming_dedup_state",
+        "x72_streaming_session_window",
+        "x75_streaming_enrich",
+        "x76_streaming_interval_join",
+    ],
+)
+def test_streaming_entry_leaves_no_sink_view(spark, sf_dir, name):
+    """A streaming registry entry drops its memory-sink view before it
+    returns, in the caller's session and in the child session alike; the
+    returned DataFrame still holds the drained rows after a second call."""
+    from collections import Counter
+
+    from conecta_spark.queries import REGISTRY
+    from conecta_spark.streaming.events import _STREAM_SESSIONS
+
+    def temp_views():
+        return {
+            (id(s), t.name)
+            for s in (spark, *_STREAM_SESSIONS.values())
+            for t in s.catalog.listTables()
+            if t.isTemporary
+        }
+
+    fn = REGISTRY[name].fn
+    before = temp_views()
+    first = fn(spark, sf_dir)
+    rows = Counter(map(tuple, first.collect()))
+    assert rows
+    assert temp_views() <= before
+    second = fn(spark, sf_dir)
+    assert temp_views() <= before
+    assert Counter(map(tuple, first.collect())) == rows
+    assert Counter(map(tuple, second.collect())) == rows
+
+
 def test_stream_schema_cache_hits_and_invalidates(spark, tmp_path):
     """_stream_schema must serve repeats from the cache (no footer
     re-read per invocation) yet re-read when the source content
@@ -685,16 +724,16 @@ def test_stream_schema_cache_hits_and_invalidates(spark, tmp_path):
 
     src = str(tmp_path / "schema_cache.parquet")
     spark.createDataFrame([(1,)], "a long").coalesce(1).write.parquet(src)
-    s1 = ev._stream_schema(spark, src)
-    key = (src, ev._source_fingerprint(src))
+    s1 = ev._stream_schema(spark, str(tmp_path), "schema_cache")
+    key = ev.corpus_fingerprint(str(tmp_path), "schema_cache")
     sentinel = object()
     ev._STREAM_SCHEMA_CACHE[key] = sentinel
     # same content -> cache hit, the sentinel proves no re-read happened
-    assert ev._stream_schema(spark, src) is sentinel
+    assert ev._stream_schema(spark, str(tmp_path), "schema_cache") is sentinel
     # content rewrite (same names, new mtime) -> fresh footer read
     part = next(p for p in os.listdir(src) if p.endswith(".parquet"))
     os.utime(os.path.join(src, part), ns=(1, 1))
-    assert ev._stream_schema(spark, src) == s1
+    assert ev._stream_schema(spark, str(tmp_path), "schema_cache") == s1
 
 
 def test_stage_dir_rebuilds_when_targets_change(spark, tmp_path):
@@ -747,7 +786,6 @@ def test_stream_session_cache_keeps_same_app_entries(spark):
     undropped memory-sink views (r10 advice)."""
     from conecta_spark.streaming.events import (
         _STREAM_SESSIONS,
-        _remember_stream_view,
         _stream_session,
     )
 
@@ -759,18 +797,10 @@ def test_stream_session_cache_keeps_same_app_entries(spark):
     assert _stream_session(spark, 8) is s8
     app = spark.sparkContext.applicationId
     assert {(app, 4), (app, 8)} <= set(_STREAM_SESSIONS)
-    # a dead-app entry IS evicted, and its remembered view is dropped
-    s4.createDataFrame([(1,)], "a long").createOrReplaceTempView(
-        "dead_app_view"
-    )
+    # a dead-app entry IS evicted
     _STREAM_SESSIONS[("dead-app", 4)] = s4
-    _remember_stream_view(spark, 4, "dead_app_view")
-    from conecta_spark.streaming import events as _ev
-
-    _ev._STREAM_LAST_VIEW[("dead-app", 4)] = "dead_app_view"
     _stream_session(spark, 16)
     assert ("dead-app", 4) not in _STREAM_SESSIONS
-    assert not any(v.name == "dead_app_view" for v in s4.catalog.listTables())
 
 
 def test_event_stream_sets_nanos_conf_only_for_nanos_files(spark, sf_dir):
@@ -788,13 +818,13 @@ def test_source_fingerprint_sees_part_rewrite(spark, tmp_path):
     advice)."""
     import os
 
-    from conecta_spark.streaming.events import _source_fingerprint
+    from conecta_spark.operators.store import corpus_fingerprint
 
     src = str(tmp_path / "events.parquet")
     spark.createDataFrame([(1,)], "a long").coalesce(1).write.parquet(src)
-    fp1 = _source_fingerprint(src)
+    fp1 = corpus_fingerprint(str(tmp_path), "events")
     part = next(
         p for p in os.listdir(src) if p.endswith(".parquet")
     )
     os.utime(os.path.join(src, part), ns=(1, 1))  # same name, same size
-    assert _source_fingerprint(src) != fp1
+    assert corpus_fingerprint(str(tmp_path), "events") != fp1
