@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..plans.skew import spread
 from ..queries import DSUM, dsum, register, t
+from ..session import PersistSlot
 
 _WORDS = r"split(trim(lower({col})), '\\s+')"
 _DUCK_WORDS = r"regexp_split_to_array(trim(lower({col})), '\s+')"
@@ -597,9 +598,8 @@ def x56_oov(spark, sf_dir) -> DataFrame:
     return oov_stats(spread(t(spark, sf_dir, "documents")), vocab_size=16)
 
 
-#: One-slot cache for source_quality_norm's quantized score relation
-#: (evict-first; see the cache-leak rule in stringsim._qgram_candidates).
-_ZQ_LIVE: list = []
+#: source_quality_norm's quantized score relation.
+_ZQ = PersistSlot()
 
 
 def source_quality_norm(
@@ -631,25 +631,18 @@ def source_quality_norm(
     aggregate and the join side, and AQE never reuses exchanges across
     the two -- un-persisted, the text is scanned and scored twice (at
     100 TB a second full corpus pass vs ~20 bytes/doc of fixed-width
-    cache).  One-slot evict-first persist, the repo-wide rule.
+    cache).  The persist is released at the next call's start.
     """
     from .text import quality_score
 
-    while _ZQ_LIVE:
-        try:
-            _ZQ_LIVE.pop().unpersist()
-        except Exception:
-            pass
-    from pyspark import StorageLevel
-
-    d = df.select(
+    _ZQ.evict()
+    d = _ZQ.hold(df.select(
         F.col(id_col),
         F.col(source_col),
         F.round(quality_score(text_col) * F.lit(1_000_000.0))
         .cast("long")
         .alias("q"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _ZQ_LIVE.append(d)
+    ))
     s = d.groupBy(source_col).agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("q").alias("s1"),

@@ -26,11 +26,13 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import MOD, duck_polyhash, polyhash
 from ..queries import register, t
+from ..session import PersistSlot
 
 # -- expression builders (Spark SQL + DuckDB twins) -------------------------
 
@@ -397,6 +399,10 @@ def _verify_exact_jaccard(
     )
 
 
+#: ngram_jaccard_pairs' hashed-shingle relation.
+_NGRAM = PersistSlot()
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.8,
@@ -452,14 +458,13 @@ def ngram_jaccard_pairs(
     cands = cands.repartition(
         df.sparkSession.sparkContext.defaultParallelism, "doc_a"
     )
-    from pyspark import StorageLevel
-
     # Persisted: the verification join's two attach sides would otherwise
     # each re-run the shingle-hash stage (join subtrees don't share work).
-    sh = (
-        hashed_shingles(df, k, text_col, id_col)
-        .withColumn("n_sh", F.size("sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    _NGRAM.evict()
+    sh = _NGRAM.hold(
+        hashed_shingles(df, k, text_col, id_col).withColumn(
+            "n_sh", F.size("sh")
+        )
     )
     if broadcast_verify == "auto":
         # One aggregate over the about-to-be-cached relation: materializes
@@ -510,27 +515,11 @@ def _prune_by_size_ratio(
     )
 
 
-#: Previous minhash_lsh_pairs invocation's internal persisted relations
-#: (hashed shingles, banded keys), evicted at the START of the next call --
-#: the repo-wide cache-leak rule (evict-before-persist: CacheManager
-#: dedupes canonically-equal plans, so unpersisting AFTER the new persist
-#: would uncache the new relations too).  Without the slot a long-lived
-#: session alternating corpora accumulates two cached relations per mining
-#: call.  Eviction is safe for earlier consumers: the returned pair
-#: relation is itself persisted by its callers (shared_minhash_pairs), and
-#: an unpersisted lineage merely recomputes.
-_MINE_LIVE: list = []
-
-
-def _evict_mine_live() -> None:
-    """Unpersist the previous mining pass's cached relations BEFORE the
-    next persist (never after -- CacheManager dedupes canonically-equal
-    plans, so unpersist-after would uncache the new entries too)."""
-    while _MINE_LIVE:
-        try:
-            _MINE_LIVE.pop().unpersist()
-        except Exception:
-            pass
+#: One mining pass's internal relations (hashed shingles, banded keys,
+#: wide buckets, candidates), shared by the standing miner here and the
+#: incremental miner in minhash_store.  The returned pair relation is
+#: persisted by its callers (shared_minhash_pairs).
+MINING = PersistSlot()
 
 
 def minhash_lsh_pairs(
@@ -772,16 +761,12 @@ def _drop_wide_buckets(
     key set, so both sides of the candidate join see one consistent
     bucket universe).  Returns the filtered relation, or a list when
     ``others`` are passed."""
-    from pyspark import StorageLevel
-
-    wide = (
+    wide = MINING.hold(
         banded_all.groupBy("band_idx", "band_key")
         .agg(F.count(F.lit(1)).alias("n"))
         .where(F.col("n") > max_band_width)
         .select("band_idx", "band_key")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _MINE_LIVE.append(wide)
     out = [
         rel.join(F.broadcast(wide), ["band_idx", "band_key"], "left_anti")
         for rel in (banded_all, *others)
@@ -852,22 +837,17 @@ def _verify_candidates(
     stage instead of being fused into one giant codegen unit with the
     band join -- the fused form intermittently fell out of codegen and
     burned ~250 s of interpreted CPU on a stage that takes ~7 s compiled."""
-    from pyspark import StorageLevel
-
     # Repartition FIRST, then dedup: hashpartitioning(doc_a) already
     # co-locates equal (doc_a, doc_b) rows, so the dedup aggregate
     # satisfies its clustering requirement from this one exchange --
     # previously distinct shuffled the pairs and the repartition
     # shuffled them AGAIN (2 Exchange -> 1; the raw multi-band
     # duplicates ride the single exchange as skinny 16-byte rows).
-    cands = (
+    cands = MINING.hold(
         cands.repartition(
             df.sparkSession.sparkContext.defaultParallelism, "doc_a"
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ).dropDuplicates(["doc_a", "doc_b"])
     )
-    _MINE_LIVE.append(cands)
     cands.count()
     sh = hashed.withColumn("n_sh", F.size("sh"))
     return _verify_exact_jaccard(cands, sh, threshold, id_col, broadcast_verify)
@@ -891,19 +871,14 @@ def _mine_banded(
     :func:`incremental_minhash_pairs` (new-batch-driven candidates):
     hashed shingles (persisted), document-frequency filter, MinHash
     signatures, banding (persisted, optionally width-capped).  Returns
-    ``(hashed, banded, broadcast_verify_resolved)``; persist/eviction
-    discipline documented at ``_MINE_LIVE``."""
+    ``(hashed, banded, broadcast_verify_resolved)``; both are held in
+    :data:`MINING`."""
     # The hashed-shingle relation feeds three consumers (DF stats, filtered
     # signatures, exact verification); persist it so the shingle hashing
     # runs once, not once per consumer.  MEMORY_AND_DISK: spills instead of
     # recomputing at scale.
-    from pyspark import StorageLevel
-
-    _evict_mine_live()
-    hashed = hashed_shingles(df, k, text_col, id_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _MINE_LIVE.append(hashed)
+    MINING.evict()
+    hashed = MINING.hold(hashed_shingles(df, k, text_col, id_col))
     # One aggregate over the about-to-be-cached relation doubles as (a) the
     # corpus count the DF filter needs (the planner-style metadata probe, cf.
     # reference O9 -- previously a separate full pass over ``df``) and (b)
@@ -955,12 +930,11 @@ def _mine_banded(
     # does NOT deduplicate them under AQE because each side plans its
     # exchange independently before runtime reuse can kick in; measured
     # 15 s vs 3 s at sf0.1 for the full operator.
-    banded = banded.repartition(
+    banded = MINING.hold(banded.repartition(
         df.sparkSession.sparkContext.defaultParallelism,
         "band_idx",
         "band_key",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _MINE_LIVE.append(banded)
+    ))
     if max_band_width == "auto":
         # incremental callers hand their new-id set down so the probe
         # prices THEIR batch-driven candidate shape, not the self-join's
@@ -1287,6 +1261,10 @@ def duck_word_shingles(col: str = "text", w: int = 3) -> str:
     )
 
 
+#: minhash_lsh_ml's shingle-vector relation.
+_ML_FEAT = PersistSlot()
+
+
 def minhash_lsh_ml(
     df: DataFrame,
     threshold: float = 0.5,
@@ -1308,7 +1286,6 @@ def minhash_lsh_ml(
     Character 5-grams made nearly every doc pair collide somewhere (measured
     ~9 min for 5k docs); WORD 3-gram shingles share far fewer features
     across unrelated docs and keep the candidate set near-linear."""
-    from pyspark import StorageLevel
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
     from ..plans.skew import spread
@@ -1319,7 +1296,8 @@ def minhash_lsh_ml(
     tf = HashingTF(inputCol="sh", outputCol="features", numFeatures=num_features, binary=True)
     # approxSimilarityJoin self-joins `feat`; unpersisted, the shingle split
     # + TF hashing would run once per side (and once more for fit).
-    feat = tf.transform(sh).persist(StorageLevel.MEMORY_AND_DISK)
+    _ML_FEAT.evict()
+    feat = _ML_FEAT.hold(tf.transform(sh))
     lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed)
     model = lsh.fit(feat)
     joined = model.approxSimilarityJoin(feat, feat, 1.0 - threshold, distCol="jaccard_dist")
@@ -1449,12 +1427,10 @@ _DUCK_MH_SIGS = _duck_mh_sigs()
 #: x07 materializes the graph, x26 clusters it, and the CC_SLICE entries
 #: (x50/x67) share one slice-scoped mining pass.  Same contract as
 #: simsearch._panel_prep: keyed on applicationId (id() values can be
-#: reused across garbage-collected sessions), one-slot, and the previous
-#: relation is evicted at the START of the next miss, never after the new
-#: persist (CacheManager dedupes canonically-equal plans -- unpersist-after
-#: would uncache the new entry too).  Values are unaffected: the pipeline
-#: is deterministic, so a cache hit returns exactly what a re-mine would.
-_PAIRS_LIVE: list = []
+#: reused across garbage-collected sessions).  Values are unaffected: the
+#: pipeline is deterministic, so a cache hit returns exactly what a
+#: re-mine would.
+_PAIRS = PersistSlot()
 
 
 def shared_minhash_pairs(
@@ -1464,42 +1440,29 @@ def shared_minhash_pairs(
     (optionally the first ``limit`` doc_ids), persisted once per
     (session, corpus, limit, threshold) and shared across the registry
     entries that consume the same mined graph."""
-    from pyspark import StorageLevel
-
     key = (spark.sparkContext.applicationId, sf_dir, limit, threshold)
-    if _PAIRS_LIVE and _PAIRS_LIVE[0][0] == key:
-        cached = _PAIRS_LIVE[0][1]
-        # Staleness guard: spark.catalog.clearCache() (bench.py runs it
-        # between every timed run) drops the cache entry WITHOUT notifying
-        # this slot.  Serving the now-unpersisted DataFrame would re-execute
-        # the whole mining tree with its internal persists gone -- the band
-        # self-join then re-runs the signature pipeline per side (the
-        # documented 15 s-vs-3 s blowup).  storageLevel consults the live
-        # CacheManager, so a cleared entry reads as NONE -> re-mine.
-        if cached.storageLevel.useMemory or cached.storageLevel.useDisk:
-            return cached
-    while _PAIRS_LIVE:
-        try:
-            _PAIRS_LIVE.pop()[1].unpersist()
-        except Exception:
-            pass
+    # A relation clearCache() dropped (bench.py runs it between timed runs)
+    # reads as a miss: served uncached, it would re-execute the mining tree
+    # with its internal persists gone -- the band self-join re-running the
+    # signature pipeline per side (the documented 15 s-vs-3 s blowup).
+    cached = _PAIRS.get(key)
+    if cached is not None:
+        return cached
+    _PAIRS.evict()
     docs = t(spark, sf_dir, "documents")
     if limit is not None:
         docs = docs.where(F.col("doc_id") < limit)
-    pairs = minhash_lsh_pairs(docs, threshold=threshold).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    pairs = _PAIRS.hold(minhash_lsh_pairs(docs, threshold=threshold), key=key)
     # Materialize before returning: the one-slot cache evicts on every key
     # switch, so interleaving full-corpus consumers (x07/x26) with slice
     # consumers (x50/x67) in a non-registry order could otherwise unpersist
     # a relation whose lineage was never computed -- and the NEXT miss also
-    # evicts the mining internals (_MINE_LIVE), silently re-running the
-    # band self-join per side (the documented 15 s-vs-3 s blowup).  An
-    # eager count pins the data while the internal persists are still
-    # live, making later eviction a pure cache drop, never a re-mine of a
+    # evicts the mining internals (MINING), silently re-running the band
+    # self-join per side (the documented 15 s-vs-3 s blowup).  An eager
+    # count pins the data while the internal persists are still live,
+    # making later eviction a pure cache drop, never a re-mine of a
     # stranded lineage.
     pairs.count()
-    _PAIRS_LIVE.append((key, pairs))
     return pairs
 
 
@@ -1677,9 +1640,8 @@ def x08_simhash(spark, sf_dir) -> DataFrame:
 # (oracle-side only), and caps the worst case where one hot shingle's
 # posting list would dominate the index join.
 X09_SLICE = 500
-#: one live cached inverted index per session (evict-then-persist; see
-#: stringsim._LIVE_PREFIX for the two CacheManager traps this avoids)
-_X09_LIVE: list = []
+#: x09's ml pair relation and inverted index.
+_X09 = PersistSlot()
 _X09_ORACLE = (
     f"WITH sh AS (SELECT doc_id, {duck_word_shingles('text', 3)} AS sh "
     f" FROM documents WHERE doc_id < {{slice}}), "
@@ -1703,15 +1665,7 @@ _X09_ORACLE = (
 def x09_minhash_ml(spark, sf_dir) -> DataFrame:
     from pyspark.sql.window import Window
 
-    # evict the PREVIOUS call's ml internals before this call persists
-    # its own (the _MINE_LIVE evict-before-persist rule); the relations
-    # stay referenced by this call's lazy plan until execution, where
-    # they re-persist
-    while _X09_LIVE:
-        try:
-            _X09_LIVE.pop().unpersist()
-        except Exception:
-            pass
+    _X09.evict()
     docs = t(spark, sf_dir, "documents").where(F.col("doc_id") < X09_SLICE)
     # ml pair relation kept DISTRIBUTED end-to-end (pre-r10 this was a
     # driver collect + re-createDataFrame -- bounded by the slice but
@@ -1722,26 +1676,19 @@ def x09_minhash_ml(spark, sf_dir) -> DataFrame:
     # without the persist the OR-amplified approxSimilarityJoin -- the
     # operator's dominant cost -- would execute twice per
     # materialization.
-    from pyspark import StorageLevel
-
-    ml = (
-        minhash_lsh_ml(docs, threshold=0.5)
-        .select("doc_a", "doc_b")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    ml = _X09.hold(
+        minhash_lsh_ml(docs, threshold=0.5).select("doc_a", "doc_b")
     )
-    _X09_LIVE.append(ml)
     ml_n = ml.agg(F.count(F.lit(1)).cast("double").alias("__n_ml"))
     # inverted index: (doc, set size, shingle) exploded from the distinct
     # shingle array.  Self-joined on the shingle -> persist the skinny
     # relation (AQE never reuses exchanges across self-join sides).
-    inv = (
+    inv = _X09.hold(
         docs.select(
             "doc_id", F.expr(word_shingles_expr("text", 3)).alias("sh")
-        )
-        .select("doc_id", F.size("sh").alias("n"), F.explode("sh").alias("s"))
-        .persist()
+        ).select("doc_id", F.size("sh").alias("n"), F.explode("sh").alias("s")),
+        StorageLevel.MEMORY_AND_DISK_DESER,
     )
-    _X09_LIVE.append(inv)
     a, b = inv.alias("a"), inv.alias("b")
     # J >= 0.5 forces the 2*min >= max size band (theorem), applied in the
     # join to prune pairs before the per-pair aggregate; c shared shingles
@@ -2164,9 +2111,8 @@ def x61_scrub(spark, sf_dir) -> DataFrame:
     return span_scrub(t(spark, sf_dir, "documents"))
 
 
-#: One-slot cache for source_overlap's distinct span relation
-#: (evict-first; the repo-wide cache-leak rule).
-_X64_LIVE: list = []
+#: source_overlap's distinct span relation (``persist_spans=True``).
+_X64 = PersistSlot()
 
 
 def source_overlap(
@@ -2209,16 +2155,8 @@ def source_overlap(
         "__src",
     ).distinct()
     if persist_spans:
-        # one-slot evict-first cache (the repo-wide cache-leak rule)
-        while _X64_LIVE:
-            try:
-                _X64_LIVE.pop().unpersist()
-            except Exception:
-                pass
-        from pyspark import StorageLevel
-
-        spans = spans.persist(StorageLevel.MEMORY_AND_DISK)
-        _X64_LIVE.append(spans)
+        _X64.evict()
+        spans = _X64.hold(spans)
     sizes = spans.groupBy("__src").agg(F.count(F.lit(1)).alias("n"))
     a = spans.select(F.col("__src").alias("source_a"), "h")
     b = spans.select(F.col("__src").alias("source_b"), "h")

@@ -66,11 +66,10 @@ from pyspark.sql import functions as F
 
 from . import store
 from .dedup import (
+    MINING,
     VERIFY_BROADCAST_MAX_BYTES,
     _drop_wide_buckets,
     _estimate_shingle_bytes,
-    _evict_mine_live,
-    _MINE_LIVE,
     _new_driven_pairs,
     auto_band_width,
     band_signatures,
@@ -256,8 +255,6 @@ def incremental_pairs_stored(
     ``"auto"`` (priced over stored-plus-batch band widths).  Width is
     evaluated over the UNION, so a batch that lands in an already-wide
     stored bucket is capped consistently with a from-scratch mine."""
-    from pyspark import StorageLevel
-
     m = read_manifest(store_path)
     id_col = m["id_col"]
     stored_banded = store.relation(spark, store_path, m, "banded")
@@ -278,11 +275,10 @@ def incremental_pairs_stored(
                 "disjoint (append_batch after mining keeps them so)"
             )
 
-    _evict_mine_live()
-    hashed_new = hashed_shingles(
-        new_df, m["k"], m["text_col"], id_col
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _MINE_LIVE.append(hashed_new)
+    MINING.evict()
+    hashed_new = MINING.hold(
+        hashed_shingles(new_df, m["k"], m["text_col"], id_col)
+    )
     n_new, tot_new = _shingle_stats(hashed_new)
     if broadcast_verify == "auto":
         # the gate must size the WHOLE shingle relation the verify join
@@ -296,10 +292,9 @@ def incremental_pairs_stored(
             <= VERIFY_BROADCAST_MAX_BYTES
         )
 
-    banded_new = _sign_and_band(
+    banded_new = MINING.hold(_sign_and_band(
         hashed_new, common, m["num_perms"], m["bands"], id_col
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _MINE_LIVE.append(banded_new)
+    ))
     banded_all = stored_banded.unionByName(banded_new)
     if max_band_width == "auto":
         # price the batch-driven candidate shape (wn*(w-wn) + wn-choose-2

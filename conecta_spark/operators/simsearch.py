@@ -20,6 +20,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,6 +36,7 @@ from ..functions.vector import (
 )
 from ..plans.skew import spread
 from ..queries import register, t
+from ..session import PersistSlot
 
 DIM = 64  # driver embeddings are 64-dim (FIXTURES.md 4)
 
@@ -145,8 +147,8 @@ def knn_topk(
     return _topk_ranked(scored, k, id_col)
 
 
-#: One-slot cache for embedding_near_dup_pairs' packed block relation.
-_X11_LIVE: list = []
+#: embedding_near_dup_pairs' packed block relation.
+_X11 = PersistSlot()
 
 #: Corpus-size cap for the exact all-pairs block grid: 256 blocks x 1024
 #: rows.  Beyond this the grid is O(N^2/256^2) work PER TASK and the
@@ -234,21 +236,13 @@ def embedding_near_dup_pairs(
     # exchanges across self-join sides -- un-persisted, the validity
     # filter + normalize + pack aggregation ran twice (one extra full
     # corpus pass).  The packed relation is the corpus's unit vectors,
-    # exactly once each: same footprint as the input.  One-slot
-    # evict-first cache (the repo-wide rule).
-    while _X11_LIVE:
-        try:
-            _X11_LIVE.pop().unpersist()
-        except Exception:
-            pass
-    from pyspark import StorageLevel
-
-    blocks = (
-        e.groupBy("bid")
-        .agg(F.collect_list(F.struct("vid", "nv")).alias("rows"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # exactly once each: same footprint as the input.
+    _X11.evict()
+    blocks = _X11.hold(
+        e.groupBy("bid").agg(
+            F.collect_list(F.struct("vid", "nv")).alias("rows")
+        )
     )
-    _X11_LIVE.append(blocks)
     a, b = blocks.alias("a"), blocks.alias("b")
     grid = a.join(b, F.col("a.bid") <= F.col("b.bid")).select(
         F.col("a.bid").alias("bid_a"),
@@ -411,7 +405,6 @@ def brp_lsh_ml_panel(
     ``feat`` short-circuits the prep with an externally-owned, persisted
     (id, features) relation (the x13/x14 shared _panel_prep cache); its
     lifetime is then the caller's, not this function's."""
-    from pyspark import StorageLevel
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
 
@@ -579,7 +572,6 @@ def build_ivf_index(
     ``feat`` short-circuits the corpus prep with an already-validated
     (id, v, ...) relation (the x13/x14 shared _panel_prep cache)."""
     import numpy as np
-    from pyspark import StorageLevel
 
     vecs = (
         feat.select(id_col, "v")
@@ -839,11 +831,8 @@ ANN_QUERY_IDS = (0, 1, 2, 3, 4)
 #: ml vectors), so a bench pass re-scanned/filtered/cast the embeddings
 #: table four times.  The prep is computed ONCE per (session, sf_dir) as a
 #: persisted (vec_id, v, features) relation shared by both entries and both
-#: halves.  Eviction follows the repo-wide cache-leak rule: the PREVIOUS
-#: key's relation is unpersisted at the START of the next miss, never after
-#: the new persist (Spark's CacheManager dedupes canonically-equal plans --
-#: unpersist-after would uncache the new entry too).
-_ANN_PREP: list = []
+#: halves.
+_PANEL_PREP = PersistSlot()
 
 #: Rows of 64-dim vectors per partition of the shared panel-prep cache.
 #: Sized so the per-row work a partition carries (~0.5 ms/row of
@@ -856,7 +845,6 @@ def _panel_prep(spark, sf_dir: str) -> DataFrame:
     """(vec_id, v: array<double>, features: ml VectorUDT) over the valid
     vectors of ``sf_dir``'s embeddings table, persisted and shared across
     the x13/x14 metric-oracle entries."""
-    from pyspark import StorageLevel
     from pyspark.ml.functions import array_to_vector
 
     # Session-unique key: applicationId, not id(spark) -- id() values can
@@ -865,16 +853,10 @@ def _panel_prep(spark, sf_dir: str) -> DataFrame:
     # session (worse than the harmless re-read the id() pattern risks in
     # queries.py, because this cache holds a persisted relation).
     key = (spark.sparkContext.applicationId, sf_dir)
-    if _ANN_PREP and _ANN_PREP[0][0] == key:
-        cached = _ANN_PREP[0][1]
-        # Staleness guard (cf. dedup._PAIRS_LIVE): spark.catalog.clearCache()
-        # drops the entry without notifying this slot; storageLevel reads the
-        # live CacheManager, so a cleared relation falls through to a re-prep
-        # instead of serving an unpersisted DataFrame to two consumers.
-        if cached.storageLevel.useMemory or cached.storageLevel.useDisk:
-            return cached
-    if _ANN_PREP:
-        _ANN_PREP.pop()[1].unpersist()
+    cached = _PANEL_PREP.get(key)
+    if cached is not None:
+        return cached
+    _PANEL_PREP.evict()
     emb = t(spark, sf_dir, "embeddings")
     # spread before the cast/vectorize projections: the persisted prep
     # inherits the scan's partitioning, and a single-row-group scan would
@@ -894,17 +876,14 @@ def _panel_prep(spark, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism,
         -(-rows // _PREP_ROWS_PER_PART),
     ))
-    prep = (
-        spread(valid_vectors(emb), parts=width)
-        .select(
+    return _PANEL_PREP.hold(
+        spread(valid_vectors(emb), parts=width).select(
             F.col("vec_id"),
             F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("v"),
             array_to_vector(F.col("embedding")).alias("features"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        key=key,
     )
-    _ANN_PREP.append((key, prep))
-    return prep
 
 
 def _exact_topk_panel(
@@ -1335,6 +1314,10 @@ def x49_filtered(spark, sf_dir) -> DataFrame:
 # -- semantic dedup (SemDeDup-style, cell-blocked) ---------------------------
 
 
+#: semantic_dedup's cell-assignment relation.
+_SEMDEDUP = PersistSlot()
+
+
 def semantic_dedup(
     df: DataFrame,
     k: int = 8,
@@ -1380,7 +1363,12 @@ def semantic_dedup(
         .select(F.expr(f"named_struct('cid', {id_col}, 'qc', qa)").alias("c"))
         .agg(F.expr("array_agg(c)").alias("cs"))
     )
-    assigned = (
+    # Referenced three times (both block-grid sides + the final left
+    # join); without a persist each reference replans the whole
+    # quantize/argmax/normalize pipeline -- the x07 ReuseExchange
+    # lesson.  Skinny relation: (id, cell, unit vector).
+    _SEMDEDUP.evict()
+    assigned = _SEMDEDUP.hold(
         qe.crossJoin(F.broadcast(cents))
         .select(
             F.col(id_col),
@@ -1396,12 +1384,8 @@ def semantic_dedup(
             id_col,
             (-F.col("negcid")).cast("long").alias("centroid_id"),
             "nv",
-        )
-        # Referenced three times (both block-grid sides + the final left
-        # join); without a persist each reference replans the whole
-        # quantize/argmax/normalize pipeline -- the x07 ReuseExchange
-        # lesson.  Skinny relation: (id, cell, unit vector).
-        .persist()
+        ),
+        StorageLevel.MEMORY_AND_DISK_DESER,
     )
     n_blocks = max(1, min(64, -(-df.count() // (k * 1024))))
     blocks = (

@@ -43,23 +43,19 @@ levenshtein join as the semantic contract.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.skew import spread
 from ..queries import register, t
+from ..session import PersistSlot
 
-#: At most one cached prefix-label relation per session: each
-#: _qgram_candidates call evicts its predecessor's persist (r5 advice --
-#: repeated invocations otherwise accumulate CacheManager entries).
-_LIVE_PREFIX: list = []
-
-#: Same one-slot hygiene for the d=1 deletion-neighborhood signature
-#: relation (edit_distance_join persisted it without eviction -- the
-#: exact leak the r5 advice flagged for the prefix relation).  Separate
-#: slot from _LIVE_PREFIX so a d=1 and a d>=2 join in one session don't
-#: thrash each other's cache.
-_LIVE_DEL1: list = []
+#: _qgram_candidates' prefix-label relation, and edit_distance_join's d=1
+#: deletion-neighborhood signatures: separate slots, so a d=1 and a d>=2
+#: join in one session don't thrash each other's cache.
+_PREFIX = PersistSlot()
+_DEL1 = PersistSlot()
 
 
 def _del1_signatures_expr(col: str) -> str:
@@ -114,15 +110,8 @@ def edit_distance_join(
     # broadcast build over the signature relation) on one core -- guide
     # 2.5 input-skew medicine, no-op when the scan is already wide
     df = spread(df)
-    # Evict-first, then persist (the CacheManager dedupes canonically-
-    # equal plans, so evicting after would uncache the new relation too
-    # -- see _qgram_candidates for both measured traps).
-    while _LIVE_DEL1:
-        try:
-            _LIVE_DEL1.pop().unpersist()
-        except Exception:
-            pass
-    sigs = df.select(
+    _DEL1.evict()
+    sigs = _DEL1.hold(df.select(
         F.col(id_col),
         F.explode(
             F.array_distinct(F.expr(_del1_signatures_expr(string_col)))
@@ -131,8 +120,7 @@ def edit_distance_join(
         # never reuses exchanges across them -- the x07/x54 lesson), and
         # the deletion-neighborhood transform is an interpreted lambda
         # worth evaluating once.  Skinny relation: (id, signature).
-    ).persist()
-    _LIVE_DEL1.append(sigs)
+    ), StorageLevel.MEMORY_AND_DISK_DESER)
     if sig_count_cap is not None:
         ok = (
             sigs.groupBy("sig")
@@ -342,22 +330,10 @@ def _qgram_candidates(
     DISTINCT (id_a, id_b) candidate pairs awaiting verification.  Split
     out so scale_bench.py can meter blocking precision (candidates vs
     verified) without a second pipeline."""
-    # Generation-over-generation cache hygiene (the connected_components
-    # pattern, r5 advice): evict the PREVIOUS invocation's prefix
-    # relation so repeated calls in one session hold at most one cached
-    # copy.  Two traps measured while landing this: an eager
-    # localCheckpoint self-releases on GC but materializes the relation
-    # as a row-format RDD and blinds AQE for the self-join (1.7s ->
-    # 4.2s); and evicting AFTER the new persist() silently uncaches the
-    # new relation too -- the CacheManager dedupes canonically-equal
-    # plans, so the old entry IS the new entry (1.7s -> 9.4s, both
-    # join sides replanning the gram pipeline).  Evict first, then
-    # persist.
-    while _LIVE_PREFIX:
-        try:
-            _LIVE_PREFIX.pop().unpersist()
-        except Exception:
-            pass
+    # A persist slot, not an eager localCheckpoint: that self-releases on
+    # GC but materializes the relation as a row-format RDD and blinds AQE
+    # for the self-join (measured 1.7 s -> 4.2 s).
+    _PREFIX.evict()
     if threshold < 1:
         raise ValueError("threshold must be >= 1")
     # spread: gram labeling (expr O(L^2) lambda or the pandas labeler)
@@ -419,7 +395,7 @@ def _qgram_candidates(
     # all 2-subsets of the pref_len labels, built map-side (the lambda
     # runs once per string over a (q*d+2)-element array -- interpreted,
     # but bounded by d and q, not by data)
-    prefix = labels.select(
+    prefix = _PREFIX.hold(labels.select(
         "id",
         "len",
         F.explode(
@@ -431,8 +407,7 @@ def _qgram_candidates(
         ).alias("pp"),
         # both self-join sides would replan the gram pipeline (AQE never
         # reuses exchanges across them -- the x07/x53 lesson)
-    ).persist()
-    _LIVE_PREFIX.append(prefix)
+    ), StorageLevel.MEMORY_AND_DISK_DESER)
     if sig_count_cap is not None:
         ok = (
             prefix.groupBy("pp")

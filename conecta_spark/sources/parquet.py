@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
-from ..plans.partition import QueryPartitioningMode
+from ..plans.partition import QueryPartitioningMode, wrap_query_with_bounds
 from ..session import copy_sql_conf, jvm_entry
 from .base import Source
 
@@ -318,12 +318,15 @@ class ParquetDirSource(Source):
             for d in dfs[1:]:
                 out = out.unionAll(d)
             return out
-        base = self.query(cfg.query[0])
         if cfg.mode is QueryPartitioningMode.ONE_UNPARTITIONED_QUERY:
-            return base
+            return self.query(cfg.query[0])
         # ONE_PARTITIONED_QUERY: single scan + range filter (see module
-        # docstring).  Union of the plan's [start,stop) bounds == the closed
-        # envelope [min, max]; NULL partition keys are dropped, matching the
-        # reference (SURVEY 1.4).
-        col = F.col(cfg.partition_on)
-        return base.where(col.isNotNull() & (col >= plan.min) & (col <= plan.max))
+        # docstring), in the planner's own bounded SQL.  Union of the plan's
+        # [start,stop) bounds == the closed envelope [min, max]; NULL
+        # partition keys fail the range predicate and are dropped, matching
+        # the reference (SURVEY 1.4).  A trailing ``;`` or ``-- comment`` is
+        # legal only at the top level: strip the one, end the other's line.
+        inner = re.sub(r"[\s;]*\Z", "", cfg.query[0]) + "\n"
+        return self.query(wrap_query_with_bounds(
+            inner, cfg.partition_on, (plan.min, plan.max), True
+        ))

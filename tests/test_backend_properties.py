@@ -222,15 +222,14 @@ class TestIVFQuantizerContract:
         b = ss._panel_prep(spark, oracle_dir)  # miss -> evict a
         assert b is not a
         assert not (a.storageLevel.useMemory or a.storageLevel.useDisk)
-        assert len(ss._ANN_PREP) == 1
+        assert len(ss._PANEL_PREP._held) == 1
         # clearCache staleness: a dropped cache entry must read as a MISS
         # (serving the unpersisted relation would re-scan per consumer)
         spark.catalog.clearCache()
         c = ss._panel_prep(spark, oracle_dir)
         assert c is not b
         assert c.storageLevel.useMemory or c.storageLevel.useDisk
-        c.unpersist()
-        ss._ANN_PREP.clear()
+        ss._PANEL_PREP.evict()
 
     def test_panel_prep_width_tracks_row_count(self, spark, sf_dir):
         """r12: the prep cache's partition count is derived from the
@@ -253,8 +252,7 @@ class TestIVFQuantizerContract:
             if spark.sparkContext.defaultParallelism > 1:
                 assert expect < spark.sparkContext.defaultParallelism
         finally:
-            prep.unpersist()
-            ss._ANN_PREP.clear()
+            ss._PANEL_PREP.evict()
 
     def test_shared_pairs_cache_contract(self, spark, sf_dir):
         """shared_minhash_pairs: hit returns the same persisted DataFrame,
@@ -263,7 +261,7 @@ class TestIVFQuantizerContract:
         from conecta_spark.operators import dedup as dd
         from conecta_spark.queries import t
 
-        dd._PAIRS_LIVE.clear()
+        dd._PAIRS.evict()
         a = dd.shared_minhash_pairs(spark, sf_dir, threshold=0.5)
         assert dd.shared_minhash_pairs(spark, sf_dir, threshold=0.5) is a
         assert a.storageLevel.useMemory or a.storageLevel.useDisk
@@ -276,49 +274,46 @@ class TestIVFQuantizerContract:
         b = dd.shared_minhash_pairs(spark, sf_dir, limit=100, threshold=0.5)
         assert b is not a
         assert not (a.storageLevel.useMemory or a.storageLevel.useDisk)
-        assert len(dd._PAIRS_LIVE) == 1
+        assert len(dd._PAIRS._held) == 1
         spark.catalog.clearCache()
         c = dd.shared_minhash_pairs(spark, sf_dir, limit=100, threshold=0.5)
         assert c is not b  # stale entry re-mined, not served unpersisted
         assert c.storageLevel.useMemory or c.storageLevel.useDisk
-        c.unpersist()
-        dd._PAIRS_LIVE.clear()
+        dd._PAIRS.evict()
 
     def test_shared_pairs_materialized_at_creation(self, spark, sf_dir):
         """The slot's relation must be EAGERLY materialized inside
         shared_minhash_pairs: a later key-switch eviction then only drops
         cached data (recomputable), never strands a persisted-but-never-
-        computed lineage whose mining internals (_MINE_LIVE) the next call
+        computed lineage whose mining internals (MINING) the next call
         evicts too -- the silent band-self-join recompute the r8 advice
         flagged.  Cached partitions must exist BEFORE any caller action."""
         from conecta_spark.operators import dedup as dd
 
-        dd._PAIRS_LIVE.clear()
+        dd._PAIRS.evict()
         a = dd.shared_minhash_pairs(spark, sf_dir, threshold=0.5)
         infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
         cached = sum(i.numCachedPartitions() for i in infos)
         assert cached > 0, "pairs relation returned unmaterialized"
-        a.unpersist()
-        dd._PAIRS_LIVE.clear()
+        dd._PAIRS.evict()
 
     def test_mining_internal_persists_are_slot_bounded(self, spark, sf_dir):
         """minhash_lsh_pairs' internal persisted relations (hashed
         shingles, banded keys, materialized candidates) must live in the
-        one-slot _MINE_LIVE eviction list: a second mining call unpersists
+        MINING persist slot: a second mining call unpersists
         the first call's internals (the repo-wide cache-leak rule), so a
         long-lived session alternating corpora holds at most one mining
         pass worth of cache."""
         from conecta_spark.operators import dedup as dd
         from conecta_spark.queries import t
 
-        dd._PAIRS_LIVE.clear()
-        while dd._MINE_LIVE:
-            dd._MINE_LIVE.pop().unpersist()
+        dd._PAIRS.evict()
+        dd.MINING.evict()
         first = dd.minhash_lsh_pairs(
             t(spark, sf_dir, "documents"), threshold=0.5
         )
         first.count()  # materialize: internals now cached
-        old = list(dd._MINE_LIVE)
+        old = [r for _, r in dd.MINING._held]
         assert len(old) == 3
         assert all(
             r.storageLevel.useMemory or r.storageLevel.useDisk for r in old
@@ -328,13 +323,12 @@ class TestIVFQuantizerContract:
             threshold=0.5,
         )
         second.count()
-        assert len(dd._MINE_LIVE) == 3  # slot holds ONE pass, not two
+        assert len(dd.MINING._held) == 3  # slot holds ONE pass, not two
         assert all(
             not (r.storageLevel.useMemory or r.storageLevel.useDisk)
             for r in old
         ), "previous invocation's internals must be unpersisted"
-        while dd._MINE_LIVE:
-            dd._MINE_LIVE.pop().unpersist()
+        dd.MINING.evict()
 
     def test_index_assignment_matches_exact_argmin(self, spark):
         """The distributed mapInPandas assignment must equal the exact

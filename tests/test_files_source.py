@@ -101,6 +101,26 @@ def test_read_with_quarantine_splits_good_and_bad(spark, tmp_path_factory):
     assert good.schema.fieldNames() == ["id", "text"]
 
 
+def test_earlier_quarantine_pair_survives_a_later_read(spark, tmp_path):
+    """A pair stays usable while its caller holds it: Spark refuses a
+    raw-file query that reads only the corrupt-record column, so the
+    parsed relation behind an earlier ``quarantine`` must stay cached
+    after later reads (an evict-on-next-call cache would break it)."""
+    from pyspark.sql import types as T
+
+    from conecta_spark.sources.files import read_with_quarantine
+
+    schema = T.StructType([T.StructField("id", T.LongType())])
+    pairs = []
+    for n in (3, 2):
+        p = tmp_path / f"rows{n}.json"
+        p.write_text("".join(f'{{"id": {i}}}\n' for i in range(n)) + "{bad\n")
+        pairs.append(read_with_quarantine(spark, str(p), schema))
+    for (good, bad), n in zip(pairs, (3, 2)):
+        assert good.count() == n
+        assert [r.raw_record for r in bad.collect()] == ["{bad"]
+
+
 def test_read_with_quarantine_rejects_unsupported_format(spark):
     import pytest as _pytest
     from pyspark.sql import types as T

@@ -581,13 +581,13 @@ class TestQuantization:
         u = rows[2]  # unit spike: scale 1/127, q = [127, 0, ...]
         assert (u.q_sum, u.q_min, u.q_max, u.n_sat) == (127, 0, 127, 1)
 
-    def test_int8_topk_close_to_float_topk(self, spark, docs_sf_dir=None):
+    def test_int8_topk_close_to_float_topk(self, spark, oracle_dir):
         """Quantization keeps ordering: the int8 top-10 must share most of
         the float top-10 (64-dim, int8 -> tiny quantization noise)."""
         from conecta_spark.operators.simsearch import knn_int8_topk, knn_topk
         from conecta_spark.queries import t
 
-        emb = t(spark, "/root/testdata/sf0.01", "embeddings")
+        emb = t(spark, oracle_dir, "embeddings")
         f = {r.vec_id for r in knn_topk(emb, query_id=0, k=10).collect()}
         q = {r.vec_id for r in knn_int8_topk(emb, query_id=0, k=10).collect()}
         assert len(f & q) >= 8

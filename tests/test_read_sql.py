@@ -44,6 +44,32 @@ def test_partitioned_with_user_range_drops_outside(spark, sf_dir):
     assert df.count() == lo
 
 
+def test_partitioned_read_drops_null_keys_and_keeps_both_envelope_ends(
+    spark, tmp_path
+):
+    """The partitioned parquet read is one scan under the closed envelope
+    [min, max]: NULL keys are dropped, and rows at either end are kept,
+    whether the envelope comes from the probe or from partition_range."""
+    import pyarrow.parquet as pq
+
+    keys = [None, -5, 0, 3, None, 7, 10, 11]
+    pq.write_table(pa.table({"k": pa.array(keys, pa.int64())}),
+                   str(tmp_path / "t.parquet"))
+
+    def read(q="select * from t", **kw):
+        df = read_sql(str(tmp_path), q, partition_on="k",
+                      partition_num=3, spark=spark, **kw)
+        return sorted(r.k for r in df.collect())
+
+    assert read() == [-5, 0, 3, 7, 10, 11]
+    assert read(partition_range=(0, 10)) == [0, 3, 7, 10]
+    # a statement's trailing ";" or "-- comment" must not break the bounds
+    assert read("select * from t;", partition_range=(0, 10)) == [0, 3, 7, 10]
+    assert read("select * from t ; \n") == [-5, 0, 3, 7, 10, 11]
+    assert read("select * from t -- all of t",
+                partition_range=(0, 10)) == [0, 3, 7, 10]
+
+
 def test_limit(spark, sf_dir):
     df = read_sql(sf_dir, "select * from lineitem limit 10", spark=spark)
     assert df.count() == 10
@@ -121,15 +147,14 @@ def test_partition_union_equals_full(spark, sf_dir):
     assert total == 6000
 
 
-def test_interleaved_directories_keep_their_views(spark):
+def test_interleaved_directories_keep_their_views(spark, sf_dir, oracle_dir):
     """Pooled sources over different directories must not inherit each
     other's temp views (views are session-global by name; regression test
     for the pool returning a source whose views another directory
     clobbered)."""
     from conecta_spark.io import read_sql
 
-    a = "/root/testdata/sf0.001"
-    b = "/root/testdata/sf0.01"
+    a, b = sf_dir, oracle_dir
     q = "select * from lineitem"
     assert read_sql(a, q, spark=spark).count() == 6000
     assert read_sql(b, q, spark=spark).count() == 60000

@@ -21,9 +21,9 @@ import sf1_rung
 
 
 @pytest.fixture(scope="module")
-def mini_sf(spark, tmp_path_factory):
+def mini_sf(spark, sf_dir, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("sf_mini"))
-    sf1_rung.build(spark, "/root/testdata/sf0.001", k=2, out_dir=out)
+    sf1_rung.build(spark, sf_dir, k=2, out_dir=out)
     return out
 
 
@@ -47,14 +47,14 @@ def test_join_integrity_preserved(spark, mini_sf):
     assert orphans == 0
 
 
-def test_text_permutation_is_bijective(spark, mini_sf):
+def test_text_permutation_is_bijective(spark, sf_dir, mini_sf):
     """n_chars stays truthful and the replica keeps the base corpus's
     exact-duplicate structure (a letter permutation cannot merge or split
     duplicate groups)."""
     d = spark.read.parquet(f"{mini_sf}/documents.parquet")
     bad_len = d.where(F.length("text") != F.col("n_chars")).count()
     assert bad_len == 0
-    base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    base = spark.read.parquet(f"{sf_dir}/documents.parquet")
     base_groups = sorted(
         r[0] for r in base.groupBy("text").count().select("count").collect()
     )
