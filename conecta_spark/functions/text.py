@@ -156,30 +156,20 @@ def with_lang_id(
     return staged.withColumn(out_col, case).drop(toks, *hcols.values())
 
 
-def shingle_fingerprint(col: str = "text", k: int = 5) -> Column:
-    """Order-insensitive document fingerprint: md5 of the sorted distinct
-    set of ``k``-char shingles of the lowercased text.  Robust to shuffled
-    word order, unlike a rolling hash of the raw string."""
-    return F.expr(
-        f"md5(array_join(array_sort(array_distinct("
-        f"transform(sequence(1, greatest(length(lower({col}))-{k - 1}, 1)), "
-        f"i -> substr(lower({col}), i, {k})))), '|'))"
-    )
-
-
 def fingerprints_pandas(
     df: DataFrame, k: int = 5, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """``(id, fp, rolling_hash)`` fingerprints over Arrow batches.
 
-    Value-identical to ``shingle_fingerprint`` + ``polyhash`` (same shingle
-    set, byte-equal md5 input, same integer fold) but Python-side: the SQL
-    forms are nested higher-order lambdas whose one-time Janino compile
+    Value-identical to the x04 DuckDB oracle's ``md5`` of the sorted
+    distinct ``k``-char shingle set + ``duck_polyhash`` (same shingle set,
+    byte-equal md5 input, same integer fold) but Python-side: Spark SQL
+    forms would be nested higher-order lambdas whose one-time Janino compile
     costs seconds per fresh session, while hashlib/ord do the same work at
     C speed and parallelize across however many partitions ``spread``
     provides.  ASCII-ordering note: Python ``sorted`` compares code points,
-    Spark's ``array_sort`` UTF-8 bytes -- identical for ASCII corpora (and
-    the oracle gate would catch a divergence).
+    which agrees with the oracle's ``list_sort`` on ASCII corpora (and the
+    oracle gate would catch a divergence).
     """
     import hashlib
 

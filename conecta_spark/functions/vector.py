@@ -11,14 +11,6 @@ Spark snippets use 1-indexed ``element_at``; DuckDB twins use 1-indexed
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-
-def as_double_array(col: str) -> Column:
-    """Cast array<float> -> array<double> (exact, parity-safe)."""
-    return F.expr(f"transform({col}, x -> CAST(x AS DOUBLE))")
-
 
 def dot_expr(a: str, b: str, dim: int) -> str:
     """Spark SQL: sequential-fold dot product of two double arrays."""

@@ -19,9 +19,11 @@ MinHash signature store (:mod:`.store`):
   CPU, the corpus is never rescanned;
 * :func:`ann_store_search` -- reads the stored relation (base + applied
   batches) and runs the in-memory engine's own
-  :func:`..operators.simsearch.ivf_search_batch` over it, so a stored
-  search is result-identical to a fresh in-memory rebuild BY
-  CONSTRUCTION (pinned in tests/test_ann_store.py);
+  :func:`..operators.simsearch.ivf_search_batch` over it, and
+  :func:`ivf_search_new` screens external vectors through the same
+  routing pass, cell join and per-query rank, so a stored search is
+  result-identical to a fresh in-memory rebuild BY CONSTRUCTION (pinned
+  in tests/test_ann_store.py);
 * :func:`compact_ann_store` -- folds applied batch dirs into the next
   base generation, keeping read-side file-listing cost flat as daily
   appends accumulate;
@@ -69,6 +71,7 @@ from pyspark.sql import functions as F
 from . import store
 from .simsearch import (
     IVFIndex,
+    _cell_search,
     assign_cells,
     build_ivf_index,
     ivf_search_batch,
@@ -236,9 +239,9 @@ def ann_store_search(
     each query -- :func:`..operators.simsearch.ivf_search_batch` run
     over the persisted relation instead of a fresh rebuild, so results
     are identical to the in-memory engine's by construction.  Per-search
-    cost: one driver read of the centroid matrix (KBs), one collect of
-    the |panel| query vectors (cell prefilter pushed to parquet), and
-    one cell-pruned scan -- the corpus is never re-assigned."""
+    cost: one driver read of the centroid matrix (KBs), one broadcast of
+    the routed |panel| query rows, and one scan joined on cell -- the
+    corpus is never re-assigned."""
     m = read_ann_manifest(store_path)
     index = IVFIndex(
         _assigned_relation(spark, store_path, m),
@@ -263,83 +266,18 @@ def compact_ann_store(spark: SparkSession, store_path: str) -> dict:
     return store.fold(_LAYOUT, store_path, write)
 
 
-def _probe_cells(qvecs: DataFrame, centers, n_probe: int) -> DataFrame:
-    """(query_id, qv) -> (query_id, qv, cell) x n_probe: each query row
-    exploded to its ``n_probe`` nearest centroids.  The same Arrow-
-    batched closure-broadcast pattern as simsearch.assign_cells (the
-    centroid matrix is KBs), stable argsort so distance ties break by
-    cell index exactly like ivf_search_batch's driver-side sort -- but
-    computed DISTRIBUTED, so a large incoming batch never collects to
-    the driver."""
-    import numpy as np
-    import pandas as pd
-
-    C = np.asarray(centers, dtype=np.float64)
-    c2 = (C ** 2).sum(axis=1)
-    n_probe = min(int(n_probe), len(C))
-
-    def probe(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.array(pdf["qv"].tolist(), dtype=np.float64)
-            D = (
-                (M ** 2).sum(axis=1)[:, None]
-                - 2.0 * (M @ C.T)
-                + c2[None, :]
-            )
-            cells = np.argsort(D, axis=1, kind="stable")[:, :n_probe]
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy().repeat(n_probe),
-                    "qv": [
-                        v
-                        for v in pdf["qv"].to_numpy()
-                        for _ in range(n_probe)
-                    ],
-                    "cell": cells.ravel().astype("int32"),
-                }
-            )
-
-    return qvecs.select("query_id", "qv").mapInPandas(
-        probe, "query_id long, qv array<double>, cell int"
-    )
-
-
 def ivf_search_new(
     index: IVFIndex, qvecs: DataFrame, k: int = 10, n_probe: int = 2
 ) -> DataFrame:
     """Top-k stored neighbors for EXTERNAL query vectors -- the
     ingest-side search: ``qvecs`` is (query_id, qv array<double>) rows
     that are NOT in the index (an arriving crawl batch screened against
-    the corpus before being appended).  simsearch.ivf_search_batch
-    routes panel queries driver-side because a panel is a handful of
-    ids; an ingest batch is unbounded, so here cell routing runs as a
-    distributed Arrow pass (:func:`_probe_cells`) and candidates come
-    from one equi-join on ``cell`` -- no driver collect anywhere, AQE
-    free to broadcast whichever side is small.  Scoring and (score
-    desc, id) tie-breaks match ivf_search_batch exactly."""
-    from pyspark.sql.window import Window
-
-    from ..functions.vector import cosine_expr
-
-    id_col = index.id_col
-    dim = len(index.centers[0])
-    scored = (
-        index.assigned.join(_probe_cells(qvecs, index.centers, n_probe), "cell")
-        .where(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            id_col,
-            F.round(F.expr(cosine_expr("v", "qv", dim)), 6).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(id_col)
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    the corpus before being appended).  The same routing, join and rank
+    as :func:`..operators.simsearch.ivf_search_batch`; only the query
+    side differs: an ingest batch is unbounded, so it carries no
+    broadcast hint and AQE is free to broadcast whichever side is
+    small."""
+    return _cell_search(index, qvecs, k, n_probe, panel=False)
 
 
 def stream_assign_and_append(

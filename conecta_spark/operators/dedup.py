@@ -37,37 +37,10 @@ from ..session import PersistSlot
 # -- expression builders (Spark SQL + DuckDB twins) -------------------------
 
 
-def shingles_expr(col: str = "text", k: int = 5) -> str:
-    return (
-        f"array_distinct(transform(sequence(1, greatest(length(lower({col}))-{k - 1}, 1)), "
-        f"i -> substr(lower({col}), i, {k})))"
-    )
-
-
 def duck_shingles(col: str = "text", k: int = 5) -> str:
     return (
         f"list_distinct(list_transform(range(1, greatest(length(lower({col}))-{k - 1}, 1) + 1), "
         f"i -> substr(lower({col}), i, {k})))"
-    )
-
-
-def shingle_hashes_expr(col: str = "text", k: int = 5) -> str:
-    """Distinct polyhashes of the ``k``-char shingles, fused.
-
-    Value-identical to ``transform(shingles_expr(...), s -> polyhash(s))``
-    but ~3x cheaper: the text is split to char codes ONCE and each shingle
-    hash folds over a k-slice of that array, instead of materializing every
-    shingle substring and re-splitting it character by character.  (The
-    distinct moves after hashing; intersect/union treat arrays as sets, so
-    even a hash collision yields identical results on both engines.)"""
-    codes = (
-        f"transform(split(lower({col}), ''), c -> CAST(ascii(c) AS BIGINT))"
-    )
-    return (
-        f"array_distinct(transform(array({codes}), cs -> "
-        f"transform(sequence(1, greatest(size(cs) - {k - 1}, 1)), "
-        f"i -> aggregate(slice(cs, i, {k}), 0L, "
-        f"(acc, c) -> (acc * 31 + c) % {MOD})))[0])"
     )
 
 
@@ -77,10 +50,12 @@ def hashed_shingles(
     """``(id, sh: array<bigint>)`` -- distinct polyhashes of the k-char
     shingles, computed in numpy over Arrow batches.
 
-    Value-identical to ``F.expr(shingle_hashes_expr(...))`` (same integer
-    recurrence, same short-text fold), chosen for two physical reasons:
+    Value-identical to the DuckDB oracle's ``_DUCK_SH_HASHES`` (the
+    ``duck_shingles`` set hashed with ``duck_polyhash``: same integer
+    recurrence, same short-text fold), chosen over a Spark SQL twin for
+    two physical reasons:
 
-    * the SQL form is a deeply nested higher-order lambda -- it never enters
+    * a SQL form is a deeply nested higher-order lambda -- it never enters
       whole-stage codegen, and its one-time Janino compile alone costs
       ~10s+, which a fresh session pays on every first run;
     * vectorized numpy does the k-fold over the whole batch's codepoints at
@@ -92,7 +67,7 @@ def hashed_shingles(
     Python detour.
 
     Parity caveat (same as ``fingerprints_pandas``): the lowercase step is
-    Python ``str.lower()`` here vs SQL ``lower()`` in the expr/oracle path.
+    Python ``str.lower()`` here vs SQL ``lower()`` in the oracle path.
     For ASCII text they agree codepoint-for-codepoint; for non-ASCII input
     (e.g. 'İ' -> 'i̇', locale/Unicode-version casing differences across
     Python, the JVM, and DuckDB) shingle sets -- and thus LSH signatures --
@@ -1236,7 +1211,7 @@ def word_shingles_expr(col: str = "text", w: int = 3) -> str:
     """``w``-word shingles of the lowercased, whitespace-split text.
 
     The token split is let-bound via the ``transform(array(e), v -> ..)[0]``
-    wrapper (the same trick as :func:`shingle_hashes_expr`): interpreted
+    wrapper: interpreted
     lambdas re-evaluate their body's subexpressions per element, so an
     inline split in the slice would re-split the document once per gram
     -- O(w_doc) regex splits per row (measured 2x on x68's corpus-side

@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import (
     cosine_expr,
-    dot_expr,
     duck_cosine,
     duck_dot,
     duck_l2,
@@ -483,8 +482,9 @@ class IVFIndex:
     """Built IVF index: the cell-assigned corpus (persisted) + centroids.
 
     ``assigned`` columns: (id, v: array<double>, cell: int).  Centroids are
-    a driver-side list (n_clusters x dim -- KBs); cell routing happens on
-    the driver per query, exactly how IVF serving works."""
+    a driver-side list (n_clusters x dim -- KBs) that ships in the closure
+    of :func:`_probe_cells`, so query routing runs on the executors next
+    to the query vectors, like the build's own assignment pass."""
 
     def __init__(self, assigned: DataFrame, centers, id_col: str):
         self.assigned = assigned
@@ -558,8 +558,8 @@ def build_ivf_index(
     feat: DataFrame | None = None,
 ) -> IVFIndex:
     """Sample-trained coarse quantizer + one distributed assignment pass;
-    the assigned corpus persists so every subsequent :func:`ivf_search` is
-    a filter, not a rebuild.
+    the assigned corpus persists (materialized before return) so every
+    subsequent :func:`ivf_search` is a filter, not a rebuild.
 
     The quantizer trains DRIVER-SIDE on a bounded deterministic sample
     (:data:`IVF_TRAIN_CAP`, hash-bucket selected, id-ordered) -- the faiss
@@ -568,7 +568,7 @@ def build_ivf_index(
     corpus once per iteration (the r6 form spent ~20 Spark jobs placing 16
     centroids for a 2000-row corpus).  Assignment is one Arrow-batched
     ``mapInPandas`` pass with the centroid matrix broadcast in the closure
-    (KBs): scan -> numpy argmin -> persist, no shuffle, no ml stage.
+    (KBs): scan -> nearest-cell matmul -> persist, no shuffle, no ml stage.
     ``feat`` short-circuits the corpus prep with an already-validated
     (id, v, ...) relation (the x13/x14 shared _panel_prep cache)."""
     import numpy as np
@@ -606,121 +606,87 @@ def build_ivf_index(
     assigned = assign_cells(vecs, centers, id_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
+    # Materialize here: a search scans the assignment twice (panel rows
+    # and candidates), and AQE would otherwise run one cache-filling job
+    # per scan.  The noop sink is one job with no shuffle.
+    assigned.write.format("noop").mode("overwrite").save()
     return IVFIndex(assigned, [centers[i] for i in range(len(centers))], id_col)
 
 
-def assign_cells(vecs: DataFrame, centers, id_col: str) -> DataFrame:
-    """One Arrow-batched assignment pass: (id, v) -> (id, v, cell) with
-    ``cell`` = argmin squared-L2 to the broadcast centroid matrix.  The
-    coarse-quantization half of IVF as a standalone -- build_ivf_index
-    uses it over the training corpus, and the persisted ANN store
-    (operators/ann_store.py) uses the SAME code path to assign appended
-    batches against its stored centroids, so a stored assignment is
-    bit-identical to an in-memory rebuild's.  No shuffle: the centroid
-    matrix (KBs) ships in the closure, argmin is a per-batch matmul."""
+def _probe_cells(rows: DataFrame, centers, n_probe: int, vec_col: str) -> DataFrame:
+    """Each row of ``rows`` repeated once per cell of its ``n_probe``
+    nearest centroids, nearest first, with that cell in a new ``cell``
+    column: the one routing pass behind every IVF assignment and search.
+
+    One Arrow-batched ``mapInPandas``: the centroid matrix (KBs) ships in
+    the closure, distances are one per-batch matmul in the expanded form
+    ``|q|^2 - 2 q.c + |c|^2``, and a stable argsort breaks distance ties
+    to the lower cell index -- at ``n_probe = 1`` the same cell as
+    ``argmin``.  No shuffle and no driver collect, so a query relation of
+    any size routes where it lives."""
     import numpy as np
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
     C = np.asarray(centers, dtype=np.float64)
     c2 = (C ** 2).sum(axis=1)
-    out_schema = ", ".join(
-        [
-            vecs.schema[id_col].simpleString().replace(":", " "),
-            "v array<double>",
-            "cell int",
-        ]
+    n_probe = min(int(n_probe), len(C))
+    out_schema = StructType(
+        [StructField(f.name, f.dataType) for f in rows.schema]
+        + [StructField("cell", IntegerType())]
     )
 
-    def assign(batches):
+    def probe(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            M = np.array(pdf["v"].tolist(), dtype=np.float64)
+            M = np.array(pdf[vec_col].tolist(), dtype=np.float64)
             D = (M ** 2).sum(axis=1)[:, None] - 2.0 * (M @ C.T) + c2[None, :]
-            pdf = pdf[[id_col, "v"]].copy()
-            pdf["cell"] = D.argmin(axis=1).astype("int32")
-            yield pdf
+            cells = np.argsort(D, axis=1, kind="stable")[:, :n_probe]
+            yield pdf.iloc[np.arange(len(pdf)).repeat(n_probe)].assign(
+                cell=cells.ravel().astype("int32")
+            )
 
-    return vecs.select(id_col, "v").mapInPandas(assign, out_schema)
+    return rows.mapInPandas(probe, out_schema)
 
 
-def ivf_search(
-    index: IVFIndex, query_id: int, k: int = 10, n_probe: int = 2
+def assign_cells(vecs: DataFrame, centers, id_col: str) -> DataFrame:
+    """(id, v) -> (id, v, cell) with ``cell`` = the nearest centroid (the
+    ``n_probe = 1`` case of :func:`_probe_cells`).  The coarse-quantization
+    half of IVF as a standalone -- build_ivf_index uses it over the
+    training corpus, and the persisted ANN store (operators/ann_store.py)
+    uses it to assign appended batches against its stored centroids, so a
+    stored assignment is bit-identical to an in-memory rebuild's."""
+    return _probe_cells(vecs.select(id_col, "v"), centers, 1, "v")
+
+
+def _cell_search(
+    index: IVFIndex, queries: DataFrame, k: int, n_probe: int, panel: bool
 ) -> DataFrame:
-    """Top-k by exact cosine within the ``n_probe`` cells nearest the
-    query vector; the rest of the corpus is never touched."""
-    import numpy as np
+    """Top-``k`` by exact cosine for every (query_id, qv) row of
+    ``queries`` within its ``n_probe`` nearest cells: the one IVF scorer.
 
-    id_col = index.id_col
-    qrow = index.assigned.where(F.col(id_col) == query_id).head()
-    if qrow is None:
-        raise ValueError(f"query_id {query_id} not found")
-    qv = np.array(qrow.v)
-    dists = [float(np.linalg.norm(qv - c)) for c in index.centers]
-    probe_cells = sorted(range(len(index.centers)), key=lambda i: dists[i])[
-        :n_probe
-    ]
-    q = index.assigned.where(F.col(id_col) == query_id).select(
-        F.col("v").alias("qv")
-    )
-    scored = (
-        index.assigned.where(F.col("cell").isin(probe_cells))
-        .where(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            id_col,
-            F.round(F.expr(cosine_expr("v", "qv", DIM)), 6).alias("score"),
-        )
-    )
-    return _topk_ranked(scored, k, id_col)
-
-
-def ivf_search_batch(
-    index: IVFIndex, query_ids, k: int = 10, n_probe: int = 2
-) -> DataFrame:
-    """Top-k for a PANEL of queries in one Spark job.
-
-    Per-query :func:`ivf_search` costs two driver round trips (probe-vector
-    head + result collect); a 5-query acceptance panel paid 10 sequential
-    jobs of almost pure scheduling latency.  Here the query vectors come
-    back in ONE collect, cell routing stays driver-side against the
-    already-collected centroids (exactly as in :func:`ivf_search`), and the
-    (query_id, qv, cell) probe relation -- |panel| * n_probe rows --
-    broadcasts into a single equi-join on ``cell``.  A corpus row matches a
-    query at most once (it lives in exactly one cell), so candidate sets,
-    scores, and (score desc, id) tie-breaks are identical to the per-query
-    path; parity is pinned in tests/test_round4b_ops.py.
-
-    Missing query ids are skipped (same degrade-don't-crash contract as
-    the panel helpers).  Returns (query_id, vec_id, score, rank<=k)."""
-    import numpy as np
-
+    The routed queries meet the index in one equi-join on ``cell``; a
+    corpus row lives in exactly one cell, so it matches a query at most
+    once, and one ``(score desc, id)`` row_number per query ranks the
+    candidates.  ``panel`` marks a query set known to be small (a handful
+    of ids) and broadcasts it; an ingest batch is unbounded, so AQE
+    picks the join side.  A query never returns its own id.
+    Returns (query_id, id, score, rank<=k)."""
     from pyspark.sql.window import Window
 
     id_col = index.id_col
-    qrows = (
-        index.assigned.where(F.col(id_col).isin(*query_ids))
-        .select(id_col, "v")
-        .collect()
+    probes = _probe_cells(
+        queries.select("query_id", "qv"), index.centers, n_probe, "qv"
     )
-    probe_rows = []
-    for r in qrows:
-        qv = np.array(r.v)
-        dists = [float(np.linalg.norm(qv - c)) for c in index.centers]
-        cells = sorted(range(len(index.centers)), key=lambda i: dists[i])[
-            :n_probe
-        ]
-        probe_rows.append((int(r[0]), [float(x) for x in r.v], cells))
-    spark = index.assigned.sparkSession
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, qv array<double>, cells array<int>"
-    ).select("query_id", "qv", F.explode("cells").alias("cell"))
     scored = (
-        index.assigned.join(F.broadcast(probes), "cell")
+        index.assigned.join(F.broadcast(probes) if panel else probes, "cell")
         .where(F.col(id_col) != F.col("query_id"))
         .select(
             "query_id",
             id_col,
-            F.round(F.expr(cosine_expr("v", "qv", DIM)), 6).alias("score"),
+            F.round(
+                F.expr(cosine_expr("v", "qv", len(index.centers[0]))), 6
+            ).alias("score"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -729,6 +695,43 @@ def ivf_search_batch(
     return scored.withColumn("rank", F.row_number().over(w)).where(
         F.col("rank") <= k
     )
+
+
+def ivf_search(
+    index: IVFIndex, query_id: int, k: int = 10, n_probe: int = 2
+) -> DataFrame:
+    """Top-k by exact cosine within the ``n_probe`` cells nearest the
+    query vector; the rest of the corpus is never touched.  A panel of
+    one (:func:`ivf_search_batch`), returned as (id, score, rank) in rank
+    order; an id absent from the index raises ``ValueError``."""
+    id_col = index.id_col
+    if index.assigned.where(F.col(id_col) == query_id).isEmpty():
+        raise ValueError(f"query_id {query_id} not found")
+    return (
+        ivf_search_batch(index, [query_id], k=k, n_probe=n_probe)
+        .select(id_col, "score", "rank")
+        .orderBy("rank")
+    )
+
+
+def ivf_search_batch(
+    index: IVFIndex, query_ids, k: int = 10, n_probe: int = 2
+) -> DataFrame:
+    """Top-k for a PANEL of queries in one Spark action.
+
+    The panel's own rows of ``index.assigned`` are the query vectors:
+    they route through :func:`_probe_cells` on the executors and the
+    (query_id, qv, cell) probe relation -- |panel| * n_probe rows --
+    broadcasts into :func:`_cell_search`'s equi-join on ``cell``.  Nothing
+    runs until the caller's action, and nothing collects to the driver.
+
+    Missing query ids are skipped (same degrade-don't-crash contract as
+    the panel helpers).  Returns (query_id, vec_id, score, rank<=k)."""
+    id_col = index.id_col
+    queries = index.assigned.where(F.col(id_col).isin(*query_ids)).select(
+        F.col(id_col).alias("query_id"), F.col("v").alias("qv")
+    )
+    return _cell_search(index, queries, k, n_probe, panel=True)
 
 
 # -- registered queries ------------------------------------------------------
@@ -847,12 +850,19 @@ def _panel_prep(spark, sf_dir: str) -> DataFrame:
     the x13/x14 metric-oracle entries."""
     from pyspark.ml.functions import array_to_vector
 
+    from .store import corpus_fingerprint, footer_row_count
+
     # Session-unique key: applicationId, not id(spark) -- id() values can
     # be reused after the old session is garbage-collected, and a stale
     # hit here would hand out a persisted DataFrame bound to a STOPPED
     # session (worse than the harmless re-read the id() pattern risks in
-    # queries.py, because this cache holds a persisted relation).
-    key = (spark.sparkContext.applicationId, sf_dir)
+    # queries.py, because this cache holds a persisted relation).  The
+    # table's file fingerprint (an os.stat walk, no Spark job) makes a
+    # rewritten embeddings table a miss, like _panel_search's store key.
+    key = (
+        spark.sparkContext.applicationId,
+        corpus_fingerprint(sf_dir, "embeddings"),
+    )
     cached = _PANEL_PREP.get(key)
     if cached is not None:
         return cached
@@ -869,8 +879,6 @@ def _panel_prep(spark, sf_dir: str) -> DataFrame:
     # 32-wide cache cost x14 ~0.7 s of pure task dispatch.  Past
     # _PREP_ROWS_PER_PART rows per core the derived width saturates at
     # cluster width, so real-scale inputs still spread fully.
-    from .store import footer_row_count
-
     rows = footer_row_count(spark, sf_dir, "embeddings")
     width = max(1, min(
         spark.sparkContext.defaultParallelism,
@@ -946,19 +954,6 @@ def _with_recall_flag(
     )
 
 
-def _present_panel_ids(df: DataFrame) -> list[int]:
-    """The panel ids that actually exist as valid vectors -- pathological
-    corpora (missing/NaN query vectors) degrade the panel, never crash
-    the ml path (same contract as the empty-input guards)."""
-    return sorted(
-        r[0]
-        for r in valid_vectors(df)
-        .where(F.col("vec_id").isin(*ANN_QUERY_IDS))
-        .select("vec_id")
-        .collect()
-    )
-
-
 _DUCK_PANEL = (
     "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings), "
     "q AS (SELECT vec_id AS query_id, v AS qv FROM e "
@@ -981,8 +976,8 @@ _DUCK_PANEL = (
 def x13_brp_ml(spark, sf_dir) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     # One fit + one key collect for the whole panel (brp_lsh_ml_panel);
-    # the panel ids present in the valid-vector relation ARE
-    # _present_panel_ids, so no separate probe job.  The corpus prep is
+    # a panel id without a valid vector is absent from the prep, so it
+    # drops out of the panel with no separate probe job.  The corpus prep is
     # the shared _panel_prep relation -- scanned/validated/cast once for
     # both the ml path and the exact panel, and reused by x14.
     prep = _panel_prep(spark, sf_dir)
@@ -1016,7 +1011,7 @@ def x14_ivf_ml(spark, sf_dir) -> DataFrame:
     try:
         # One batched job for the whole panel (the per-query loop paid 10
         # sequential driver round trips); assigned is built from
-        # valid_vectors, so its panel rows ARE _present_panel_ids.
+        # valid_vectors, so a panel id without a valid vector drops out.
         ann: dict = {}
         for r in (
             ivf_search_batch(index, ANN_QUERY_IDS, k=10, n_probe=8)
@@ -1165,6 +1160,33 @@ def x36_knn_int8(spark, sf_dir) -> DataFrame:
 # -- deterministic centroid assignment (IVF coarse step, exact) --------------
 
 
+def _best_int8_centroid(qe: DataFrame, k: int, id_col: str) -> DataFrame:
+    """``qe`` (id, qa: int8-quantized vector, ...) with a ``b`` column =
+    struct(s, negcid): each row's best of the ``k`` lowest-id vectors as
+    centroids by exact int64 dot product, ties to the lowest cid via max
+    on (s, -cid).  The k quantized centroids collapse into ONE
+    array-of-structs row that broadcasts, so the argmax is a map-side
+    array fold with no shuffle of ``qe``."""
+    cents = (
+        qe.where(F.col(id_col) < k)
+        .select(F.expr(f"named_struct('cid', {id_col}, 'qc', qa)").alias("c"))
+        .agg(F.expr("array_agg(c)").alias("cs"))
+    )
+    return (
+        qe.crossJoin(F.broadcast(cents))
+        .withColumn(
+            "b",
+            F.expr(
+                "array_max(transform(cs, c -> named_struct("
+                " 's', aggregate(zip_with(qa, c.qc, (x, y) -> x * y), 0L,"
+                "  (a, x) -> a + x),"
+                " 'negcid', -c.cid)))"
+            ),
+        )
+        .drop("cs")
+    )
+
+
 def centroid_assign(
     df: DataFrame,
     k: int = 8,
@@ -1194,21 +1216,7 @@ def centroid_assign(
     e = _vectors(df, vec_col, id_col).select(
         id_col, F.expr(quantize_int8_expr("v")).alias("qa")
     )
-    cents = (
-        e.where(F.col(id_col) < k)
-        .select(
-            F.expr(f"named_struct('cid', {id_col}, 'qc', qa)").alias("c")
-        )
-        .agg(F.expr("array_agg(c)").alias("cs"))
-    )
-    best = e.crossJoin(F.broadcast(cents)).select(
-        F.expr(
-            "array_max(transform(cs, c -> named_struct("
-            " 's', aggregate(zip_with(qa, c.qc, (x, y) -> x * y), 0L,"
-            "  (a, x) -> a + x),"
-            " 'negcid', -c.cid)))"
-        ).alias("b")
-    )
+    best = _best_int8_centroid(e, k, id_col)
     return best.groupBy(
         (-F.col("b.negcid")).cast("long").alias("centroid_id")
     ).agg(
@@ -1358,32 +1366,16 @@ def semantic_dedup(
     # single-task (measured 3 x 1.47 s one-task stages at sf0.1)
     e = spread(_vectors(df, vec_col, id_col))
     qe = e.withColumn("qa", F.expr(quantize_int8_expr("v")))
-    cents = (
-        qe.where(F.col(id_col) < k)
-        .select(F.expr(f"named_struct('cid', {id_col}, 'qc', qa)").alias("c"))
-        .agg(F.expr("array_agg(c)").alias("cs"))
-    )
     # Referenced three times (both block-grid sides + the final left
     # join); without a persist each reference replans the whole
     # quantize/argmax/normalize pipeline -- the x07 ReuseExchange
     # lesson.  Skinny relation: (id, cell, unit vector).
     _SEMDEDUP.evict()
     assigned = _SEMDEDUP.hold(
-        qe.crossJoin(F.broadcast(cents))
-        .select(
-            F.col(id_col),
-            F.expr(
-                "array_max(transform(cs, c -> named_struct("
-                " 's', aggregate(zip_with(qa, c.qc, (x, y) -> x * y), 0L,"
-                "  (a, x) -> a + x),"
-                " 'negcid', -c.cid))).negcid"
-            ).alias("negcid"),
-            F.expr(normalize_expr("v", DIM)).alias("nv"),
-        )
-        .select(
+        _best_int8_centroid(qe, k, id_col).select(
             id_col,
-            (-F.col("negcid")).cast("long").alias("centroid_id"),
-            "nv",
+            (-F.col("b.negcid")).cast("long").alias("centroid_id"),
+            F.expr(normalize_expr("v", DIM)).alias("nv"),
         ),
         StorageLevel.MEMORY_AND_DISK_DESER,
     )

@@ -394,10 +394,7 @@ def _load_extensions() -> None:
         "conecta_spark.streaming.events",
         "conecta_spark.multimodal.ops",
     ):
-        try:
-            importlib.import_module(mod)
-        except ImportError:
-            pass
+        importlib.import_module(mod)
 
 
 # The driver's CORRECTNESS file records at most ~50 registry entries in

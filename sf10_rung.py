@@ -198,8 +198,7 @@ def _ann_row(spark, sf_dir: str) -> dict:
     # ann block's `frontier` rows of SF10_RUNG.json: 256/96 = 0.915 recall
     # at 37.6% of the corpus vs 128/64's 0.82-0.92 at 50%.
     t0 = time.perf_counter()
-    index = build_ivf_index(emb, n_clusters=256)
-    index.assigned.count()  # materialize the persisted assignment
+    index = build_ivf_index(emb, n_clusters=256)  # materializes the assignment
     build_sec = round(time.perf_counter() - t0, 3)
 
     try:

@@ -231,6 +231,36 @@ class TestIVFQuantizerContract:
         assert c.storageLevel.useMemory or c.storageLevel.useDisk
         ss._PANEL_PREP.evict()
 
+    def test_panel_prep_follows_rewritten_embeddings(self, spark, sf_dir, tmp_path):
+        """The prep is keyed on the embeddings table's files, not its
+        directory: a table rewritten in place within one session is a
+        miss, and the prep holds the new rows."""
+        import os
+        import shutil
+
+        import pyarrow.parquet as pq
+
+        from conecta_spark.operators import simsearch as ss
+
+        def n_valid(table):
+            return sum(
+                1
+                for v in table.column("embedding").to_pylist()
+                if v and all(x is not None and x == x for x in v)
+            )
+
+        src = os.path.join(sf_dir, "embeddings.parquet")
+        dst = str(tmp_path / "embeddings.parquet")
+        shutil.copyfile(src, dst)
+        full = pq.read_table(src)
+        try:
+            assert ss._panel_prep(spark, str(tmp_path)).count() == n_valid(full)
+            pq.write_table(full.slice(0, 100), dst)
+            got = ss._panel_prep(spark, str(tmp_path)).count()
+            assert got == n_valid(full.slice(0, 100)) < n_valid(full)
+        finally:
+            ss._PANEL_PREP.evict()
+
     def test_panel_prep_width_tracks_row_count(self, spark, sf_dir):
         """r12: the prep cache's partition count is derived from the
         corpus footer row count (ceil(rows / _PREP_ROWS_PER_PART), capped

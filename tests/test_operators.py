@@ -361,6 +361,64 @@ class TestSimsearch:
         finally:
             index.unpersist()
 
+    def test_ivf_routing_ties_go_to_lower_cell(self, spark):
+        """A query exactly equidistant from two centroids routes to the
+        lower cell index, in assignment (n_probe = 1) and in the probe
+        (n_probe = 2, after the strictly nearest cell)."""
+        from conecta_spark.operators.simsearch import (
+            IVFIndex,
+            assign_cells,
+            ivf_search_batch,
+        )
+
+        vecs = spark.createDataFrame(
+            [(1, [0.0, 1.0])], "vec_id long, v array<double>"
+        )
+        # |q - c|^2 = 2 for cells 1 and 2, 145 for cell 0
+        tie = [[9.0, 9.0], [1.0, 0.0], [-1.0, 0.0]]
+        assert [r.cell for r in assign_cells(vecs, tie, "vec_id").collect()] == [1]
+
+        # query 0 sits in cell 0 (distance^2 1); cells 1 and 2 tie at 5
+        centers = [[0.0, 1.0], [1.0, 0.0], [-1.0, 0.0]]
+        assigned = spark.createDataFrame(
+            [(0, [0.0, 2.0], 0), (1, [1.0, 0.5], 1), (2, [-1.0, 0.5], 2)],
+            "vec_id long, v array<double>, cell int",
+        )
+        got = ivf_search_batch(
+            IVFIndex(assigned, centers, "vec_id"), [0], k=5, n_probe=2
+        ).collect()
+        assert [(r.query_id, r.vec_id, r.rank) for r in got] == [(0, 1, 1)]
+
+    def test_ivf_search_batch_builds_without_jobs(self, embeddings, spark_jobs):
+        """Building the panel search routes on the executors: no Spark job
+        runs until the caller's action (no driver collect of the panel)."""
+        from conecta_spark.operators.simsearch import (
+            build_ivf_index,
+            ivf_search_batch,
+        )
+
+        index = build_ivf_index(embeddings)
+        try:
+            with spark_jobs() as jobs:
+                df = ivf_search_batch(index, (0, 7), k=10, n_probe=8)
+            assert len(jobs) == 0
+            assert {r.query_id for r in df.collect()} == {0, 7}
+        finally:
+            index.unpersist()
+
+    def test_ivf_search_absent_id_raises(self, embeddings):
+        from conecta_spark.operators.simsearch import (
+            build_ivf_index,
+            ivf_search,
+        )
+
+        index = build_ivf_index(embeddings)
+        try:
+            with pytest.raises(ValueError, match="not found"):
+                ivf_search(index, 10**9)
+        finally:
+            index.unpersist()
+
 
 class TestMultimodal:
     def test_payload_roundtrip(self, spark, docs):

@@ -58,3 +58,20 @@ def test_registry_prefixes_unique():
         "duplicate registry prefixes: "
         f"{[p for p in prefixes if prefixes.count(p) > 1]}"
     )
+
+
+def test_load_extensions_propagates_import_errors(monkeypatch):
+    """A registry module that fails to import must fail the load, not
+    silently drop its entries from every registry sweep."""
+    import importlib
+
+    real = importlib.import_module
+
+    def broken(name, *args, **kwargs):
+        if name == "conecta_spark.operators.simsearch":
+            raise ImportError("simulated breakage in simsearch")
+        return real(name, *args, **kwargs)
+
+    monkeypatch.setattr(importlib, "import_module", broken)
+    with pytest.raises(ImportError, match="simulated breakage"):
+        _load_extensions()
