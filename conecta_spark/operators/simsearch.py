@@ -88,15 +88,19 @@ def valid_vectors(
     df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
     """Rows whose embedding is present, non-empty, and all-finite.
-    Malformed vectors (nulls from failed embedding jobs, NaNs from
-    overflowed encoders) are a data-quality fact of large corpora; they
-    must degrade to exclusion, not crash a matmul batch or an ML fit, and
-    NaN scores must never reach a ranking whose NaN order differs between
-    engines (found by the pathological-corpus sweep)."""
+    Malformed vectors (nulls from failed embedding jobs, NaNs and
+    infinities from overflowed encoders) are a data-quality fact of large
+    corpora; they must degrade to exclusion, not crash a matmul batch or
+    an ML fit, and NaN scores (a cosine over an infinite component is NaN)
+    must never reach a ranking whose NaN order differs between engines
+    (found by the pathological-corpus sweep)."""
     return df.where(
         F.col(vec_col).isNotNull()
         & (F.size(vec_col) > 0)
-        & F.expr(f"forall({vec_col}, x -> x IS NOT NULL AND NOT isnan(x))")
+        & F.expr(
+            f"forall({vec_col}, x -> x IS NOT NULL AND NOT isnan(x)"
+            " AND abs(x) != double('Infinity'))"
+        )
     )
 
 
@@ -1379,7 +1383,9 @@ def semantic_dedup(
         ),
         StorageLevel.MEMORY_AND_DISK_DESER,
     )
-    n_blocks = max(1, min(64, -(-df.count() // (k * 1024))))
+    # Counting the held relation fills its cache in this one job; the
+    # grid's three references then read it instead of each running a fill.
+    n_blocks = max(1, min(64, -(-assigned.count() // (k * 1024))))
     blocks = (
         assigned.withColumn(
             "bid", F.pmod(F.col(id_col), F.lit(n_blocks)).cast("long")

@@ -11,6 +11,9 @@ Reference parity map (citations into /root/reference):
   ``WHERE 1=0`` resolution on the dbtable subquery.
 * MIN/MAX pushdown (postgres.rs:556-592)                 -> one-row JDBC read
   of the same aggregate SQL.
+* one MVCC snapshot per statement (each partition cursor) -> Postgres as is;
+  databases without MVCC get a per-connection isolation statement
+  (``SESSION_INIT``) run by Spark before each read.
 
 Boundary semantics follow the reference, not stock Spark JDBC: Spark's
 ``partitionColumn`` options clamp the first/last strides open-ended and route
@@ -19,10 +22,16 @@ out-of-range rows and NULL keys (SURVEY 1.4).  We therefore always pass
 explicit ``predicates`` built by our planner instead of
 ``lowerBound``/``upperBound``.
 
-No live database is available in this container; the SQL helpers, the type
-bridge, and the partition-predicate contract are pinned by tests/test_jdbc.py
-with the network layer stubbed (the reference integration-tests the same
-promises against a testcontainers Postgres).
+Every partition reads a statement-consistent state.  On Postgres each
+cursor sees one MVCC snapshot.  Derby has no MVCC: at its default READ
+COMMITTED a scan takes and drops a shared lock on every row it visits, so
+a read racing a writer can return a state that was never committed, and
+the lock manager takes about a third of the scan's CPU.  At SERIALIZABLE
+Derby serves a full scan under one shared table lock, held until the
+cursor closes: the read is consistent and cheaper, and a writer to the
+table waits for each partition's cursor instead.  That wait is how a
+database without MVCC gives a consistent read.  READ UNCOMMITTED would
+allow dirty reads, so it is not an option.
 """
 
 from __future__ import annotations
@@ -81,6 +90,14 @@ def min_max_sql(query: str, column: str) -> str:
     )
 
 
+#: Statement run on each JDBC connection before it reads (Spark's
+#: ``sessionInitStatement``), keyed on URL prefix.  URLs that match none
+#: (Postgres among them) get no statement.
+SESSION_INIT: dict[str, str] = {
+    "jdbc:derby:": "SET ISOLATION SERIALIZABLE",
+}
+
+
 class JDBCSource(Source):
     def __init__(
         self,
@@ -94,24 +111,26 @@ class JDBCSource(Source):
     ):
         super().__init__(spark)
         self.url = url
-        self.fetchsize = fetchsize
         self.type_bridge = type_bridge
-        self.properties: dict[str, str] = {"driver": driver}
+        #: Options every reader this source builds carries.
+        self.options: dict[str, str] = {
+            "driver": driver, "fetchsize": str(fetchsize),
+        }
         if user:
-            self.properties["user"] = user
+            self.options["user"] = user
         if password:
-            self.properties["password"] = password
+            self.options["password"] = password
+        for prefix, stmt in SESSION_INIT.items():
+            if url.startswith(prefix):
+                self.options["sessionInitStatement"] = stmt
 
     def _reader(self, dbtable: str):
-        r = (
+        return (
             self.spark.read.format("jdbc")
             .option("url", self.url)
             .option("dbtable", dbtable)
-            .option("fetchsize", str(self.fetchsize))
+            .options(**self.options)
         )
-        for k, v in self.properties.items():
-            r = r.option(k, v)
-        return r
 
     def _raw_query(self, sql: str) -> DataFrame:
         """JDBC read without the type bridge (internal metadata probes --
@@ -183,11 +202,9 @@ class JDBCSource(Source):
         )
 
     def _jdbc_predicates(self, sql: str, preds: list[str]) -> DataFrame:
-        props = dict(self.properties)
-        props["fetchsize"] = str(self.fetchsize)
         return self.spark.read.jdbc(
             url=self.url,
             table=f"({sql}) as query_inner",
             predicates=preds,
-            properties=props,
+            properties=self.options,
         )

@@ -1,4 +1,4 @@
-"""JDBC source contract tests (no live database in this container).
+"""JDBC source contract tests.
 
 Two promises the reference integration-tests against a real Postgres
 (conecta-python tests with testcontainers) are pinned here with the network
@@ -10,15 +10,27 @@ layer stubbed out:
 * ``read_partitioned`` hands Spark the exact bounded-predicate set the
   reference generates (postgres.rs:488-510): half-open interior ranges, a
   closed last range absorbing the remainder.
+
+The rest runs end to end on embedded Derby (bundled with Spark): the
+portable MIN/MAX probe, every read shape, and statement-consistent reads.
 """
 
 from __future__ import annotations
 
+import time
+from concurrent.futures import ThreadPoolExecutor
+
+import pyarrow.compute as pc
 import pytest
 
+from conecta_spark.io import read_sql
 from conecta_spark.plans.metadata import create_partition_plan
 from conecta_spark.plans.partition import PartitionConfig
 from conecta_spark.sources.jdbc import JDBCSource
+
+DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
+#: Seconds a Derby lock request waits before it fails (default 60).
+DERBY_LOCK_WAIT_S = 5
 
 
 class StubJDBC(JDBCSource):
@@ -189,25 +201,168 @@ def test_non_postgres_url_skips_the_type_bridge(spark, geo_frame):
     assert not any("pg_typeof" in sql for sql in issued), issued
 
 
-def test_min_max_on_embedded_derby(spark, tmp_path):
-    """The MIN/MAX probe SQL is portable: embedded Derby (bundled with
-    Spark) answers it, NULL keys ignored."""
-    jvm = spark._jvm
-    jvm.java.lang.System.setProperty(
+@pytest.mark.parametrize(
+    "url, stmt",
+    [
+        ("jdbc:postgresql://host/db", None),
+        ("jdbc:derby:memory:db", "SET ISOLATION SERIALIZABLE"),
+    ],
+    ids=["postgres", "derby"],
+)
+def test_every_reader_carries_the_urls_session_init(
+    spark, monkeypatch, url, stmt
+):
+    """Postgres already reads one MVCC snapshot per cursor: its readers
+    run no statement before the read.  Every Derby reader -- the MIN/MAX
+    probe, the range predicates, each listed query and the unpartitioned
+    query -- sets SERIALIZABLE first."""
+    from pyspark.sql import DataFrameReader
+
+    frame = spark.createDataFrame([(0, 99)], "mn long, mx long")
+    seen = []
+
+    def options(self, **kw):
+        seen.append(kw.get("sessionInitStatement"))
+        return self
+
+    def jdbc(self, url, table, predicates, properties):
+        seen.append(properties.get("sessionInitStatement"))
+        return frame
+
+    monkeypatch.setattr(DataFrameReader, "options", options)
+    monkeypatch.setattr(DataFrameReader, "load", lambda self: frame)
+    monkeypatch.setattr(DataFrameReader, "jdbc", jdbc)
+    src = JDBCSource(spark, url, type_bridge=False)
+    read_sql(src, "select * from t", partition_on="k", partition_num=4)
+    read_sql(src, ["select * from t where k < 5", "select * from t where k >= 5"])
+    read_sql(src, "select * from t")
+    assert seen == [stmt] * 5
+
+
+class Derby:
+    """An embedded Derby database holding ``t (k integer, v integer)``:
+    keys 0..199 with ``v = 0``, plus three NULL-key rows with ``v = 1``."""
+
+    def __init__(self, spark, path):
+        self.spark = spark
+        self.url = f"jdbc:derby:{path}"
+        conn = spark._jvm.java.sql.DriverManager.getConnection(
+            self.url + ";create=true"
+        )
+        try:
+            stmt = conn.createStatement()
+            stmt.execute("create table t (k integer, v integer)")
+            stmt.execute(
+                "insert into t values "
+                + ", ".join(f"({k}, 0)" for k in range(200))
+                + ", (null, 1), (null, 1), (null, 1)"
+            )
+            stmt.execute(
+                "call SYSCS_UTIL.SYSCS_SET_DATABASE_PROPERTY("
+                f"'derby.locks.waitTimeout', '{DERBY_LOCK_WAIT_S}')"
+            )
+        finally:
+            conn.close()
+
+    def connect(self):
+        """A JDBC connection opened on the driver JVM."""
+        return self.spark._jvm.java.sql.DriverManager.getConnection(self.url)
+
+    def source(self) -> JDBCSource:
+        return JDBCSource(
+            self.spark, self.url, driver=DERBY_DRIVER, type_bridge=False
+        )
+
+    def wait_for_blocked_readers(self, n: int, timeout_s: float = 30) -> None:
+        """Return once ``n`` transactions wait for a lock on ``t``."""
+        conn = self.connect()
+        try:
+            stmt = conn.createStatement()
+            deadline = time.monotonic() + timeout_s
+            while time.monotonic() < deadline:
+                rs = stmt.executeQuery(
+                    "select count(*) from SYSCS_DIAG.LOCK_TABLE "
+                    "where TABLENAME = 'T' and STATE = 'WAIT'"
+                )
+                rs.next()
+                if rs.getInt(1) >= n:
+                    return
+                time.sleep(0.02)
+        finally:
+            conn.close()
+        raise AssertionError(f"fewer than {n} readers waited for a lock on t")
+
+
+@pytest.fixture()
+def derby(spark, tmp_path):
+    spark._jvm.java.lang.System.setProperty(
         "derby.stream.error.file", str(tmp_path / "derby.log")
     )
-    url = f"jdbc:derby:{tmp_path / 'db'}"
-    conn = jvm.java.sql.DriverManager.getConnection(url + ";create=true")
-    try:
-        stmt = conn.createStatement()
-        stmt.executeUpdate("create table t (k integer, v varchar(8))")
-        stmt.executeUpdate(
-            "insert into t values (7, 'a'), (-3, 'b'), (null, 'c'), (42, 'd')"
-        )
-    finally:
-        conn.close()
-    src = JDBCSource(
-        spark, url, driver="org.apache.derby.jdbc.EmbeddedDriver",
-        type_bridge=False,
+    return Derby(spark, tmp_path / "db")
+
+
+def test_min_max_on_embedded_derby(derby):
+    """The MIN/MAX probe SQL is portable: embedded Derby answers it, NULL
+    keys ignored."""
+    assert derby.source().min_max("select * from t", "k") == (0, 199)
+
+
+def _sums(tbl) -> tuple[int, int, int]:
+    return (
+        tbl.num_rows,
+        pc.sum(tbl["K"]).as_py() or 0,
+        pc.sum(tbl["V"]).as_py() or 0,
     )
-    assert src.min_max("select * from t", "k") == (-3, 42)
+
+
+def test_probed_range_read_on_embedded_derby(derby):
+    """A partitioned read with no range runs the MIN/MAX probe, splits
+    the probed range into the asked-for partitions and drops NULL keys."""
+    df = read_sql(
+        derby.source(), "select * from t", partition_on="k", partition_num=4
+    )
+    assert df.rdd.getNumPartitions() == 4
+    assert _sums(df.toArrow()) == (200, sum(range(200)), 0)
+
+
+def test_query_list_read_on_embedded_derby(derby):
+    """A user query list reads one partition per query."""
+    df = read_sql(
+        derby.source(),
+        ["select * from t where k < 50", "select * from t where k >= 50"],
+    )
+    assert df.rdd.getNumPartitions() == 2
+    assert _sums(df.toArrow()) == (200, sum(range(200)), 0)
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [{}, {"partition_on": "k", "partition_range": (0, 199), "partition_num": 2}],
+    ids=["unpartitioned", "range_predicates"],
+)
+def test_derby_read_sees_one_committed_state(derby, kw):
+    """A read returns a state some commit left.  A writer holds an
+    uncommitted update of a late row; a read starts and waits on it;
+    the writer then updates an early row and commits.  Reading row by
+    row, the read would keep the early row's old value and see the late
+    row's new one -- a state that was never committed."""
+    writer = derby.connect()
+    writer.setAutoCommit(False)
+    try:
+        stmt = writer.createStatement()
+        stmt.executeUpdate("update t set v = 1 where k = 150")
+        with ThreadPoolExecutor(1) as pool:
+            read = pool.submit(
+                read_sql, derby.source(), "select k, v from t",
+                return_backend="pyarrow", **kw,
+            )
+            # Every cursor scans the whole unindexed table.
+            derby.wait_for_blocked_readers(kw.get("partition_num", 1))
+            stmt.executeUpdate("update t set v = 1 where k = 10")
+            writer.commit()
+            out = read.result(timeout=60)
+    finally:
+        writer.rollback()
+        writer.close()
+    v = dict(zip(out["K"].to_pylist(), out["V"].to_pylist()))
+    assert (v[10], v[150]) == (1, 1)

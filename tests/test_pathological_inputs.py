@@ -84,3 +84,28 @@ def test_malformed_vectors_are_excluded_not_scored(spark, nasty_dir):
     emb = spark.read.parquet(f"{nasty_dir}/embeddings.parquet")
     out = knn_topk(emb, query_id=0, k=10).collect()
     assert {r.vec_id for r in out} <= {2}
+
+
+def test_infinite_vectors_are_excluded_not_scored(spark):
+    """An overflowed encoder also writes +-inf.  A cosine over an infinite
+    component is NaN, which must not reach a ranking: the vector drops
+    out, whether it is a candidate or the query."""
+    import math
+    import random
+
+    from conecta_spark.operators.simsearch import knn_topk, valid_vectors
+
+    rng = random.Random(5)
+    rows = []
+    for i in range(40):
+        v = [rng.uniform(-1.0, 1.0) for _ in range(64)]
+        if i == 5:
+            v[7] = float("inf")
+        rows.append((i, v))
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    kept = {r.vec_id for r in valid_vectors(emb).collect()}
+    assert kept == set(range(40)) - {5}
+    out = {q: knn_topk(emb, query_id=q, k=50).collect() for q in (0, 5)}
+    assert not any(math.isnan(r.score) for q in out for r in out[q]), out
+    assert {r.vec_id for r in out[0]} == set(range(1, 40)) - {5}
+    assert out[5] == []  # an invalid query vector ranks nothing

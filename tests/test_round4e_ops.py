@@ -93,6 +93,28 @@ def test_semantic_dedup_plan_no_cartesian(spark, sf):
     assert node_count(p, "BroadcastNestedLoopJoin") <= 3
 
 
+def test_semantic_dedup_fills_its_cache_with_the_sizing_count(
+    spark, sf, spark_jobs
+):
+    """The block grid is sized by counting the held assignment, so that
+    one count fills its cache.  The result's three reads of the relation
+    then run no fill jobs of their own: sizing by the input's count left
+    the cache empty and the collect ran 14 jobs instead of 7."""
+    from conecta_spark.operators import simsearch
+    from conecta_spark.queries import REGISTRY
+
+    out = REGISTRY["x54_semantic_dedup"].fn(spark, sf)
+    (_, held), = simsearch._SEMDEDUP._held
+    cached = spark._jsparkSession.sharedState().cacheManager() \
+        .lookupCachedData(held._jdf).get()
+    assert cached.cachedRepresentation().cacheBuilder() \
+        .isCachedColumnBuffersLoaded()
+    with spark_jobs() as jobs:
+        rows = out.collect()
+    assert len(jobs) == 7
+    assert (len(rows), sum(r.is_dup for r in rows)) == (500, 75)
+
+
 # -- x55 semantic contamination ----------------------------------------------
 
 
