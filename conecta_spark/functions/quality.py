@@ -62,21 +62,17 @@ _PROBE_CACHE_MAX = 64
 
 
 def _probe_scan_stat(df: DataFrame, stat_col, name: str) -> float:
-    try:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            df._jdf.queryExecution().analyzed().semanticHash(),
-            name,
-        )
-    except Exception:
-        key = None
-    if key is not None and key in _PROBE_CACHE:
+    key = (
+        df.sparkSession.sparkContext.applicationId,
+        df._jdf.queryExecution().analyzed().semanticHash(),
+        name,
+    )
+    if key in _PROBE_CACHE:
         return _PROBE_CACHE[key]
     val = df.agg(stat_col).first()[0] or 0
-    if key is not None:
-        if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
-            _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
-        _PROBE_CACHE[key] = val
+    if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
+        _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
+    _PROBE_CACHE[key] = val
     return val
 
 

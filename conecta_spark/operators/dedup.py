@@ -26,6 +26,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import os
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,6 +35,7 @@ from pyspark.sql import functions as F
 from ..functions.text import MOD, duck_polyhash, polyhash
 from ..queries import register, t
 from ..session import PersistSlot
+from ..sources.parquet import table_fingerprint
 
 # -- expression builders (Spark SQL + DuckDB twins) -------------------------
 
@@ -634,7 +637,6 @@ def _shuffle_disk_budget(spark) -> int:
     budget :func:`auto_band_width` prices candidate volume against.
     Half, not all: the verify join's spill shares the volume with every
     other stage's shuffle files."""
-    import os
     import shutil
 
     local = (
@@ -1402,9 +1404,10 @@ _DUCK_MH_SIGS = _duck_mh_sigs()
 #: x07 materializes the graph, x26 clusters it, and the CC_SLICE entries
 #: (x50/x67) share one slice-scoped mining pass.  Same contract as
 #: simsearch._panel_prep: keyed on applicationId (id() values can be
-#: reused across garbage-collected sessions).  Values are unaffected: the
-#: pipeline is deterministic, so a cache hit returns exactly what a
-#: re-mine would.
+#: reused across garbage-collected sessions) and on the documents table's
+#: file fingerprint, so a table rewritten in the session is mined again.
+#: Values are unaffected: the pipeline is deterministic, so a cache hit
+#: returns exactly what a re-mine would.
 _PAIRS = PersistSlot()
 
 
@@ -1413,9 +1416,10 @@ def shared_minhash_pairs(
 ) -> DataFrame:
     """Verified MinHash+LSH near-dup pairs over ``sf_dir``'s documents
     (optionally the first ``limit`` doc_ids), persisted once per
-    (session, corpus, limit, threshold) and shared across the registry
-    entries that consume the same mined graph."""
-    key = (spark.sparkContext.applicationId, sf_dir, limit, threshold)
+    (session, documents files, limit, threshold) and shared across the
+    registry entries that consume the same mined graph."""
+    docs_fp = table_fingerprint(os.path.join(sf_dir, "documents.parquet"))
+    key = (spark.sparkContext.applicationId, docs_fp, limit, threshold)
     # A relation clearCache() dropped (bench.py runs it between timed runs)
     # reads as a miss: served uncached, it would re-execute the mining tree
     # with its internal persists gone -- the band self-join re-running the

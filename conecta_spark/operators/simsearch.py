@@ -20,6 +20,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import os
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -36,6 +38,7 @@ from ..functions.vector import (
 from ..plans.skew import spread
 from ..queries import register, t
 from ..session import PersistSlot
+from ..sources.parquet import table_fingerprint
 
 DIM = 64  # driver embeddings are 64-dim (FIXTURES.md 4)
 
@@ -854,7 +857,7 @@ def _panel_prep(spark, sf_dir: str) -> DataFrame:
     the x13/x14 metric-oracle entries."""
     from pyspark.ml.functions import array_to_vector
 
-    from .store import corpus_fingerprint, footer_row_count
+    from .store import footer_row_count
 
     # Session-unique key: applicationId, not id(spark) -- id() values can
     # be reused after the old session is garbage-collected, and a stale
@@ -865,7 +868,7 @@ def _panel_prep(spark, sf_dir: str) -> DataFrame:
     # rewritten embeddings table a miss, like _panel_search's store key.
     key = (
         spark.sparkContext.applicationId,
-        corpus_fingerprint(sf_dir, "embeddings"),
+        table_fingerprint(os.path.join(sf_dir, "embeddings.parquet")),
     )
     cached = _PANEL_PREP.get(key)
     if cached is not None:

@@ -35,7 +35,7 @@ Crash and commit discipline:
   generation-suffixed entries.  A rebuild is the one in-place mutator
   and can race a reader mid-scan; the registry cache
   (:func:`cached_store`) avoids that by content-addressing store paths
-  on the corpus fingerprint, and direct callers rebuilding a shared
+  on the table fingerprint, and direct callers rebuilding a shared
   path owe their readers the same discipline.
 * An append writes ``batches/.tmp-<uuid>/``, renames it to
   ``batches/<batch_id>/``, books its counters from the committed files,
@@ -73,6 +73,8 @@ from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..sources.parquet import table_files, table_fingerprint
 
 MANIFEST = "manifest.json"
 LOCKFILE = ".store.lock"
@@ -441,35 +443,12 @@ def stream_batches(
 
 
 # -- registry cache -----------------------------------------------------------
-
-
-def _part_files(sf_dir: str, table: str) -> list[str]:
-    """Sorted parquet part files of ``table`` (recursive -- partitioned
-    layouts keep part files in subdirectories).  Raises on an empty set."""
-    import glob
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    parts = (
-        sorted(
-            glob.glob(os.path.join(src, "**", "*.parquet"), recursive=True)
-        )
-        if os.path.isdir(src)
-        else [src]
-    )
-    if not parts:
-        raise ValueError(f"no parquet files under {src}")
-    return parts
-
-
-def corpus_fingerprint(sf_dir: str, table: str) -> str:
-    """Content fingerprint of ``table``'s parquet source: every file
-    with its size and mtime.  Raises on an empty file set rather than
-    degenerating to a fingerprint that can't detect regeneration."""
-    stats = []
-    for p in _part_files(sf_dir, table):
-        st = os.stat(p)
-        stats.append(f"{p}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("|".join(stats).encode()).hexdigest()[:16]
+#
+# Every registry cache over a testdata table -- the stores below, the
+# shared mined pairs, the panel prep, the streaming probes -- keys on
+# ``sources.parquet.table_fingerprint``, the same ``os.stat`` walk
+# the catalog refreshes its views on.  A table rewritten in place is a
+# miss everywhere at once; a hit costs no Spark job.
 
 
 #: Above this many part files, a serial driver-side footer walk stops
@@ -486,15 +465,16 @@ def footer_row_count(spark: SparkSession, sf_dir: str, table: str) -> int:
     overhead per bench entry).  O(#files) on the driver: past
     ``_FOOTER_COUNT_MAX_FILES`` part files (the 100 TB layout) it falls
     back to the distributed count rather than serializing a huge file
-    walk on the driver."""
-    parts = _part_files(sf_dir, table)
-    if len(parts) > _FOOTER_COUNT_MAX_FILES:
+    walk on the driver.  Hive-partitioned tables count too: their
+    partition values add columns, not rows."""
+    files = table_files(os.path.join(sf_dir, f"{table}.parquet")).files
+    if len(files) > _FOOTER_COUNT_MAX_FILES:
         from ..queries import t
 
         return t(spark, sf_dir, table).count()
     import pyarrow.parquet as pq
 
-    return sum(pq.read_metadata(p).num_rows for p in parts)
+    return sum(pq.read_metadata(f.path).num_rows for f in files)
 
 
 def _prune_stale_stores(path: str) -> None:
@@ -526,7 +506,7 @@ def cached_store(
 ) -> str:
     """Path of a registry entry's store over ``table`` of ``sf_dir``,
     built on first use.  The path is CONTENT-ADDRESSED --
-    ``<cache_root>/<md5(key)>/<corpus fingerprint>`` -- so regenerated
+    ``<cache_root>/<md5(key)>/<table fingerprint>`` -- so regenerated
     testdata builds into a NEW directory instead of rebuilding in place
     under a concurrent reader mid-mine.  ``ready(manifest)`` says whether
     a store already reached the entry's lifecycle end state;
@@ -535,7 +515,7 @@ def cached_store(
     ``.build.lock``: the loser re-checks under it and adopts the
     winner's store.  Superseded fingerprints of the same key are pruned
     once past the grace window."""
-    fp = corpus_fingerprint(sf_dir, table)
+    fp = table_fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
     path = os.path.join(
         layout.cache_root, hashlib.md5(key.encode()).hexdigest()[:12], fp
     )
@@ -545,11 +525,11 @@ def cached_store(
             m = read_manifest(layout, path)
         except (OSError, ValueError):
             return False  # absent or half-built
-        return m.get("corpus_fingerprint") == fp and ready(m)
+        return m.get("table_fingerprint") == fp and ready(m)
 
     if not _ready():
         with _flock(os.path.join(path, ".build.lock")):
             if not _ready():
-                build_fn(path, {"corpus_fingerprint": fp})
+                build_fn(path, {"table_fingerprint": fp})
         _prune_stale_stores(path)
     return path

@@ -106,16 +106,18 @@ class JDBCSource(Source):
         user: str | None = None,
         password: str | None = None,
         fetchsize: int = 10_000,
-        driver: str = "org.postgresql.Driver",
+        driver: str | None = None,
         type_bridge: bool = True,
     ):
         super().__init__(spark)
         self.url = url
         self.type_bridge = type_bridge
-        #: Options every reader this source builds carries.
-        self.options: dict[str, str] = {
-            "driver": driver, "fetchsize": str(fetchsize),
-        }
+        #: Options every reader this source builds carries.  Without a
+        #: ``driver``, Spark resolves the URL's own through
+        #: ``java.sql.DriverManager.getDriver(url)``.
+        self.options: dict[str, str] = {"fetchsize": str(fetchsize)}
+        if driver:
+            self.options["driver"] = driver
         if user:
             self.options["user"] = user
         if password:

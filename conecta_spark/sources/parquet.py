@@ -19,9 +19,11 @@ Scale notes:
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,19 +69,72 @@ def load_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+class DataFile(NamedTuple):
+    path: str  # absolute
+    size: int
+    mtime_ns: int
+
+
+class TableFiles(NamedTuple):
+    files: tuple[DataFile, ...]  # sorted by path
+    partitioned: bool  # a subdirectory holds data (hive partitions)
+
+
+def table_files(path: str) -> TableFiles:
+    """The files ``spark.read.parquet(path)`` reads, as they are now:
+    ``path`` itself, or every file under the directory, skipping names
+    that start with ``_`` or ``.`` at every level as Spark's file index
+    does (``_SUCCESS``, ``.crc`` checksums, ``_temporary``).  A table with
+    a subdirectory is hive-partitioned: part of its data lives in
+    directory names, not in footers.  One ``os.stat`` per entry, no Spark
+    job; a missing ``path`` raises ``FileNotFoundError``.
+
+    This is the one answer to "which files are this table": the catalog
+    refresh, the footer probes, the stores and every registry cache read
+    it, through :func:`table_fingerprint` where they only ask whether the
+    files changed."""
+    path = os.path.abspath(path)
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return TableFiles((DataFile(path, st.st_size, st.st_mtime_ns),), False)
+    files, dirs, partitioned = [], [path], False
+    while dirs:
+        with os.scandir(dirs.pop()) as entries:
+            for e in entries:
+                if e.name.startswith(("_", ".")):
+                    continue
+                if e.is_dir():
+                    dirs.append(e.path)
+                    partitioned = True
+                else:
+                    st = e.stat()
+                    files.append(DataFile(e.path, st.st_size, st.st_mtime_ns))
+    return TableFiles(tuple(sorted(files)), partitioned)
+
+
+def table_fingerprint(path: str) -> str:
+    """Lowercase hex digest of the table at ``path``: its absolute path
+    and each data file's path, size and ``mtime_ns`` (:func:`table_files`).
+    It changes when a file is added, removed or rewritten in place, and
+    two copies of a table never share it.  Cache entries over a table key
+    on it, so a rewritten table is a miss."""
+    h = hashlib.md5(os.path.abspath(path).encode())
+    for f in table_files(path).files:
+        h.update(f"\0{f.path}\0{f.size}\0{f.mtime_ns}".encode())
+    return h.hexdigest()[:16]
+
+
 def _nanos_timestamp_columns(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS), from the footer."""
+    """Columns stored as parquet TIMESTAMP(NANOS), from the first data
+    file's footer."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    target = path
-    if os.path.isdir(path):
-        inner = [n for n in sorted(os.listdir(path)) if n.endswith(".parquet")]
-        if not inner:
-            return []
-        target = os.path.join(path, inner[0])
+    files = table_files(path).files
+    if not files:
+        return []
     try:
-        schema = pq.read_schema(target)
+        schema = pq.read_schema(files[0].path)
     except (OSError, pa.ArrowInvalid):
         return []
     return [
@@ -89,23 +144,6 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
     ]
 
 
-def data_files(path: str) -> list[str] | None:
-    """The files ``spark.read.parquet(path)`` reads: ``path`` itself, or
-    every entry of the directory not starting with ``_``/``.``.  ``None``
-    when the directory has a subdirectory (hive partitions: part of the
-    data lives in directory names, not in footers)."""
-    if not os.path.isdir(path):
-        return [path]
-    files = []
-    for e in sorted(os.scandir(path), key=lambda e: e.name):
-        if e.name.startswith(("_", ".")):
-            continue
-        if e.is_dir():
-            return None
-        files.append(e.path)
-    return files
-
-
 def footer_min_max(path: str, column: str) -> tuple[int | None, int | None] | None:
     """MIN/MAX of ``column`` over the parquet table at ``path``, from the
     row-group statistics in its footers, read on the driver: no Spark job,
@@ -113,7 +151,7 @@ def footer_min_max(path: str, column: str) -> tuple[int | None, int | None] | No
     Spark aggregate does.
 
     ``None`` whenever the footers cannot answer exactly, and the caller
-    then runs the aggregate: a subdirectory, a file pyarrow cannot read,
+    then runs the aggregate: hive partitions, a file pyarrow cannot read,
     a column that is missing, ambiguous or not a signed integer (dates,
     decimals and nanos timestamps are stored as integers too, but Spark
     reads them as other types), or a row group holding non-null values
@@ -122,13 +160,13 @@ def footer_min_max(path: str, column: str) -> tuple[int | None, int | None] | No
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    files = data_files(path)
-    if files is None:
+    listing = table_files(path)
+    if listing.partitioned:
         return None
     mn = mx = None
-    for f in files:
+    for f in listing.files:
         try:
-            md = pq.read_metadata(f)
+            md = pq.read_metadata(f.path)
         except (OSError, pa.ArrowInvalid):
             return None
         leaves = [
@@ -171,11 +209,11 @@ def footer_schema(spark: SparkSession, path: str) -> StructType | None:
 
     if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
         return None
-    files = data_files(path)
-    if not files:
+    listing = table_files(path)
+    if listing.partitioned or not listing.files:
         return None
     try:
-        kv = pq.read_metadata(files[0]).metadata or {}
+        kv = pq.read_metadata(listing.files[0].path).metadata or {}
     except (OSError, pa.ArrowInvalid):
         return None
     if _SPARK_ROW_METADATA not in kv:
@@ -196,19 +234,6 @@ def _as_nullable(t: DataType) -> DataType:
     if isinstance(t, MapType):
         return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
     return t
-
-
-def _listing(path: str) -> tuple:
-    """A table's files as they are now: ``(name, mtime_ns, size)`` per
-    directory entry, or ``(mtime_ns, size)`` for a single file."""
-    if not os.path.isdir(path):
-        st = os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
-    entries = []
-    for e in os.scandir(path):
-        st = e.stat()
-        entries.append((e.name, st.st_mtime_ns, st.st_size))
-    return tuple(sorted(entries))
 
 
 class ParquetDirSource(Source):
@@ -238,9 +263,9 @@ class ParquetDirSource(Source):
         if not self.tables:
             raise ValueError(f"no *{self.EXT} tables found under {root!r}")
         self._session = spark.newSession()
-        #: Per registered table, its :func:`_listing` when it was loaded or
-        #: last refreshed.
-        self._listings: dict[str, tuple] = {}
+        #: Per registered table, its :func:`table_fingerprint` when it was
+        #: loaded or last refreshed.
+        self._fingerprints: dict[str, str] = {}
 
     def _load(self, path: str) -> DataFrame:
         return load_parquet(self._session, path)
@@ -251,13 +276,13 @@ class ParquetDirSource(Source):
         ``upsert_parquet`` swaps a table's whole directory), so a read
         returns what the files hold at call time and sees the same files
         as the footer MIN/MAX probe."""
-        now = _listing(self.tables[stem])
-        seen = self._listings.get(stem)
+        now = table_fingerprint(self.tables[stem])
+        seen = self._fingerprints.get(stem)
         if seen is None:
             self._load(self.tables[stem]).createOrReplaceTempView(stem)
         elif seen != now:
             self._session.catalog.refreshTable(stem)
-        self._listings[stem] = now
+        self._fingerprints[stem] = now
 
     def register_views(self) -> None:
         """Publish every table of this catalog as a temp view of the

@@ -26,7 +26,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .parquet import data_files, footer_schema
+from .parquet import footer_schema
 
 
 def estimated_bytes(df: DataFrame) -> int:

@@ -25,10 +25,15 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.store import corpus_fingerprint, footer_row_count
+from ..operators.store import footer_row_count
 from ..queries import dsum, epoch_micros, register, t, DSUM
 from ..session import copy_sql_conf
-from ..sources.parquet import NANOS_AS_LONG, _nanos_timestamp_columns
+from ..sources.parquet import (
+    NANOS_AS_LONG,
+    _nanos_timestamp_columns,
+    table_files,
+    table_fingerprint,
+)
 
 SESSION_GAP_US = 1_800_000_000  # 30 min in microseconds
 
@@ -127,21 +132,19 @@ def _stage_stream_dir(src: str, prefix: str) -> str:
       into the content-addressed name (atomic; a racing duplicate is
       discarded), and the top-level symlink is swapped with os.replace.
     """
-    import glob
     import hashlib
-    import os
     import shutil
-    import uuid
 
     root = "/tmp/conecta_spark_stream"
     key = hashlib.md5(src.encode()).hexdigest()[:12]
     stage = os.path.join(root, key)
-    if os.path.isdir(src):
-        parts = sorted(glob.glob(os.path.join(src, "*.parquet")))
-    else:
-        parts = [src]
+    listing = table_files(src)
+    if listing.partitioned:
+        # flat symlinks would drop the partition values in directory names
+        raise ValueError(f"cannot stage a hive-partitioned table: {src}")
     want = {
-        f"{prefix}-{i:05d}.parquet": p for i, p in enumerate(parts)
+        f"{prefix}-{i:05d}.parquet": f.path
+        for i, f in enumerate(listing.files)
     }
     content = hashlib.md5(
         "\n".join(f"{n}\t{t}" for n, t in sorted(want.items())).encode()
@@ -194,7 +197,7 @@ def read_event_stream(spark, sf_dir: str, max_files_per_trigger: int | None = No
     # testdata stored ts as TIMESTAMP(NANOS) (surfaced as raw long ns via
     # nanosAsLong); current testdata stores timestamp[us], which the session
     # may read as TIMESTAMP or TIMESTAMP_NTZ.  Normalize all three to a
-    # watermarkable timestamp column.  Cached per corpus_fingerprint --
+    # watermarkable timestamp column.  Cached per table fingerprint --
     # repeated invocations must not re-read the footer every call.
     disk_schema = _stream_schema(spark, sf_dir, "events")
     reader = spark.readStream.schema(disk_schema).format("parquet")
@@ -591,7 +594,7 @@ def _stream_session(spark, shuffle_partitions: int):
     return sess
 
 
-#: (entry label, corpus_fingerprint) -> the entry's estimated state rows:
+#: (entry label, table fingerprint) -> the entry's estimated state rows:
 #: a probe is a Spark job (or a footer walk); caching it per content
 #: fingerprint keeps repeated registry invocations from re-scanning a
 #: static corpus, and a rewritten corpus is probed again.
@@ -600,10 +603,10 @@ _STATE_PROBE_CACHE: dict = {}
 
 def _state_session(spark, sf_dir: str, table: str, label: str, probe):
     """The :func:`_stream_session` sized for ``label``'s state: ``probe()``
-    estimates its state rows once per :func:`corpus_fingerprint` of
+    estimates its state rows once per :func:`table_fingerprint` of
     ``table``, and :func:`derive_state_partitions` turns that into the
     state-partition count, capped at the cluster's parallelism."""
-    key = (label, corpus_fingerprint(sf_dir, table))
+    key = (label, table_fingerprint(os.path.join(sf_dir, f"{table}.parquet")))
     n_state = _STATE_PROBE_CACHE.get(key)
     if n_state is None:
         n_state = _STATE_PROBE_CACHE[key] = probe()
@@ -641,7 +644,7 @@ def _drain(stream: DataFrame, output_mode: str, label: str) -> DataFrame:
         sess.catalog.dropTempView(name)
 
 
-#: On-disk schema per corpus_fingerprint: the registry/bench invoke each
+#: On-disk schema per table fingerprint: the registry/bench invoke each
 #: streaming entry repeatedly, and every invocation paid a driver-side
 #: footer read (spark.read.parquet(...).schema) just to restate an
 #: immutable schema.  A regenerated corpus has a new fingerprint and is
@@ -650,13 +653,11 @@ _STREAM_SCHEMA_CACHE: dict = {}
 
 
 def _stream_schema(spark, sf_dir: str, table: str):
-    key = corpus_fingerprint(sf_dir, table)
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    key = table_fingerprint(path)
     schema = _STREAM_SCHEMA_CACHE.get(key)
     if schema is None:
-        schema = spark.read.parquet(
-            os.path.join(sf_dir, f"{table}.parquet")
-        ).schema
-        _STREAM_SCHEMA_CACHE[key] = schema
+        schema = _STREAM_SCHEMA_CACHE[key] = spark.read.parquet(path).schema
     return schema
 
 

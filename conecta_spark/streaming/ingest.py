@@ -38,6 +38,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.parquet import table_files
+
 
 def snapshot_hashes(spark: SparkSession, snapshot_path: str) -> DataFrame:
     """The dedup index of the accumulated snapshot: its distinct content
@@ -72,8 +74,8 @@ def ingest_batch(
         .where(F.col("rn") == 1)
         .drop("rn")
     )
-    has_snapshot = os.path.isdir(snapshot_path) and any(
-        f.endswith(".parquet") for f in os.listdir(snapshot_path)
+    has_snapshot = os.path.isdir(snapshot_path) and bool(
+        table_files(snapshot_path).files
     )
     if has_snapshot:
         novel = first.join(

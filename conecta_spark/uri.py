@@ -1,7 +1,8 @@
 """Connection-string dispatch (reference: conecta-core/src/source/mod.rs:33-70).
 
 Accepts conecta-style URIs (``postgres://``, ``postgresql://``, SQLAlchemy
-``postgres+psycopg2://``) and rewrites them to Spark JDBC URLs, plus local
+``postgres+psycopg2://``) and rewrites them to Spark JDBC URLs, any
+``jdbc:`` URL as is (read through the driver registered for it), plus local
 filesystem paths / ``file://`` for the parquet catalog source.  Unknown
 schemes raise (the reference panics; source/mod.rs:66-69).
 """
@@ -21,7 +22,7 @@ _FILE_SCHEMES = {"csv", "json", "orc", "parquet"}
 
 @dataclass(frozen=True)
 class SourceSpec:
-    kind: str                     # "parquet" | "csv" | "json" | "orc" | "postgres"
+    kind: str                     # "parquet" | "csv" | "json" | "orc" | "postgres" | "jdbc"
     location: str                 # directory path or JDBC URL
     user: str | None = None
     password: str | None = None
@@ -33,7 +34,7 @@ def parse_uri(conn: str) -> SourceSpec:
     if conn.startswith("file://"):
         return SourceSpec(kind="parquet", location=conn.removeprefix("file://"))
     if conn.startswith("jdbc:"):
-        return SourceSpec(kind="postgres", location=conn)
+        return SourceSpec(kind="jdbc", location=conn)
     if "://" not in conn:
         if os.path.isdir(conn) or conn.endswith(".parquet"):
             return SourceSpec(kind="parquet", location=conn)

@@ -246,9 +246,21 @@ def source_fingerprint() -> str:
 
 
 #: The registry's signature and ANN store caches live at
-#: ``<root>/<config key>/<corpus fingerprint>``: a fixed placeholder keeps
+#: ``<root>/<config key>/<table fingerprint>``: a fixed placeholder keeps
 #: a regenerated corpus or a new cache key from churning the artifact.
-_STORE_PATH = re.compile(r"/tmp/conecta_spark_(sig|ann)store/[0-9a-f]+/[0-9a-f]+")
+_STORE_PATH = re.compile(r"/tmp/conecta_spark_(sig|ann)store/[0-9a-f]+/[0-9a-f]+\b")
+_STORE_ROOT = re.compile(r"/tmp/conecta_spark_(sig|ann)store/(?!<key>/<fingerprint>)")
+
+
+def _placeholder_store_paths(name: str, plan: str) -> str:
+    """``plan`` with every store path replaced by the placeholder.  Raises
+    on a store path the pattern does not cover (a fingerprint that is not
+    lowercase hex), which would otherwise churn the artifact silently."""
+    plan = _STORE_PATH.sub(r"/tmp/conecta_spark_\1store/<key>/<fingerprint>", plan)
+    left = [line for line in plan.splitlines() if _STORE_ROOT.search(line)]
+    if left:
+        raise ValueError(f"{name}: store path left in the plan: {left[0].strip()}")
+    return plan
 
 
 def main() -> None:
@@ -281,9 +293,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        plan = _STORE_PATH.sub(
-            r"/tmp/conecta_spark_\1store/<key>/<fingerprint>", plan
-        )
+        plan = _placeholder_store_paths(name, plan)
         out.append(f"## {name}\n\n{note}\n\n```\n{plan.rstrip()}\n```\n")
     with open(os.path.join(os.path.dirname(__file__), "PLANS.md"), "w") as f:
         f.write("\n".join(out))

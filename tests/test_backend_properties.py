@@ -311,6 +311,49 @@ class TestIVFQuantizerContract:
         assert c.storageLevel.useMemory or c.storageLevel.useDisk
         dd._PAIRS.evict()
 
+    def test_shared_pairs_follow_a_rewritten_documents_table(
+        self, spark, tmp_path, spark_jobs
+    ):
+        """A documents table rewritten in place inside one session is
+        mined again: x07 returns the new table's pairs, not the ones the
+        cache held for the same directory.  Unchanged files are a hit: the
+        same held DataFrame, with no Spark job."""
+        import random
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from conecta_spark.operators import dedup as dd
+        from conecta_spark.queries import REGISTRY
+
+        def write(texts):
+            pq.write_table(
+                pa.table({
+                    "doc_id": pa.array(range(len(texts)), pa.int64()),
+                    "text": texts,
+                }),
+                str(tmp_path / "documents.parquet"),
+            )
+
+        rng = random.Random(7)
+        texts = [
+            "".join(rng.choice("abcdefghijklmnopqrstuvwxyz ") for _ in range(300))
+            for _ in range(40)
+        ]
+        x07 = REGISTRY["x07_dedup_minhash_lsh"].fn
+        dd._PAIRS.evict()
+        write(texts)
+        assert x07(spark, str(tmp_path)).count() == 0
+        write([texts[i // 2] for i in range(40)])  # doc 2k+1 repeats doc 2k
+        fresh = x07(spark, str(tmp_path))
+        assert sorted((r[0], r[1]) for r in fresh.collect()) == [
+            (2 * k, 2 * k + 1) for k in range(20)
+        ]
+        with spark_jobs() as jobs:
+            assert x07(spark, str(tmp_path)) is fresh
+        assert jobs == []
+        dd._PAIRS.evict()
+
     def test_shared_pairs_materialized_at_creation(self, spark, sf_dir):
         """The slot's relation must be EAGERLY materialized inside
         shared_minhash_pairs: a later key-switch eviction then only drops

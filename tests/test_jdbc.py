@@ -315,6 +315,17 @@ def _sums(tbl) -> tuple[int, int, int]:
     )
 
 
+def test_read_sql_reads_a_jdbc_url_through_its_own_driver(derby):
+    """A ``jdbc:`` URL alone reads: the source names no driver class, so
+    Spark takes the one registered for the URL (Derby here, not the
+    Postgres driver every ``jdbc:`` URL used to get)."""
+    tbl = read_sql(
+        derby.url, "select * from t", spark=derby.spark,
+        return_backend="pyarrow",
+    )
+    assert _sums(tbl) == (203, sum(range(200)), 3)
+
+
 def test_probed_range_read_on_embedded_derby(derby):
     """A partitioned read with no range runs the MIN/MAX probe, splits
     the probed range into the asked-for partitions and drops NULL keys."""

@@ -414,9 +414,9 @@ def test_catalog_registers_upserted_table_without_a_job(
 
 
 def _n_files(path):
-    from conecta_spark.sources.parquet import data_files
+    from conecta_spark.sources.parquet import table_files
 
-    return len(data_files(path))
+    return len(table_files(path).files)
 
 
 def test_repeated_upserts_keep_one_file(spark, tmp_path):

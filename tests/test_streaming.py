@@ -720,12 +720,13 @@ def test_stream_schema_cache_hits_and_invalidates(spark, tmp_path):
     fingerprint changes (r12 optimization)."""
     import os
 
+    from conecta_spark.sources.parquet import table_fingerprint
     from conecta_spark.streaming import events as ev
 
     src = str(tmp_path / "schema_cache.parquet")
     spark.createDataFrame([(1,)], "a long").coalesce(1).write.parquet(src)
     s1 = ev._stream_schema(spark, str(tmp_path), "schema_cache")
-    key = ev.corpus_fingerprint(str(tmp_path), "schema_cache")
+    key = table_fingerprint(src)
     sentinel = object()
     ev._STREAM_SCHEMA_CACHE[key] = sentinel
     # same content -> cache hit, the sentinel proves no re-read happened
@@ -764,6 +765,23 @@ def test_stage_dir_rebuilds_when_targets_change(spark, tmp_path):
     # any concurrent stream mid-listing (nothing is ever unlinked)
     assert os.readlink(_stage_stream_dir(src, "events")) == v2
     assert os.path.isdir(v1)
+
+
+def test_stage_dir_rejects_a_partitioned_source(tmp_path):
+    """Flat symlinks would drop a hive-partitioned source's partition
+    values, which live in directory names: staging one raises instead
+    of streaming rows without them."""
+    import os
+
+    import pandas as pd
+
+    from conecta_spark.streaming.events import _stage_stream_dir
+
+    src = str(tmp_path / "src")
+    os.makedirs(f"{src}/k=1")
+    pd.DataFrame({"x": [1]}).to_parquet(f"{src}/k=1/part-0.parquet")
+    with pytest.raises(ValueError, match="hive-partitioned"):
+        _stage_stream_dir(src, "events")
 
 
 def test_incremental_minhash_rejects_shared_ids(spark):
@@ -818,13 +836,13 @@ def test_source_fingerprint_sees_part_rewrite(spark, tmp_path):
     advice)."""
     import os
 
-    from conecta_spark.operators.store import corpus_fingerprint
+    from conecta_spark.sources.parquet import table_fingerprint
 
     src = str(tmp_path / "events.parquet")
     spark.createDataFrame([(1,)], "a long").coalesce(1).write.parquet(src)
-    fp1 = corpus_fingerprint(str(tmp_path), "events")
+    fp1 = table_fingerprint(src)
     part = next(
         p for p in os.listdir(src) if p.endswith(".parquet")
     )
     os.utime(os.path.join(src, part), ns=(1, 1))  # same name, same size
-    assert corpus_fingerprint(str(tmp_path), "events") != fp1
+    assert table_fingerprint(src) != fp1
