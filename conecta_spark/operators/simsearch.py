@@ -5,12 +5,18 @@ still oracle-checkable), and ml-based BRP-LSH / IVF variants.
 
 Scale notes (100 TB):
 
-* all top-k paths rank via sort-limit (``ORDER BY score LIMIT k`` ->
+* three scoring kernels, one implementation each: an expression scorer
+  (broadcast query rows, map-side score, no self-matches), a block-matmul
+  all-pairs grid and a broadcast-matrix corpus scan (numpy inside
+  Arrow-batched mapInPandas).
+* single-query top-k ranks via sort-limit (``ORDER BY score LIMIT k`` ->
   TakeOrderedAndProject: per-partition partial top-k, one k-row merge on
-  the driver side, no global shuffle-sort) and only then attach the
+  the driver side, no global shuffle-sort) and only then attaches the
   ``rank`` column with a row_number window over the k surviving rows.
+  Panels rank with one row_number window per query_id, which plans as
+  WindowGroupLimit (per-partition top-k heaps before the shuffle).
   Determinism survives because the sort key (rounded score desc, id) is a
-  total order, so sort-limit and a global row_number select the same rows.
+  total order, so every ranking selects the same rows.
 * near-dup pairs normalize once per row, then join; the pair join is the
   quadratic wall -- at scale replace with :func:`ann_lsh_topk` buckets or
   ml BucketedRandomProjectionLSH (:func:`brp_lsh_ml`).
@@ -113,9 +119,54 @@ def _vectors(df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id") 
     )
 
 
+def _queries(e: DataFrame, ids, id_col: str, **cols: str) -> DataFrame:
+    """The query rows of ``e`` as a query relation (query_id, <name>...),
+    each keyword renaming a column of ``e`` (``qv="v"``).  ``ids`` is one
+    query id or a panel of them; one id becomes a literal query_id, which
+    the optimizer folds into the self-match filter and pushes to the
+    scan."""
+    if hasattr(ids, "__iter__"):
+        rows, qid = e.where(F.col(id_col).isin(*ids)), F.col(id_col)
+    else:
+        rows, qid = e.where(F.col(id_col) == ids), F.lit(ids)
+    return rows.select(
+        qid.alias("query_id"), *(F.col(c).alias(n) for n, c in cols.items())
+    )
+
+
+def _cosine(dim: int = DIM):
+    """Cosine of the ``v`` and ``qv`` columns, rounded to 6dp as the
+    DuckDB oracles round it, named ``score``."""
+    return F.round(F.expr(cosine_expr("v", "qv", dim)), 6).alias("score")
+
+
+def _score(
+    vecs: DataFrame,
+    queries: DataFrame,
+    score,
+    id_col: str,
+    on=None,
+    broadcast: bool = True,
+) -> DataFrame:
+    """The expression kernel: (query_id, id, <score>) for every row of
+    ``vecs`` that meets a row of ``queries`` (query_id, qv...), except a
+    query's own id.
+
+    ``on=None`` is a cross join against the query rows; otherwise ``on``
+    is the join condition (the LSH bucket or Hamming probe, IVF's
+    ``"cell"``).  ``broadcast`` hints the query side, the default for a
+    query set known to be small; the score is an expression evaluated
+    map-side, next to the scan."""
+    q = F.broadcast(queries) if broadcast else queries
+    pairs = vecs.crossJoin(q) if on is None else vecs.join(q, on)
+    return pairs.where(F.col(id_col) != F.col("query_id")).select(
+        "query_id", id_col, score
+    )
+
+
 def _topk_ranked(scored: DataFrame, k: int, id_col: str) -> DataFrame:
-    """Rank the top ``k`` of ``scored`` (columns: id_col, score) by
-    (score desc, id).
+    """Rank the top ``k`` of a single query's ``scored`` rows by (score
+    desc, id); returns (id_col, score, rank).
 
     Sort-limit first: Catalyst plans it as TakeOrderedAndProject, which
     keeps a k-row heap per partition and merges k rows -- no
@@ -124,9 +175,145 @@ def _topk_ranked(scored: DataFrame, k: int, id_col: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     order = [F.col("score").desc(), F.col(id_col)]
-    top = scored.orderBy(*order).limit(k)
+    top = scored.select(id_col, "score").orderBy(*order).limit(k)
     w = Window.orderBy(*order)
     return top.withColumn("rank", F.row_number().over(w))
+
+
+def _rank_per_query(
+    scored: DataFrame, k: int, id_col: str, order=None
+) -> DataFrame:
+    """Rank a panel's ``scored`` rows (query_id, id, score...) per query by
+    (``order``, id), keeping ranks <= ``k``; ``order`` defaults to score
+    descending.  The filtered row_number plans as WindowGroupLimit: a
+    k-row heap per query and partition before the shuffle."""
+    from pyspark.sql.window import Window
+
+    if order is None:
+        order = F.col("score").desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col(id_col))
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
+
+
+def _block_pairs(
+    blocks: DataFrame, threshold: float, cell: str | None = None
+) -> DataFrame:
+    """The block-matmul kernel: every pair of vectors in ``blocks`` with
+    rounded cosine >= ``threshold``, as (vec_a < vec_b, cosine).
+
+    ``blocks`` is (bid, rows: array<struct<vid, nv>>) with unit vectors
+    ``nv``; ``cell`` names a further column both blocks of a pair must
+    share.  The triangular block-pair grid (``a.bid <= b.bid``) joins
+    each block with every block at or above it, and each pair scores as
+    one numpy ``A @ B.T`` inside Arrow-batched mapInPandas.  Scores round
+    to 6dp before the threshold so the BLAS dot and the oracle's
+    sequential fold agree bit-for-bit."""
+    import pandas as pd
+
+    a, b = blocks.alias("a"), blocks.alias("b")
+    cond = F.col("a.bid") <= F.col("b.bid")
+    if cell is not None:
+        cond = (F.col(f"a.{cell}") == F.col(f"b.{cell}")) & cond
+    grid = a.join(b, cond).select(
+        F.col("a.bid").alias("bid_a"),
+        F.col("a.rows").alias("rows_a"),
+        F.col("b.bid").alias("bid_b"),
+        F.col("b.rows").alias("rows_b"),
+    )
+
+    def score_blocks(batches):
+        import numpy as np
+
+        for pdf in batches:
+            outs = []
+            for rows_a, rows_b, bid_a, bid_b in zip(
+                pdf["rows_a"], pdf["rows_b"], pdf["bid_a"], pdf["bid_b"]
+            ):
+                ids_a = np.array([r["vid"] for r in rows_a], dtype=np.int64)
+                ids_b = np.array([r["vid"] for r in rows_b], dtype=np.int64)
+                mat_a = np.array([r["nv"] for r in rows_a], dtype=np.float64)
+                mat_b = np.array([r["nv"] for r in rows_b], dtype=np.float64)
+                scores = np.round(mat_a @ mat_b.T, 6)
+                mask = scores >= threshold
+                # same-block pairs need i < j: each row is cosine 1.0
+                # with itself, and each pair once
+                if bid_a == bid_b:
+                    mask &= ids_a[:, None] < ids_b[None, :]
+                ii, jj = np.nonzero(mask)
+                if len(ii) == 0:
+                    continue
+                ia, ib = ids_a[ii], ids_b[jj]
+                outs.append(
+                    pd.DataFrame(
+                        {
+                            "vec_a": np.minimum(ia, ib),
+                            "vec_b": np.maximum(ia, ib),
+                            "cosine": scores[ii, jj],
+                        }
+                    )
+                )
+            yield (
+                pd.concat(outs)
+                if outs
+                else pd.DataFrame(
+                    {"vec_a": [], "vec_b": [], "cosine": []}
+                ).astype({"vec_a": "int64", "vec_b": "int64"})
+            )
+
+    return grid.mapInPandas(
+        score_blocks, schema="vec_a long, vec_b long, cosine double"
+    )
+
+
+def _matrix_scan(
+    queries: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    schema,
+    reduce,
+) -> DataFrame:
+    """The broadcast-matrix kernel: score every ``corpus`` row against a
+    bounded query set in one corpus pass.
+
+    ``queries`` and ``corpus`` are (id, v) relations.  The queries are
+    unit-normalized, collected in id order (a bounded planner artifact)
+    and broadcast as one numpy matrix; the corpus is normalized after a
+    :func:`spread` and each Arrow batch computes ``round(M @ Q.T, 6)``.
+    ``reduce(ids, scores, query_ids)`` turns a batch's ids and score
+    matrix (rows: corpus, columns: queries in id order) into a pandas
+    frame of ``schema``.  An empty query set returns an empty frame."""
+    q_rows = (
+        queries.select(id_col, F.expr(normalize_expr("v", DIM)).alias("qv"))
+        .orderBy(id_col)
+        .collect()
+    )
+    # spread: normalize + per-batch matmul on a narrow scan ran one-task
+    # (measured 0.93 s one-task at sf0.1)
+    corpus = spread(corpus).select(
+        id_col, F.expr(normalize_expr("v", DIM)).alias("nv")
+    )
+    if not q_rows:
+        return corpus.sparkSession.createDataFrame([], schema)
+    import numpy as np
+
+    sc = corpus.sparkSession.sparkContext
+    q_ids = sc.broadcast(np.array([r[0] for r in q_rows], dtype=np.int64))
+    q_mat = sc.broadcast(np.array([r["qv"] for r in q_rows], dtype=np.float64))
+
+    def score_batches(batches):
+        import numpy as np
+
+        qm, qi = q_mat.value, q_ids.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            mat = np.array(list(pdf["nv"]), dtype=np.float64)
+            yield reduce(ids, np.round(mat @ qm.T, 6), qi)
+
+    return corpus.mapInPandas(score_batches, schema=schema)
 
 
 def knn_topk(
@@ -141,16 +328,8 @@ def knn_topk(
     The single query row is broadcast; scores are computed map-side; ranking
     uses (rounded score, id) so ties are deterministic."""
     e = _vectors(df, vec_col, id_col)
-    q = e.where(F.col(id_col) == query_id).select(F.col("v").alias("qv"))
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .where(F.col(id_col) != query_id)
-        .select(
-            id_col,
-            F.round(F.expr(cosine_expr("v", "qv", DIM)), 6).alias("score"),
-        )
-    )
-    return _topk_ranked(scored, k, id_col)
+    q = _queries(e, query_id, id_col, qv="v")
+    return _topk_ranked(_score(e, q, _cosine(), id_col), k, id_col)
 
 
 #: embedding_near_dup_pairs' packed block relation.
@@ -198,18 +377,9 @@ def embedding_near_dup_pairs(
     is O(N^2) total work by construction, and past the 256-block cap each
     task's matmul grows quadratically too -- brute force is the wrong tool
     there and :func:`ann_lsh_topk` / :func:`brp_lsh_ml` /
-    :func:`semdedup` take over.  ``allow_full_grid=True`` is the explicit
-    escape hatch for callers who have sized their cluster for the
+    :func:`semantic_dedup` take over.  ``allow_full_grid=True`` is the
+    explicit escape hatch for callers who have sized their cluster for the
     quadratic bill and want the exact answer anyway."""
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     if allow_full_grid and n_blocks is not None:
         # Fully-explicit caller: the cap guard is moot (they accepted the
         # quadratic bill) and the count only fed the adaptive block sizing
@@ -223,9 +393,10 @@ def embedding_near_dup_pairs(
                 f"embedding_near_dup_pairs: corpus has {n_rows} rows, above "
                 f"the exact-all-pairs cap of {X11_FULL_GRID_CAP_ROWS} (256 "
                 "blocks x 1024 rows); the block grid is O(N^2) total work "
-                "by construction. Use ann_lsh_topk / brp_lsh_ml / semdedup "
-                "for large corpora, or pass allow_full_grid=True to accept "
-                "the quadratic cost explicitly."
+                "by construction. Use ann_lsh_topk / brp_lsh_ml / "
+                "semantic_dedup for large corpora, or pass "
+                "allow_full_grid=True to accept the quadratic cost "
+                "explicitly."
             )
     if n_blocks is None:
         n_blocks = max(1, min(256, -(-n_rows // 1024)))
@@ -249,59 +420,7 @@ def embedding_near_dup_pairs(
             F.collect_list(F.struct("vid", "nv")).alias("rows")
         )
     )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    grid = a.join(b, F.col("a.bid") <= F.col("b.bid")).select(
-        F.col("a.bid").alias("bid_a"),
-        F.col("a.rows").alias("rows_a"),
-        F.col("b.bid").alias("bid_b"),
-        F.col("b.rows").alias("rows_b"),
-    )
-    out_schema = StructType(
-        [
-            StructField("vec_a", LongType()),
-            StructField("vec_b", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
-    def score_blocks(batches):
-        import numpy as np
-
-        for pdf in batches:
-            outs = []
-            for rows_a, rows_b, bid_a, bid_b in zip(
-                pdf["rows_a"], pdf["rows_b"], pdf["bid_a"], pdf["bid_b"]
-            ):
-                ids_a = np.array([r["vid"] for r in rows_a], dtype=np.int64)
-                ids_b = np.array([r["vid"] for r in rows_b], dtype=np.int64)
-                mat_a = np.array([r["nv"] for r in rows_a], dtype=np.float64)
-                mat_b = np.array([r["nv"] for r in rows_b], dtype=np.float64)
-                scores = np.round(mat_a @ mat_b.T, 6)
-                mask = scores >= threshold
-                if bid_a == bid_b:
-                    mask &= ids_a[:, None] < ids_b[None, :]
-                ii, jj = np.nonzero(mask)
-                if len(ii) == 0:
-                    continue
-                ia, ib = ids_a[ii], ids_b[jj]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "vec_a": np.minimum(ia, ib),
-                            "vec_b": np.maximum(ia, ib),
-                            "cosine": scores[ii, jj],
-                        }
-                    )
-                )
-            yield (
-                pd.concat(outs)
-                if outs
-                else pd.DataFrame(
-                    {"vec_a": [], "vec_b": [], "cosine": []}
-                ).astype({"vec_a": "int64", "vec_b": "int64"})
-            )
-
-    return grid.mapInPandas(score_blocks, schema=out_schema)
+    return _block_pairs(blocks, threshold)
 
 
 def ann_lsh_topk(
@@ -326,22 +445,12 @@ def ann_lsh_topk(
     e = _vectors(df, vec_col, id_col).withColumn(
         "bucket", F.expr(hyperplane_bucket_expr("v", planes))
     )
-    q = e.where(F.col(id_col) == query_id).select(
-        F.col("v").alias("qv"), F.col("bucket").alias("qbucket")
-    )
+    q = _queries(e, query_id, id_col, qv="v", qbucket="bucket")
     if probe_hamming == 0:
         cond = F.col("bucket") == F.col("qbucket")
     else:
         cond = F.expr(f"bit_count(bucket ^ qbucket) <= {probe_hamming}")
-    scored = (
-        e.join(F.broadcast(q), cond)
-        .where(F.col(id_col) != query_id)
-        .select(
-            id_col,
-            F.round(F.expr(cosine_expr("v", "qv", DIM)), 6).alias("score"),
-        )
-    )
-    return _topk_ranked(scored, k, id_col)
+    return _topk_ranked(_score(e, q, _cosine(), id_col, on=cond), k, id_col)
 
 
 def brp_lsh_ml(
@@ -679,29 +788,19 @@ def _cell_search(
     of ids) and broadcasts it; an ingest batch is unbounded, so AQE
     picks the join side.  A query never returns its own id.
     Returns (query_id, id, score, rank<=k)."""
-    from pyspark.sql.window import Window
-
     id_col = index.id_col
     probes = _probe_cells(
         queries.select("query_id", "qv"), index.centers, n_probe, "qv"
     )
-    scored = (
-        index.assigned.join(F.broadcast(probes) if panel else probes, "cell")
-        .where(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            id_col,
-            F.round(
-                F.expr(cosine_expr("v", "qv", len(index.centers[0]))), 6
-            ).alias("score"),
-        )
+    scored = _score(
+        index.assigned,
+        probes,
+        _cosine(len(index.centers[0])),
+        id_col,
+        on="cell",
+        broadcast=panel,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col(id_col)
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
+    return _rank_per_query(scored, k, id_col)
 
 
 def ivf_search(
@@ -734,10 +833,7 @@ def ivf_search_batch(
 
     Missing query ids are skipped (same degrade-don't-crash contract as
     the panel helpers).  Returns (query_id, vec_id, score, rank<=k)."""
-    id_col = index.id_col
-    queries = index.assigned.where(F.col(id_col).isin(*query_ids)).select(
-        F.col(id_col).alias("query_id"), F.col("v").alias("qv")
-    )
+    queries = _queries(index.assigned, query_ids, index.id_col, qv="v")
     return _cell_search(index, queries, k, n_probe, panel=True)
 
 
@@ -909,30 +1005,17 @@ def _exact_topk_panel(
 
     Reference path, not the serving path: the per-query window shuffles
     |panel| x |corpus| rows, fine for a fixed 5-query acceptance panel;
-    bulk kNN at scale goes through knn_batch's per-partition top-k.
+    bulk kNN at scale goes through batch_knn's per-partition top-k.
     ``vecs`` short-circuits the corpus prep with an already-validated
     (vec_id, v) relation (the shared _panel_prep cache)."""
-    from pyspark.sql.window import Window
-
     v = vecs.select("vec_id", "v") if vecs is not None else _vectors(df)
-    q = v.where(F.col("vec_id").isin(*ANN_QUERY_IDS)).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
+    q = _queries(v, ANN_QUERY_IDS, "vec_id", qv="v")
     if metric == "l2":
         val = F.round(F.expr(l2_expr("v", "qv", DIM)), 6).alias("l2")
-        order = [F.col("l2").asc()]
+        order = F.col("l2").asc()
     else:
-        val = F.round(F.expr(cosine_expr("v", "qv", DIM)), 6).alias("score")
-        order = [F.col("score").desc()]
-    scored = (
-        v.crossJoin(F.broadcast(q))
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", val)
-    )
-    w = Window.partitionBy("query_id").orderBy(*order, F.col("vec_id"))
-    return scored.withColumn(
-        "rank", F.row_number().over(w)
-    ).where(F.col("rank") <= k)
+        val, order = _cosine(), None
+    return _rank_per_query(_score(v, q, val, "vec_id"), k, "vec_id", order)
 
 
 def _with_recall_flag(
@@ -1105,19 +1188,11 @@ def knn_int8_topk(
     e = _vectors(df, vec_col, id_col).select(
         id_col, F.expr(quantize_int8_expr("v")).alias("qa")
     )
-    q = e.where(F.col(id_col) == query_id).select(F.col("qa").alias("qb"))
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .where(F.col(id_col) != query_id)
-        .select(
-            id_col,
-            F.expr(
-                "aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, "
-                "(acc, x) -> acc + x)"
-            ).alias("score"),
-        )
-    )
-    return _topk_ranked(scored, k, id_col)
+    dot = F.expr(
+        "aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (acc, x) -> acc + x)"
+    ).alias("score")
+    q = _queries(e, query_id, id_col, qb="qa")
+    return _topk_ranked(_score(e, q, dot, id_col), k, id_col)
 
 
 _DUCK_Q = (
@@ -1291,18 +1366,10 @@ def filtered_knn(
     filter is selective.
     """
     e = _vectors(emb, vec_col, id_col)
-    q = e.where(F.col(id_col) == query_id).select(F.col("v").alias("qv"))
+    q = _queries(e, query_id, id_col, qv="v")
     allowed = docs.where(predicate).select(F.col(doc_id_col).alias(id_col))
-    scored = (
-        e.join(allowed, id_col, "left_semi")
-        .crossJoin(F.broadcast(q))
-        .where(F.col(id_col) != query_id)
-        .select(
-            id_col,
-            F.round(F.expr(cosine_expr("v", "qv", DIM)), 6).alias("score"),
-        )
-    )
-    return _topk_ranked(scored, k, id_col)
+    vecs = e.join(allowed, id_col, "left_semi")
+    return _topk_ranked(_score(vecs, q, _cosine(), id_col), k, id_col)
 
 
 @register(
@@ -1361,13 +1428,10 @@ def semantic_dedup(
     grid joins on equal cell, and each pair scores as one vectorized numpy
     ``A @ B.T`` (a SQL pair join re-evaluating the 64-term dot per pair in
     an interpreted lambda measured ~10 s at sf0.1; the matmul form is
-    sub-second).  Scores round to 6dp before the threshold so BLAS and the
-    oracle's sequential fold agree.  Flagged ids come back as a skinny
-    distinct joined onto the assignment.
+    sub-second).  A pair flags only its higher id (``vec_b``), so the
+    flagged ids come back as a skinny distinct joined onto the
+    assignment.
     """
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
-
     # spread: quantize/argmax/normalize are interpreted per-row lambdas;
     # a single-row-group scan would evaluate the whole assignment prep
     # single-task (measured 3 x 1.47 s one-task stages at sf0.1)
@@ -1396,56 +1460,10 @@ def semantic_dedup(
         .groupBy("centroid_id", "bid")
         .agg(F.collect_list(F.struct(F.col(id_col).alias("vid"), "nv")).alias("rows"))
     )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    grid = a.join(
-        b,
-        (F.col("a.centroid_id") == F.col("b.centroid_id"))
-        & (F.col("a.bid") <= F.col("b.bid")),
-    ).select(
-        F.col("a.bid").alias("bid_a"),
-        F.col("a.rows").alias("rows_a"),
-        F.col("b.bid").alias("bid_b"),
-        F.col("b.rows").alias("rows_b"),
-    )
-
-    def flag_blocks(batches):
-        import numpy as np
-
-        for pdf in batches:
-            outs = []
-            for rows_a, rows_b, bid_a, bid_b in zip(
-                pdf["rows_a"], pdf["rows_b"], pdf["bid_a"], pdf["bid_b"]
-            ):
-                ids_a = np.array([r["vid"] for r in rows_a], dtype=np.int64)
-                ids_b = np.array([r["vid"] for r in rows_b], dtype=np.int64)
-                mat_a = np.array([r["nv"] for r in rows_a], dtype=np.float64)
-                mat_b = np.array([r["nv"] for r in rows_b], dtype=np.float64)
-                scores = np.round(mat_a @ mat_b.T, 6)
-                mask = scores >= threshold
-                # a pair flags only its HIGHER id; same-block pairs need
-                # i != j (each row is cosine-1.0 with itself)
-                if bid_a == bid_b:
-                    mask &= ids_a[:, None] < ids_b[None, :]
-                ii, jj = np.nonzero(mask)
-                if len(ii) == 0:
-                    continue
-                outs.append(
-                    pd.DataFrame(
-                        {"dup_id": np.maximum(ids_a[ii], ids_b[jj])}
-                    )
-                )
-            yield (
-                pd.concat(outs)
-                if outs
-                else pd.DataFrame({"dup_id": []}).astype({"dup_id": "int64"})
-            )
-
     dups = (
-        grid.mapInPandas(
-            flag_blocks, schema=StructType([StructField("dup_id", LongType())])
-        )
+        _block_pairs(blocks, threshold, cell="centroid_id")
+        .select(F.col("vec_b").alias(id_col))
         .distinct()
-        .select(F.col("dup_id").alias(id_col))
         .withColumn("flag", F.lit(1).cast("long"))
     )
     return assigned.join(dups, id_col, "left").select(
@@ -1522,72 +1540,36 @@ def semantic_contamination(
     first maximum).
     """
     import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     ev = valid_vectors(df, vec_col, id_col).select(
         F.col(id_col),
         F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("v"),
         F.col(label_col),
     )
-    bench_rows = (
-        ev.where(F.col(label_col) == bench_label)
-        .select(id_col, F.expr(normalize_expr("v", DIM)).alias("bv"))
-        .orderBy(id_col)
-        .collect()
-    )
-    # spread: the per-row normalize + Arrow scoring map ran single-task
-    # on a single-row-group scan (measured 0.93 s one-task at sf0.1)
-    corpus = spread(ev.where(F.col(label_col) != bench_label)).select(
-        id_col, F.expr(normalize_expr("v", DIM)).alias("nv")
-    )
-    out_schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("bench_id", LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-    if not bench_rows:
-        return corpus.sparkSession.createDataFrame([], out_schema)
-    sc = corpus.sparkSession.sparkContext
-    import numpy as np
 
-    b_ids = sc.broadcast(
-        np.array([r[0] for r in bench_rows], dtype=np.int64)
-    )
-    b_mat = sc.broadcast(
-        np.array([r["bv"] for r in bench_rows], dtype=np.float64)
-    )
-
-    def score_batches(batches):
+    def nearest_bench(ids, scores, bench_ids):
         import numpy as np
 
-        bm, bi = b_mat.value, b_ids.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf["nv"]), dtype=np.float64)
-            scores = np.round(mat @ bm.T, 6)
-            # bench rows are id-sorted, so argmax's first-maximum rule IS
-            # the lowest-bench-id tie-break
-            best_j = scores.argmax(axis=1)
-            best_s = scores[np.arange(len(ids)), best_j]
-            keep = best_s >= threshold
-            yield pd.DataFrame(
-                {
-                    "vec_id": ids[keep],
-                    "bench_id": bi[best_j[keep]],
-                    "score": best_s[keep],
-                }
-            )
+        # bench rows are id-sorted, so argmax's first-maximum rule IS the
+        # lowest-bench-id tie-break
+        best_j = scores.argmax(axis=1)
+        best_s = scores[np.arange(len(ids)), best_j]
+        keep = best_s >= threshold
+        return pd.DataFrame(
+            {
+                "vec_id": ids[keep],
+                "bench_id": bench_ids[best_j[keep]],
+                "score": best_s[keep],
+            }
+        )
 
-    return corpus.mapInPandas(score_batches, schema=out_schema)
+    return _matrix_scan(
+        ev.where(F.col(label_col) == bench_label),
+        ev.where(F.col(label_col) != bench_label),
+        id_col,
+        "vec_id long, bench_id long, score double",
+        nearest_bench,
+    )
 
 
 @register(
@@ -1645,83 +1627,42 @@ def batch_knn(
     may appear in other queries' results, matching x49's convention.
     """
     import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-    from pyspark.sql.window import Window
 
     if query_ids is None:
         query_ids = list(range(8))
     ev = _vectors(df, vec_col, id_col)
-    q_rows = (
-        ev.where(F.col(id_col).isin(query_ids))
-        .select(id_col, F.expr(normalize_expr("v", DIM)).alias("qv"))
-        .orderBy(id_col)
-        .collect()
-    )
-    # spread: normalize + per-batch matmul on a narrow scan ran one-task
-    corpus = spread(ev).select(
-        id_col, F.expr(normalize_expr("v", DIM)).alias("nv")
-    )
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("vec_id", LongType()),
-            StructField("score", DoubleType()),
-        ]
-    )
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame([], out_schema)
-    sc = corpus.sparkSession.sparkContext
-    import numpy as np
 
-    q_ids_b = sc.broadcast(np.array([r[0] for r in q_rows], dtype=np.int64))
-    q_mat_b = sc.broadcast(
-        np.array([r["qv"] for r in q_rows], dtype=np.float64)
-    )
-
-    def local_topk(batches):
+    def local_topk(ids, scores, q_ids):
         import numpy as np
 
-        qm, qi = q_mat_b.value, q_ids_b.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf["nv"]), dtype=np.float64)
-            scores = np.round(mat @ qm.T, 6)
-            outs = []
-            for j in range(len(qi)):
-                s = scores[:, j]
-                valid = ids != qi[j]  # never self-match
-                cand_ids, cand_s = ids[valid], s[valid]
-                # exact global order locally: (-score, id) lexicographic,
-                # so a tie on score keeps the LOWEST ids -- the global
-                # winner is always inside the local top-k
-                order = np.lexsort((cand_ids, -cand_s))[:k]
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qi[j],
-                            "vec_id": cand_ids[order],
-                            "score": cand_s[order],
-                        }
-                    )
+        outs = []
+        for j in range(len(q_ids)):
+            s = scores[:, j]
+            valid = ids != q_ids[j]  # never self-match
+            cand_ids, cand_s = ids[valid], s[valid]
+            # exact global order locally: (-score, id) lexicographic, so a
+            # tie on score keeps the LOWEST ids -- the global winner is
+            # always inside the local top-k
+            order = np.lexsort((cand_ids, -cand_s))[:k]
+            outs.append(
+                pd.DataFrame(
+                    {
+                        "query_id": q_ids[j],
+                        "vec_id": cand_ids[order],
+                        "score": cand_s[order],
+                    }
                 )
-            yield pd.concat(outs)
+            )
+        return pd.concat(outs)
 
-    cand = corpus.mapInPandas(local_topk, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id")
+    cand = _matrix_scan(
+        ev.where(F.col(id_col).isin(query_ids)),
+        ev,
+        id_col,
+        "query_id long, vec_id long, score double",
+        local_topk,
     )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "vec_id", "score", "rank")
-    )
+    return _rank_per_query(cand, k, "vec_id")
 
 
 @register(

@@ -271,18 +271,15 @@ class ParquetDirSource(Source):
         return load_parquet(self._session, path)
 
     def _register(self, stem: str) -> None:
-        """Register table ``stem``'s view on first use; re-list its files
-        (``refreshTable``, no job) when they changed since (an
-        ``upsert_parquet`` swaps a table's whole directory), so a read
-        returns what the files hold at call time and sees the same files
-        as the footer MIN/MAX probe."""
+        """Register table ``stem``'s view on first use, and load it again
+        whenever its files changed since (an ``upsert_parquet`` swaps a
+        table's whole directory), so a read returns what the files hold
+        at call time, columns included, and sees the same files as the
+        footer MIN/MAX probe."""
         now = table_fingerprint(self.tables[stem])
-        seen = self._fingerprints.get(stem)
-        if seen is None:
+        if self._fingerprints.get(stem) != now:
             self._load(self.tables[stem]).createOrReplaceTempView(stem)
-        elif seen != now:
-            self._session.catalog.refreshTable(stem)
-        self._fingerprints[stem] = now
+            self._fingerprints[stem] = now
 
     def register_views(self) -> None:
         """Publish every table of this catalog as a temp view of the

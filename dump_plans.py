@@ -263,6 +263,28 @@ def _placeholder_store_paths(name: str, plan: str) -> str:
     return plan
 
 
+#: Ids Spark hands out per session rather than per plan, so they move
+#: with whatever ran before: expression ids (``score#123``, ``id#4L``),
+#: exchange ``plan_id=`` and ``RDD[n]``.
+_SESSION_IDS = (
+    re.compile(r"(?<=[\w)`]#)\d+"),
+    re.compile(r"(?<=plan_id=)\d+"),
+    re.compile(r"(?<=RDD\[)\d+(?=\])"),
+)
+
+
+def renumber_ids(plan: str) -> str:
+    """``plan`` with each kind of session id renumbered 0, 1, ... in order
+    of first appearance, so a plan that did not change prints the same
+    text whatever ran before it in the session."""
+    for pattern in _SESSION_IDS:
+        seen: dict[str, str] = {}
+        plan = pattern.sub(
+            lambda m: seen.setdefault(m.group(), str(len(seen))), plan
+        )
+    return plan
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -293,7 +315,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        plan = _placeholder_store_paths(name, plan)
+        plan = renumber_ids(_placeholder_store_paths(name, plan))
         out.append(f"## {name}\n\n{note}\n\n```\n{plan.rstrip()}\n```\n")
     with open(os.path.join(os.path.dirname(__file__), "PLANS.md"), "w") as f:
         f.write("\n".join(out))

@@ -196,8 +196,10 @@ class TestSimsearch:
             F.col("id").alias("vec_id"),
             F.array(F.lit(1.0), F.lit(0.0)).alias("embedding"),
         )
-        with pytest.raises(ValueError, match="allow_full_grid"):
+        with pytest.raises(ValueError, match="allow_full_grid") as err:
             embedding_near_dup_pairs(big, threshold=0.9)
+        # the named successors exist
+        assert "semantic_dedup" in str(err.value)
         # the cap itself stays allowed; the escape hatch skips the guard
         # (checked on a small corpus -- the guard is the only difference)
         small = big.limit(64)
@@ -227,6 +229,41 @@ class TestSimsearch:
             poisoned, threshold=0.9, allow_full_grid=True, n_blocks=2
         )
         assert "cosine" in out.columns  # plan built, nothing executed
+
+    def test_one_cell_semantic_dedup_flags_the_near_dup_pairs(
+        self, embeddings
+    ):
+        """With one cell, semantic_dedup's within-cell pairs are all pairs:
+        it flags exactly the higher ids of embedding_near_dup_pairs at the
+        same threshold (both run the one block-matmul kernel)."""
+        from conecta_spark.operators.simsearch import semantic_dedup
+
+        flagged = {
+            r.vec_id
+            for r in semantic_dedup(embeddings, k=1, threshold=0.35)
+            .where("is_dup = 1")
+            .collect()
+        }
+        pairs = embedding_near_dup_pairs(embeddings, threshold=0.35)
+        assert flagged and flagged == {r.vec_b for r in pairs.collect()}
+
+    def test_knn_topk_is_the_cosine_panel_for_its_query(self, embeddings):
+        """The single-query ranking and the per-query panel ranking over
+        the one expression scorer agree: same ids, scores and ranks."""
+        from conecta_spark.operators.simsearch import _exact_topk_panel
+
+        single = [
+            (r.vec_id, r.score, r.rank)
+            for r in knn_topk(embeddings, query_id=0, k=10).collect()
+        ]
+        panel = sorted(
+            (r.vec_id, r.score, r.rank)
+            for r in _exact_topk_panel(embeddings, "cosine")
+            .where("query_id = 0")
+            .collect()
+        )
+        assert len(single) == 10
+        assert sorted(single) == panel
 
     def test_ann_is_subset_of_bruteforce_space(self, embeddings):
         ann = ann_lsh_topk(embeddings, query_id=0, k=10).collect()

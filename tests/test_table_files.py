@@ -89,3 +89,34 @@ def test_one_listing_per_table(spark, tmp_path, layout):
     assert src.query("select * from t").count() == n
     _write(_part(layout, table, 0), [3, 7, 8, 9])
     assert src.query("select * from t").count() == n + 2
+
+
+def test_catalog_reloads_a_table_rewritten_with_a_new_column(spark, tmp_path):
+    """A rewrite that adds a column reaches the catalog's next query: the
+    view is loaded again, schema included, not only re-listed.  Later
+    rewrites and appends keep the row count current."""
+    table = tmp_path / "t.parquet"
+    table.mkdir()
+    pq.write_table(pa.table({"a": [1, 2, 3]}), str(table / "part-0.parquet"))
+    src = ParquetDirSource(spark, str(tmp_path))
+    assert src.query("select * from t").columns == ["a"]
+
+    pq.write_table(
+        pa.table({"a": [1, 2, 3, 4, 5], "b": [5, 4, 3, 2, 1]}),
+        str(table / "part-0.parquet"),
+    )
+    got = src.query("select * from t")
+    assert got.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, 5), (2, 4), (3, 3), (4, 2), (5, 1),
+    ]
+
+    pq.write_table(
+        pa.table({"a": [7, 8], "b": [0, 0]}), str(table / "part-0.parquet")
+    )
+    assert src.query("select * from t").count() == 2
+    pq.write_table(
+        pa.table({"a": [9, 10, 11], "b": [1, 1, 1]}),
+        str(table / "part-1.parquet"),
+    )
+    assert src.query("select * from t").count() == 5
