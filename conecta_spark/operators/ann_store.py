@@ -69,6 +69,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import store
+from .dedup import _require_disjoint_ids
 from .simsearch import (
     IVFIndex,
     _cell_search,
@@ -202,21 +203,13 @@ def append_ann_batch(
         id_col = m["id_col"]
         new_vecs = _double_vecs(new_df, m, id_col, "v")
         if validate_ids:
-            overlap = (
-                _assigned_relation(spark, store_path, m)
-                .select(id_col)
-                .join(
-                    F.broadcast(new_vecs.select(id_col).distinct()),
-                    id_col,
-                    "left_semi",
-                )
+            _require_disjoint_ids(
+                _assigned_relation(spark, store_path, m),
+                new_vecs,
+                id_col,
+                f"append_ann_batch: store at {store_path} and new_df",
+                ids="vector ids",
             )
-            if not overlap.isEmpty():
-                sample = [r[0] for r in overlap.limit(5).collect()]
-                raise ValueError(
-                    f"append_ann_batch: store at {store_path} and new_df "
-                    f"share vector ids (e.g. {sample}); ids must be disjoint"
-                )
         assign_cells(
             new_vecs, read_centroids(store_path, m), id_col
         ).write.mode("overwrite").parquet(os.path.join(batch_dir, "assigned"))

@@ -337,6 +337,50 @@ def _estimate_shingle_bytes(n_docs: int, total_hashes: int) -> int:
     return total_hashes * 8 + n_docs * 48
 
 
+def _corpus_stats(hashed: DataFrame) -> tuple[int, int]:
+    """``(n_docs, total_hashes)`` of an ``(id, sh)`` shingle relation in
+    one aggregate: the DF filter's denominator and the verify-broadcast
+    gate's input.  Run over a just-persisted relation it also fills the
+    cache (the hashing would run for the first consumer anyway)."""
+    r = hashed.agg(
+        F.count(F.lit(1)).alias("n"), F.sum(F.size("sh")).alias("tot")
+    ).first()
+    return int(r["n"]), int(r["tot"] or 0)
+
+
+def _resolve_broadcast_verify(broadcast_verify: bool | str, stats) -> bool:
+    """``broadcast_verify`` with ``"auto"`` resolved: broadcast the
+    shingle relation the verify join builds from while its estimated
+    footprint fits :data:`VERIFY_BROADCAST_MAX_BYTES`.  ``stats()``
+    returns that relation's ``(n_docs, total_hashes)`` and is called only
+    for ``"auto"``."""
+    if broadcast_verify != "auto":
+        return broadcast_verify
+    return _estimate_shingle_bytes(*stats()) <= VERIFY_BROADCAST_MAX_BYTES
+
+
+def _require_disjoint_ids(
+    existing: DataFrame,
+    new: DataFrame,
+    id_col: str,
+    who: str,
+    ids: str = "doc ids",
+    why: str = "",
+) -> None:
+    """Raise when ``new`` shares an ``id_col`` value with ``existing``:
+    one broadcast semi-join of the existing ids against the (small) new
+    batch's distinct ids, shared by the incremental miners and the ANN
+    store's append."""
+    overlap = existing.select(id_col).join(
+        F.broadcast(new.select(id_col).distinct()), id_col, "left_semi"
+    )
+    if not overlap.isEmpty():
+        sample = [r[0] for r in overlap.limit(5).collect()]
+        raise ValueError(
+            f"{who} share {ids} (e.g. {sample}); ids must be disjoint{why}"
+        )
+
+
 def _verify_exact_jaccard(
     cands: DataFrame,
     sh: DataFrame,
@@ -444,17 +488,9 @@ def ngram_jaccard_pairs(
             "n_sh", F.size("sh")
         )
     )
-    if broadcast_verify == "auto":
-        # One aggregate over the about-to-be-cached relation: materializes
-        # the persist (the hashing would run for the first consumer anyway)
-        # and yields the size estimate for the broadcast gate.
-        stats = sh.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("n_sh").alias("tot")
-        ).first()
-        broadcast_verify = (
-            _estimate_shingle_bytes(stats["n"], stats["tot"] or 0)
-            <= VERIFY_BROADCAST_MAX_BYTES
-        )
+    broadcast_verify = _resolve_broadcast_verify(
+        broadcast_verify, lambda: _corpus_stats(sh)
+    )
     # Size-ratio prefilter (sound: J <= min/max since |a^b| <= min and
     # |aUb| >= max): prune disparate-size pairs on the SKINNY relation,
     # before any shingle array is attached.  Appending the ratio to the fat
@@ -584,7 +620,7 @@ def minhash_lsh_pairs(
         # doc_b) rows, so the dedup aggregate reuses that one exchange
         # instead of adding its own (2 Exchange -> 1 on the skinny pairs)
     )
-    return _verify_candidates(df, cands, hashed, threshold, id_col, broadcast_verify)
+    return _verify_candidates(cands, hashed, threshold, id_col, broadcast_verify)
 
 
 def band_signatures(
@@ -599,10 +635,10 @@ def band_signatures(
     strings -- concat_ws on BIGINTs casts exactly like the lambda did --
     so band keys, candidates, and the oracle twin are unchanged.
     Measured steady-state for the full x07 operator: 3.7 s -> 2.7 s at
-    sf0.1.  Shared by the inline miner (:func:`_mine_banded`) and the
-    persisted signature store (minhash_store) -- the store's batch-side
-    banding must be byte-identical to the corpus-build-time banding or
-    candidates silently vanish."""
+    sf0.1.  Reached through :func:`_sign_and_band` by the inline miners
+    and the persisted signature store (minhash_store) alike -- the
+    store's batch-side banding must be byte-identical to the
+    corpus-build-time banding or candidates silently vanish."""
     if bands < 1:
         raise ValueError(f"bands must be >= 1, got {bands}")
     if num_perms % bands:
@@ -648,6 +684,16 @@ def _shuffle_disk_budget(spark) -> int:
     return shutil.disk_usage(local).free // 2
 
 
+def _bucket_widths(banded: DataFrame, name: str = "w") -> DataFrame:
+    """``(band_idx, band_key, <name>)``: the member count of every LSH
+    band bucket -- the width histogram's input behind
+    :func:`auto_band_width`, the width cap and
+    :func:`minhash_candidate_probe`."""
+    return banded.groupBy("band_idx", "band_key").agg(
+        F.count(F.lit(1)).alias(name)
+    )
+
+
 def auto_band_width(
     banded: DataFrame,
     disk_budget_bytes: int | None = None,
@@ -683,17 +729,12 @@ def auto_band_width(
     what the anti-join drops."""
     if disk_budget_bytes is None:
         disk_budget_bytes = _shuffle_disk_budget(banded.sparkSession)
-    widths = banded.groupBy("band_idx", "band_key").agg(
-        F.count(F.lit(1)).alias("w")
-    )
+    widths = _bucket_widths(banded)
     if new_banded is None:
         vol = F.expr("w * (w - 1) DIV 2")
     else:
-        new_widths = new_banded.groupBy("band_idx", "band_key").agg(
-            F.count(F.lit(1)).alias("wn")
-        )
         widths = widths.join(
-            new_widths, ["band_idx", "band_key"], "left"
+            _bucket_widths(new_banded, "wn"), ["band_idx", "band_key"], "left"
         ).withColumn("wn", F.coalesce(F.col("wn"), F.lit(0)))
         vol = F.expr("wn * (w - wn) + wn * (wn - 1) DIV 2")
     hist = (
@@ -726,29 +767,40 @@ def auto_band_width(
     return None  # uncapped volume fits: keep default semantics
 
 
-def _drop_wide_buckets(
-    banded_all: DataFrame, max_band_width: int, *others: DataFrame
+def _cap_band_width(
+    banded_all: DataFrame,
+    max_band_width: int | str | None,
+    disk_budget_bytes: int | None,
+    banded_new: DataFrame | None = None,
 ):
-    """Width-cap skew guard shared by the standing and incremental
-    miners: aggregate the over-cap (band_idx, band_key) set once
-    (persisted -- every consumer's broadcast exchange would otherwise
-    re-run the width aggregation over the banded relation), then
-    anti-join it out of ``banded_all`` and each relation in ``others``
-    (the incremental miners cap their new-side relation against the SAME
-    key set, so both sides of the candidate join see one consistent
-    bucket universe).  Returns the filtered relation, or a list when
-    ``others`` are passed."""
+    """The ``max_band_width`` skew guard shared by the standing and
+    incremental miners: resolve ``"auto"`` (:func:`auto_band_width`,
+    priced on the batch-driven candidate shape when ``banded_new`` is
+    given), then drop every bucket wider than the cap from ``banded_all``
+    and from ``banded_new`` -- both sides of the candidate join see one
+    bucket universe.  The over-cap key set (a handful of hash-collapse
+    artifacts) is persisted, since each consumer's broadcast exchange
+    would otherwise re-run the width aggregation, and broadcast into the
+    anti-joins.  Returns ``(banded_all, banded_new)``; ``None`` leaves
+    both as they are."""
+    if max_band_width == "auto":
+        max_band_width = auto_band_width(
+            banded_all, disk_budget_bytes, new_banded=banded_new
+        )
+    if max_band_width is None:
+        return banded_all, banded_new
     wide = MINING.hold(
-        banded_all.groupBy("band_idx", "band_key")
-        .agg(F.count(F.lit(1)).alias("n"))
+        _bucket_widths(banded_all, "n")
         .where(F.col("n") > max_band_width)
         .select("band_idx", "band_key")
     )
-    out = [
-        rel.join(F.broadcast(wide), ["band_idx", "band_key"], "left_anti")
-        for rel in (banded_all, *others)
-    ]
-    return out[0] if not others else out
+
+    def drop(rel):
+        return rel.join(
+            F.broadcast(wide), ["band_idx", "band_key"], "left_anti"
+        )
+
+    return drop(banded_all), None if banded_new is None else drop(banded_new)
 
 
 def _new_driven_pairs(
@@ -758,16 +810,20 @@ def _new_driven_pairs(
     threshold: float,
     id_col: str,
     broadcast_verify: bool,
+    max_band_width: int | str | None,
+    disk_budget_bytes: int | None,
 ) -> DataFrame:
-    """Candidate generation + exact verification shared by the two
-    incremental miners (:func:`incremental_minhash_pairs` and
+    """Width cap, candidate generation and exact verification shared by
+    the two incremental miners (:func:`incremental_minhash_pairs` and
     minhash_store's ``incremental_pairs_stored``): the band join is
     DRIVEN BY THE NEW SIDE, so corpus x corpus candidates -- the
     quadratic bulk -- are never generated; new x new pairs arrive once
     per direction and are normalized with least/greatest + distinct;
     verification re-joins the raw shingle arrays (``hashed_all`` must
-    cover BOTH sides' ids).  One body so a verify/filter fix lands once
-    for both miners."""
+    cover BOTH sides' ids)."""
+    banded_all, banded_new = _cap_band_width(
+        banded_all, max_band_width, disk_budget_bytes, banded_new
+    )
     a, b = banded_new.alias("a"), banded_all.alias("b")
     cands = (
         a.join(
@@ -788,12 +844,11 @@ def _new_driven_pairs(
         # minhash_lsh_pairs: one exchange carries the raw pairs once)
     )
     return _verify_candidates(
-        hashed_all, cands, hashed_all, threshold, id_col, broadcast_verify
+        cands, hashed_all, threshold, id_col, broadcast_verify
     )
 
 
 def _verify_candidates(
-    df: DataFrame,
     cands: DataFrame,
     hashed: DataFrame,
     threshold: float,
@@ -822,12 +877,68 @@ def _verify_candidates(
     # duplicates ride the single exchange as skinny 16-byte rows).
     cands = MINING.hold(
         cands.repartition(
-            df.sparkSession.sparkContext.defaultParallelism, "doc_a"
+            cands.sparkSession.sparkContext.defaultParallelism, "doc_a"
         ).dropDuplicates(["doc_a", "doc_b"])
     )
     cands.count()
     sh = hashed.withColumn("n_sh", F.size("sh"))
     return _verify_exact_jaccard(cands, sh, threshold, id_col, broadcast_verify)
+
+
+def _common_shingles(
+    hashed: DataFrame, id_col: str, max_df: float, n_docs: int
+) -> DataFrame:
+    """The document-frequency filter's boilerplate set, lazily: every
+    shingle hash in more than ``max_df * n_docs`` rows of ``hashed``.  A
+    corpus-wide aggregate that scales as the vocabulary, not the corpus;
+    the inline miners use it as is, the signature store freezes it to
+    parquet."""
+    tok = hashed.select(F.col(id_col), F.explode("sh").alias("h"))
+    return (
+        tok.groupBy("h")
+        .agg(F.count(F.lit(1)).alias("c"))
+        .where(F.col("c") > F.lit(max_df) * F.lit(n_docs))
+        .select("h")
+    )
+
+
+def _sign_and_band(
+    hashed: DataFrame,
+    common: DataFrame,
+    num_perms: int,
+    bands: int,
+    id_col: str,
+) -> DataFrame:
+    """``(id, band_idx, band_key)`` of a shingle relation signed against
+    the boilerplate set ``common``: one signing path for the inline
+    miners, the store build, its batch side and its refreeze, so a
+    batch bands byte-identically to the corpus it is mined against.
+
+    The boilerplate set is subtracted per row with array_except against
+    the broadcast 1-row array of common shingles, instead of exploding
+    to (doc, hash) rows, anti-joining, and re-grouping: that path
+    shuffles the whole corpus's hashes twice; this one shuffles only the
+    common set.  MinHash takes a minimum over the array, so element
+    order -- the only thing the two forms differ on -- cannot affect the
+    signature."""
+    common_arr = common.agg(F.collect_list("h").alias("common_hs"))
+    filtered = (
+        hashed.crossJoin(F.broadcast(common_arr))
+        .select(
+            F.col(id_col),
+            F.array_except("sh", "common_hs").alias("shf"),
+        )
+        # exploded-path parity: docs whose shingles are all boilerplate (or
+        # null text) vanish there via the group-by; drop them here too, so
+        # they never band (size(null) = -1 also filters null-text rows).
+        .where(F.size("shf") > 0)
+    )
+    return band_signatures(
+        minhash_signatures(filtered, num_perms, id_col),
+        num_perms,
+        bands,
+        id_col,
+    )
 
 
 def _mine_banded(
@@ -841,15 +952,15 @@ def _mine_banded(
     broadcast_verify: bool | str,
     max_band_width: int | str | None,
     mine_disk_budget_bytes: int | None = None,
-    auto_price_new_ids: DataFrame | None = None,
 ):
     """Front half of the LSH mining pipeline, shared by
-    :func:`minhash_lsh_pairs` (self-join candidates) and
-    :func:`incremental_minhash_pairs` (new-batch-driven candidates):
-    hashed shingles (persisted), document-frequency filter, MinHash
-    signatures, banding (persisted, optionally width-capped).  Returns
-    ``(hashed, banded, broadcast_verify_resolved)``; both are held in
-    :data:`MINING`."""
+    :func:`minhash_lsh_pairs` (self-join candidates),
+    :func:`incremental_minhash_pairs` (new-batch-driven candidates, which
+    caps its two sides itself and passes ``max_band_width=None``) and
+    :func:`minhash_candidate_probe`: hashed shingles (persisted),
+    document-frequency filter, MinHash signatures, banding (persisted,
+    optionally width-capped).  Returns ``(hashed, banded,
+    broadcast_verify_resolved)``; both are held in :data:`MINING`."""
     # The hashed-shingle relation feeds three consumers (DF stats, filtered
     # signatures, exact verification); persist it so the shingle hashing
     # runs once, not once per consumer.  MEMORY_AND_DISK: spills instead of
@@ -860,44 +971,11 @@ def _mine_banded(
     # corpus count the DF filter needs (the planner-style metadata probe, cf.
     # reference O9 -- previously a separate full pass over ``df``) and (b)
     # the size estimate gating the verification broadcast.
-    stats = hashed.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.size("sh")).alias("tot"),
-    ).first()
-    n_docs = stats["n"]
-    if broadcast_verify == "auto":
-        broadcast_verify = (
-            _estimate_shingle_bytes(n_docs, stats["tot"] or 0)
-            <= VERIFY_BROADCAST_MAX_BYTES
-        )
-    tok = hashed.select(F.col(id_col), F.explode("sh").alias("h"))
-    common = (
-        tok.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .where(F.col("c") > F.lit(max_df) * F.lit(n_docs))
-        .select("h")
+    n_docs, tot = _corpus_stats(hashed)
+    broadcast_verify = _resolve_broadcast_verify(
+        broadcast_verify, lambda: (n_docs, tot)
     )
-    # Subtract the boilerplate set per row with array_except against the
-    # broadcast 1-row array of common shingles, instead of exploding to
-    # (doc, hash) rows, anti-joining, and re-grouping: that path shuffles
-    # the whole corpus's hashes twice; this one shuffles only the common
-    # set (vocabulary-scale: shingles in >max_df of docs).  MinHash takes a
-    # minimum over the array, so element order -- the only thing the two
-    # forms differ on -- cannot affect the signature.
-    common_arr = common.agg(F.collect_list("h").alias("common_hs"))
-    filtered = (
-        hashed.crossJoin(F.broadcast(common_arr))
-        .select(
-            F.col(id_col),
-            F.array_except("sh", "common_hs").alias("shf"),
-        )
-        # exploded-path parity: docs whose shingles are all boilerplate (or
-        # null text) vanish there via the group-by; drop them here too, so
-        # they never band (size(null) = -1 also filters null-text rows).
-        .where(F.size("shf") > 0)
-    )
-    sigs = minhash_signatures(filtered, num_perms, id_col)
-    banded = band_signatures(sigs, num_perms, bands, id_col)
+    common = _common_shingles(hashed, id_col, max_df, n_docs)
     # Repartition by the band key so pair generation runs as wide as the
     # cluster instead of on AQE's byte-coalesced partitioning, then persist:
     # the banded relation is skinny (id, band_idx, 32-char key = KBs per
@@ -907,32 +985,14 @@ def _mine_banded(
     # does NOT deduplicate them under AQE because each side plans its
     # exchange independently before runtime reuse can kick in; measured
     # 15 s vs 3 s at sf0.1 for the full operator.
-    banded = MINING.hold(banded.repartition(
-        df.sparkSession.sparkContext.defaultParallelism,
-        "band_idx",
-        "band_key",
-    ))
-    if max_band_width == "auto":
-        # incremental callers hand their new-id set down so the probe
-        # prices THEIR batch-driven candidate shape, not the self-join's
-        # (see auto_band_width on why that matters at 100 TB)
-        new_banded = (
-            banded.join(
-                F.broadcast(auto_price_new_ids),
-                F.col(id_col) == F.col("_nid"),
-                "left_semi",
-            )
-            if auto_price_new_ids is not None
-            else None
+    banded = MINING.hold(
+        _sign_and_band(hashed, common, num_perms, bands, id_col).repartition(
+            df.sparkSession.sparkContext.defaultParallelism,
+            "band_idx",
+            "band_key",
         )
-        max_band_width = auto_band_width(
-            banded, mine_disk_budget_bytes, new_banded=new_banded
-        )
-    if max_band_width is not None:
-        # Skew guard (see docstring): the over-cap key set is tiny (a
-        # handful of hash-collapse artifacts), so the anti-join
-        # broadcasts and pair generation never sees the mega-buckets.
-        banded = _drop_wide_buckets(banded, max_band_width)
+    )
+    banded, _ = _cap_band_width(banded, max_band_width, mine_disk_budget_bytes)
     return hashed, banded, broadcast_verify
 
 
@@ -984,34 +1044,29 @@ def incremental_minhash_pairs(
     disjointness upstream (e.g. ingest-time id ranges) can pass False.
     """
     if validate_ids:
-        overlap = corpus_df.select(id_col).join(
-            F.broadcast(new_df.select(id_col).distinct()),
+        _require_disjoint_ids(
+            corpus_df,
+            new_df,
             id_col,
-            "left_semi",
+            "incremental_minhash_pairs: corpus_df and new_df",
+            why=" across the two inputs",
         )
-        if not overlap.isEmpty():
-            sample = [r[0] for r in overlap.limit(5).collect()]
-            raise ValueError(
-                "incremental_minhash_pairs: corpus_df and new_df share "
-                f"doc ids (e.g. {sample}); ids must be disjoint across "
-                "the two inputs"
-            )
     union = corpus_df.select(id_col, text_col).unionByName(
         new_df.select(id_col, text_col)
     )
-    new_ids = new_df.select(F.col(id_col).alias("_nid")).distinct()
     hashed, banded, broadcast_verify = _mine_banded(
         union, k, num_perms, bands, text_col, id_col, max_df,
-        broadcast_verify, max_band_width, mine_disk_budget_bytes,
-        auto_price_new_ids=new_ids,
+        broadcast_verify, None,
     )
+    new_ids = new_df.select(F.col(id_col).alias("_nid")).distinct()
     banded_new = banded.join(
         F.broadcast(new_ids),
         F.col(id_col) == F.col("_nid"),
         "left_semi",
     )
     return _new_driven_pairs(
-        banded_new, banded, hashed, threshold, id_col, broadcast_verify
+        banded_new, banded, hashed, threshold, id_col, broadcast_verify,
+        max_band_width, mine_disk_budget_bytes,
     )
 
 
@@ -1531,9 +1586,7 @@ def minhash_candidate_probe(
     _, banded, _ = _mine_banded(
         df, k, num_perms, bands, text_col, id_col, max_df, False, None
     )
-    w = banded.groupBy("band_idx", "band_key").agg(
-        F.count(F.lit(1)).alias("w")
-    )
+    w = _bucket_widths(banded)
     aggs = [
         F.count(F.lit(1)).cast("long").alias("n_buckets"),
         F.max("w").cast("long").alias("max_width"),
@@ -2090,17 +2143,12 @@ def x61_scrub(spark, sf_dir) -> DataFrame:
     return span_scrub(t(spark, sf_dir, "documents"))
 
 
-#: source_overlap's distinct span relation (``persist_spans=True``).
-_X64 = PersistSlot()
-
-
 def source_overlap(
     df: DataFrame,
     span_words: int = 8,
     text_col: str = "text",
     id_col: str = "doc_id",
     source_col: str = "source",
-    persist_spans: bool = False,
 ) -> DataFrame:
     """Pairwise content overlap BETWEEN sources: Jaccard similarity of
     each source pair's distinct span-hash sets.  The feed-level
@@ -2114,18 +2162,12 @@ def source_overlap(
     volume, not document count -- and the pair join is keyed by the
     uniform hash.  Output is O(|sources|^2) rows, tiny by construction.
 
-    ``persist_spans``: the distinct span relation feeds THREE consumers
-    (sizes, both self-join sides), so un-persisted the span hashing and
-    its distinct shuffle run three times.  The default is OFF because
-    the A/B at sf0.1 measured the persist as a net LOSS (1.5-1.9 s vs
-    0.8-1.4 s over four cleared-cache runs): the skinny relation
-    re-derives cheaply from a fast scan, and the cache write +
-    InMemoryTableScan read cost more than the two extra passes -- the
-    r7 exchange-reuse audit assumed the opposite and shipped the persist
-    unmeasured.  Turn it ON when the input is an expensive scan (wide
-    source table, slow storage, an upstream pipeline), where re-running
-    the text pass dominates: the right setting depends on scan cost, not
-    corpus size, which is why it is a caller knob and not a heuristic.
+    The distinct span relation feeds three consumers (sizes, both
+    self-join sides) and is deliberately not persisted: the A/B at sf0.1
+    measured a persist as a net loss (1.5-1.9 s vs 0.8-1.4 s over four
+    cleared-cache runs) -- the skinny relation re-derives cheaply from a
+    fast scan, and the cache write + InMemoryTableScan read cost more
+    than the two extra passes.
     """
     spans = span_hashes(
         df.select(F.col(source_col).alias("__src"), F.col(text_col)),
@@ -2133,9 +2175,6 @@ def source_overlap(
         text_col,
         "__src",
     ).distinct()
-    if persist_spans:
-        _X64.evict()
-        spans = _X64.hold(spans)
     sizes = spans.groupBy("__src").agg(F.count(F.lit(1)).alias("n"))
     a = spans.select(F.col("__src").alias("source_a"), "h")
     b = spans.select(F.col("__src").alias("source_b"), "h")

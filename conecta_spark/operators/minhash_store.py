@@ -9,9 +9,7 @@ dwarfs the batch at a steady 100 TB corpus with a small daily crawl.
 This module persists that work once:
 
 * :func:`write_signature_store` -- one full mining front-half over the
-  corpus (shared code path with the inline miner: ``hashed_shingles``,
-  DF filter, ``minhash_signatures``, ``band_signatures``), written as
-  parquet relations plus a params manifest;
+  corpus, written as parquet relations plus a params manifest;
 * :func:`incremental_pairs_stored` -- signs ONLY the new batch (against
   the store's frozen DF table), band-joins it against the stored banded
   relation, and exact-verifies with shingle arrays read from the store;
@@ -22,6 +20,13 @@ This module persists that work once:
   daily appends accumulate;
 * :func:`refreeze_common` -- recomputes the frozen DF table from the
   stored shingles when appends have drifted it.
+
+Every mining stage is the inline miners' own (:mod:`.dedup`): shingle
+hashing, corpus stats, the DF filter, signing and banding, the
+verify-broadcast gate, the ``max_band_width`` cap and the
+new-side-driven candidate join and verify.  The store changes only
+where the DF table and the corpus relations come from: frozen at build
+or refreeze and read back from parquet.
 
 Frozen-DF semantics -- the one deliberate divergence from x73: the
 document-frequency statistics (boilerplate set and the ``max_df``
@@ -67,18 +72,18 @@ from pyspark.sql import functions as F
 from . import store
 from .dedup import (
     MINING,
-    VERIFY_BROADCAST_MAX_BYTES,
-    _drop_wide_buckets,
-    _estimate_shingle_bytes,
+    _common_shingles,
+    _corpus_stats,
     _new_driven_pairs,
-    auto_band_width,
-    band_signatures,
+    _require_disjoint_ids,
+    _resolve_broadcast_verify,
+    _sign_and_band,
     hashed_shingles,
-    minhash_signatures,
 )
 from .store import MANIFEST, footer_row_count, stream_batch_id  # noqa: F401
 
 from ..queries import register, t
+from ..sources.parquet import table_files
 
 STORE_VERSION = 1
 
@@ -110,22 +115,12 @@ def _link_fold(dst: str, src_dirs: list) -> None:
     shutil.rmtree(dst, ignore_errors=True)
     os.makedirs(dst)
     for i, src in enumerate(src_dirs):
-        for f in sorted(os.listdir(src)):
-            if not f.endswith(".parquet"):
-                continue
-            target = os.path.join(dst, f"f{i:04d}-{f}")
+        for f in table_files(src).files:
+            target = os.path.join(dst, f"f{i:04d}-{os.path.basename(f.path)}")
             try:
-                os.link(os.path.join(src, f), target)
+                os.link(f.path, target)
             except OSError:
-                shutil.copy2(os.path.join(src, f), target)
-
-
-def _shingle_stats(hashed: DataFrame) -> tuple[int, int]:
-    """(rows, total shingle hashes) of a shingle relation."""
-    r = hashed.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(F.size("sh")).alias("tot")
-    ).first()
-    return int(r["n"]), int(r["tot"] or 0)
+                shutil.copy2(f.path, target)
 
 
 def _write_shingles(hashed: DataFrame, id_col: str, dst: str) -> None:
@@ -145,12 +140,12 @@ def _write_banded(banded: DataFrame, dst: str) -> None:
 def _freeze_common(
     hashed: DataFrame, id_col: str, max_df: float, n_docs: int, dst: str
 ) -> DataFrame:
-    """Write the frozen DF table -- every shingle in more than
-    ``max_df * n_docs`` docs -- to ``dst`` and return it re-read."""
-    tok = hashed.select(F.col(id_col), F.explode("sh").alias("h"))
-    tok.groupBy("h").agg(F.count(F.lit(1)).alias("c")).where(
-        F.col("c") > F.lit(max_df) * F.lit(n_docs)
-    ).select("h").coalesce(1).write.mode("overwrite").parquet(dst)
+    """Write the frozen DF table (the inline miners' boilerplate set,
+    :func:`..operators.dedup._common_shingles`) to ``dst`` and return it
+    re-read."""
+    _common_shingles(hashed, id_col, max_df, n_docs).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(dst)
     return hashed.sparkSession.read.parquet(dst)
 
 
@@ -181,7 +176,7 @@ def write_signature_store(
         # which also guarantees the store is self-consistent even if df is
         # nondeterministic upstream
         hashed = spark.read.parquet(out["shingles"])
-        n_docs, tot_hashes = _shingle_stats(hashed)
+        n_docs, tot_hashes = _corpus_stats(hashed)
         common = _freeze_common(hashed, id_col, max_df, n_docs, out["common"])
         _write_banded(
             _sign_and_band(hashed, common, num_perms, bands, id_col),
@@ -200,33 +195,6 @@ def write_signature_store(
         }
 
     return store.build(_LAYOUT, path, write, manifest_extra)
-
-
-def _sign_and_band(
-    hashed: DataFrame,
-    common: DataFrame,
-    num_perms: int,
-    bands: int,
-    id_col: str,
-) -> DataFrame:
-    """Signature + banding back-half shared by store build and batch-side
-    signing: subtract the boilerplate set (broadcast 1-row array, the
-    same zero-extra-shuffle form as the inline miner), drop
-    boilerplate-only docs, MinHash, band."""
-    common_arr = common.agg(F.collect_list("h").alias("common_hs"))
-    filtered = (
-        hashed.crossJoin(F.broadcast(common_arr))
-        .select(
-            F.col(id_col), F.array_except("sh", "common_hs").alias("shf")
-        )
-        .where(F.size("shf") > 0)
-    )
-    return band_signatures(
-        minhash_signatures(filtered, num_perms, id_col),
-        num_perms,
-        bands,
-        id_col,
-    )
 
 
 def incremental_pairs_stored(
@@ -262,55 +230,41 @@ def incremental_pairs_stored(
     common = spark.read.parquet(store.side_path(_LAYOUT, store_path, m))
 
     if validate_ids:
-        overlap = stored_sh.select(id_col).join(
-            F.broadcast(new_df.select(id_col).distinct()),
+        _require_disjoint_ids(
+            stored_sh,
+            new_df,
             id_col,
-            "left_semi",
+            f"incremental_pairs_stored: store at {store_path} and new_df",
+            why=" (append_batch after mining keeps them so)",
         )
-        if not overlap.isEmpty():
-            sample = [r[0] for r in overlap.limit(5).collect()]
-            raise ValueError(
-                f"incremental_pairs_stored: store at {store_path} and "
-                f"new_df share doc ids (e.g. {sample}); ids must be "
-                "disjoint (append_batch after mining keeps them so)"
-            )
 
     MINING.evict()
     hashed_new = MINING.hold(
         hashed_shingles(new_df, m["k"], m["text_col"], id_col)
     )
-    n_new, tot_new = _shingle_stats(hashed_new)
-    if broadcast_verify == "auto":
-        # the gate must size the WHOLE shingle relation the verify join
-        # builds from: base corpus + every appended batch + this batch
-        # (append_batch keeps tot_hashes current for exactly this)
-        broadcast_verify = (
-            _estimate_shingle_bytes(
-                m["n_docs"] + m.get("n_appended", 0) + n_new,
-                m["tot_hashes"] + tot_new,
-            )
-            <= VERIFY_BROADCAST_MAX_BYTES
-        )
-
+    n_new, tot_new = _corpus_stats(hashed_new)
+    # the gate must size the WHOLE shingle relation the verify join
+    # builds from: base corpus + every appended batch + this batch
+    # (append_batch keeps tot_hashes current for exactly this)
+    broadcast_verify = _resolve_broadcast_verify(
+        broadcast_verify,
+        lambda: (
+            m["n_docs"] + m.get("n_appended", 0) + n_new,
+            m["tot_hashes"] + tot_new,
+        ),
+    )
     banded_new = MINING.hold(_sign_and_band(
         hashed_new, common, m["num_perms"], m["bands"], id_col
     ))
-    banded_all = stored_banded.unionByName(banded_new)
-    if max_band_width == "auto":
-        # price the batch-driven candidate shape (wn*(w-wn) + wn-choose-2
-        # per bucket), not the self-join's w-choose-2 -- a huge store
-        # with a small batch would otherwise spuriously raise or over-cap
-        max_band_width = auto_band_width(
-            banded_all, mine_disk_budget_bytes, new_banded=banded_new
-        )
-    if max_band_width is not None:
-        banded_all, banded_new = _drop_wide_buckets(
-            banded_all, max_band_width, banded_new
-        )
-
-    sh_all = stored_sh.unionByName(hashed_new)
     return _new_driven_pairs(
-        banded_new, banded_all, sh_all, threshold, id_col, broadcast_verify
+        banded_new,
+        stored_banded.unionByName(banded_new),
+        stored_sh.unionByName(hashed_new),
+        threshold,
+        id_col,
+        broadcast_verify,
+        max_band_width,
+        mine_disk_budget_bytes,
     )
 
 
@@ -352,7 +306,7 @@ def append_batch(
             hashed_new.unpersist()
 
     def book(batch_dir: str) -> dict:
-        n, tot = _shingle_stats(
+        n, tot = _corpus_stats(
             spark.read.parquet(os.path.join(batch_dir, "shingles"))
         )
         return {"n_appended": n, "tot_hashes": tot}

@@ -196,12 +196,11 @@ SHOWCASE: list[tuple[str, str]] = [
         "Cross-source span overlap: pair counting is an equi-join on the "
         "span hash; only skinny (source, hash) rows shuffle.  The "
         "distinct span relation has THREE consumers and is deliberately "
-        "NOT persisted by default: the r8 A/B measured the persist as a "
-        "net loss at bench scale (1.5-1.9 s vs 0.8-1.4 s -- cache write "
-        "+ InMemoryTableScan read cost more than re-deriving the skinny "
+        "NOT persisted: the r8 A/B measured the persist as a net loss at "
+        "bench scale (1.5-1.9 s vs 0.8-1.4 s -- cache write + "
+        "InMemoryTableScan read cost more than re-deriving the skinny "
         "relation from a fast scan), overturning the r7 audit's "
-        "unmeasured assumption.  persist_spans=True remains for "
-        "expensive-scan inputs, where two extra text passes dominate.",
+        "unmeasured assumption, so each consumer re-derives it.",
     ),
     (
         "x69_gopher_repetition",

@@ -48,26 +48,45 @@ def batch(spark):
     )
 
 
-def test_store_matches_recompute(spark, corpus, batch, tmp_path):
+@pytest.mark.parametrize("max_band_width", [None, 2, "auto"])
+def test_store_matches_recompute(
+    spark, corpus, batch, tmp_path, max_band_width
+):
     """When no shingle crosses the DF threshold, the stored-incremental
     mine must equal the full-recompute incremental mine pair-for-pair --
-    the store changes WHERE signatures come from, not what they are."""
-    from conecta_spark.operators.dedup import incremental_minhash_pairs
+    the store changes WHERE signatures come from, not what they are --
+    uncapped and through the one width cap both miners share.  A second
+    clone of doc 0 (doc 103) widens doc 0's four band buckets to 3;
+    cap 2 drops them, and the "auto" budget (10 candidates: the
+    batch-driven volume is 4 pairs in doc 1's width-2 buckets plus 12 in
+    doc 0's width-3 ones) resolves to the same cap."""
+    from conecta_spark.operators.dedup import (
+        CANDIDATE_BYTES,
+        incremental_minhash_pairs,
+    )
     from conecta_spark.operators.minhash_store import (
         incremental_pairs_stored,
         write_signature_store,
     )
 
+    clone = "document number 0 about topic-0 with unique tail 0"
+    batch = batch.unionByName(_docs(spark, [(103, clone)]))
+    cap = dict(
+        max_band_width=max_band_width,
+        mine_disk_budget_bytes=10 * CANDIDATE_BYTES,
+    )
     path = str(tmp_path / "store")
     m = write_signature_store(corpus, path)
     assert m["n_docs"] == 30
     stored = _pairs(
-        incremental_pairs_stored(spark, path, batch, threshold=0.3)
+        incremental_pairs_stored(spark, path, batch, threshold=0.3, **cap)
     )
     recompute = _pairs(
-        incremental_minhash_pairs(corpus, batch, threshold=0.3)
+        incremental_minhash_pairs(corpus, batch, threshold=0.3, **cap)
     )
     assert stored == recompute and stored  # non-vacuous
+    # the width-3 buckets of docs 0/100/103 survive only uncapped
+    assert ((0, 100) in stored) == (max_band_width is None)
 
 
 def test_append_then_mine_next_batch(spark, corpus, batch, tmp_path):
